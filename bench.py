@@ -17,6 +17,7 @@ mode (internal)."""
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import re
@@ -70,13 +71,22 @@ def _cpu_pcts(before: list[int] | None, after: list[int] | None) -> dict[str, fl
     }
 
 
+def timed_noop(fn, spark, sf_dir: str) -> tuple[float, dict[str, float]]:
+    """Time one registry entry's noop-sink run after a gc.collect();
+    returns (wall seconds, steal%/idle% over exactly that window)."""
+    gc.collect()
+    c0 = _cpu_sample()
+    t0 = time.perf_counter()
+    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    dt = round(time.perf_counter() - t0, 3)
+    return dt, _cpu_pcts(c0, _cpu_sample())
+
+
 def run_one(name: str) -> None:
     """Child mode: time ONE entry in this fresh JVM (warm pass at
     sf0.01 for codegen/JIT, then best-of-3 at the bench SF) and print
     one JSON line the parent parses. Each run carries the /proc/stat
     steal%/idle% sampled across exactly its timed window."""
-    import gc
-
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "32g")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(f"bench-dedicated-{name}")
@@ -87,12 +97,8 @@ def run_one(name: str) -> None:
         fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
     runs, steal, idle = [], [], []
     for _ in range(3):
-        gc.collect()
-        c0 = _cpu_sample()
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        runs.append(round(time.perf_counter() - t0, 3))
-        pcts = _cpu_pcts(c0, _cpu_sample())
+        dt, pcts = timed_noop(fn, spark, sf_dir)
+        runs.append(dt)
         steal.append(pcts.get("steal_pct"))
         idle.append(pcts.get("idle_pct"))
     print(
@@ -174,8 +180,6 @@ def main() -> None:
     # JIT-recompile artifacts that land on whichever query is unlucky;
     # the min of two passes measures the engine, not the garbage collector
     timings: dict[str, float] = {}
-    import gc
-
     for _ in range(2):
         for name in BENCH_QUERIES:
             fn, _ = registry[name]

@@ -6188,7 +6188,10 @@ def q_pareto_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         _read(spark, sf_dir, "lineitem")
         .groupBy(F.col("l_suppkey").alias("s_suppkey"))
         .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
+            # 4 dp, like the other revenue sums: each term sits on the
+            # 1e-4 grid, so a 2-dp round can land exactly on a half
+            # and the engines' float summation order decides the tie
+            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias("revenue"),
             F.countDistinct("l_partkey").alias("n_parts"),
         )
     )
@@ -6202,7 +6205,7 @@ def q_pareto_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_PARETO_SUPPLIERS = """
 WITH sup AS (
   SELECT l_suppkey AS s_suppkey,
-         round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+         round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
          count(DISTINCT l_partkey) AS n_parts
   FROM lineitem GROUP BY 1
 )
@@ -9782,91 +9785,11 @@ def build_registry() -> dict[str, tuple[QueryFn, str | None]]:
     filtering, multimodal, text analysis), (3) TPC-H-ish analytics,
     (4) event-window analytics.
 
-    Driver-contract note: the driver's correctness gate grades a
-    50-entry PREFIX of this dict (observed rounds 1–4), so the final
-    dict is reordered by ROUND8_PREFIX. Rotation policy: each round's
-    prefix leads with the entries that have never held a driver
-    verdict, then those whose last verdict is oldest, then refills
-    with the previous round's greens — so consecutive CORRECTNESS
-    files jointly cover the whole inventory.
-
-    Verdict-age ledger as of round 8: CORRECTNESS_r07 came back 50/50
-    green, so every entry's latest verdict is r05, r06, or r07. The r8
-    window (ROUND8_PREFIX) = the 3 round-8 additions
-    (drift_vs_reference / media_near_dups / bpe_merge_chain — new
-    entries always enter the CURRENT round's window) + ALL 47 entries
-    whose latest verdict is r05, the only cohort predating the
-    hash-faithful gate rewrite (full list in ROUND8_PREFIX itself —
-    it IS the ledger this round, 3 + 47 = exactly 50). After r8,
-    r7∪r8 jointly cover the whole inventory with post-rewrite
-    verdicts; the oldest cohort for the r9 window is then the 49
-    entries holding r06 stamps — everything in neither ROUND7_PREFIX
-    nor ROUND8_PREFIX (151 total − 50 r07-stamped − 47 r08-stamped
-    − 3 r8-new − 2 r8-late): the filter family tail, anonymize/faker
-    suite, CDC/validation, the dedup/similarity/sampling/sketch/
-    corpus/multimodal groups graded in r6, events_session, and the r6
-    curation entries. ROUND9_PREFIX = ivfpq_ann_topk +
-    bpe_vocab_trained + containment_near_dups + novelty_scores +
-    vocab_growth (the five r9 additions — new entries always enter
-    the current window) + pq_ann_topk + repetition_signals +
-    hybrid_search_rrf + contrastive_triplets + embedding_outliers +
-    feature_hash_embed (the six r8-late additions — the r8 window was
-    already full with the 47 mandated rotations when they landed, so
-    they lead r9 as never-driver-verified entries) + 39 of those 49
-    r06 holders = exactly 50; the ten deferrals (five filter
-    predicates + q20_part_promotion + q21_waiting_suppliers + the
-    faker trio) spill to the r10 window.
-    CORRECTNESS_r09 came back 49/50: the five r9 additions, the
-    r8-late cohort except feature_hash_embed, and all 39 rotated r06
-    holders are green with r9 verdicts; feature_hash_embed ERRed in
-    the driver canonicalizer (array<double> output — fixed this round
-    by the string-serialization convention). ROUND10_PREFIX = the
-    twelve r10 additions (pq_index_query + novelty_incremental +
-    embedding_int8_quant + ann_incremental + media_incremental +
-    pq_residual_query + pq_rerank_query + bigram_nll + zipf_fit +
-    hll_set_ops + bigram_nll_oov + semantic_decontam — new entries
-    always enter the current window)
-    + feature_hash_embed (the only never-driver-verified entry,
-    leading the rotation to prove the fix) + the ten r06-verdict
-    deferrals + 27 of the 50 r07 holders; the 23 r07 deferrals to r11
-    are the ten long-staged stable shapes plus the thirteen tail
-    slots the r10 additions displaced.
-    CORRECTNESS_r10 came back 50/50 — the whole ledger now holds
-    post-rewrite verdicts (after r10: 50×r10, 49×r9, 50×r8, 23×r7).
-    ROUND11_PREFIX = the eight r11 additions (cdc_incremental /
-    scd2_incremental / bpe_encode / quota_incremental /
-    stateful_totals_incremental / dedup_exact_incremental /
-    ingest_health_incremental / shard_incremental — new entries always
-    enter the current window; with these, EVERY streaming module holds
-    a driver-graded face) + the 23 r07-aged holders (the oldest
-    verdicts — lead the rotation) + r08 holders up to 50, taken in
-    ROUND8_PREFIX order; each r11 addition displaced one r08 holder
-    from the tail into ROUND12_PREFIX_STAGED. After r11 the oldest
-    verdict anywhere is r8 (the displaced entries + the 23-entry
-    remainder listed in the r12 staging, which refills with the
-    oldest r09 holders).
-    CORRECTNESS_r11 came back 50/50. ROUND12_PREFIX = the nine r12
-    additions (attribution_incremental / drift_incremental /
-    histogram_incremental — the last ungraded streaming behavior
-    classes: stream-stream join state/eviction and the complete-mode
-    stateful aggregations — plus k_anonymity_lattice /
-    join_skew_probe, the privacy-audit and join-planning diagnostics,
-    basket_rules / fd_audit, the co-purchase-affinity and FD-discovery
-    profiling ops, and ab_test_summary / value_trend_ols, the
-    experiment/trend readouts built on cross-engine-exact integer
-    moment sums) + the r11 staging's 41 oldest holders (31 r08-aged,
-    then r09 holders in ROUND9_PREFIX order); the nine additions
-    displaced keep_num_of_records / agg_max_pk / validation_check /
-    datadiff_check / dedup_exact / anonymize_orders /
-    sanitize_null_bytes / filter_anyofstring / anonymize_supplier into
-    ROUND13_PREFIX_STAGED, which they lead (r9-aged), followed by the
-    remaining r09 holders and the oldest r10 holders. After r12 the
-    oldest verdict anywhere is r9.
-    The full local gate (`scripts/compare_oracle.py`) runs ALL
-    entries every round, and is order- AND dtype-faithful to the
-    driver hash (round-7 rewrite after q12 shipped red twice; round-10
-    addition: list-typed result columns now REJECTED outright — the
-    feature_hash_embed lesson).
+    Driver gate: the driver grades the first 50 entries in dict order,
+    and DRIVER_WINDOW names them. A rotation edits that list in place,
+    leading with the entries whose latest CORRECTNESS_r*.json verdict
+    is oldest. Rotation history lives in git and in those files.
+    `scripts/compare_oracle.py` grades every entry, every round.
     """
     reg: dict[str, tuple[QueryFn, str | None]] = {}
     # --- (1) reference-parity: filter operator family (F1–F7) ---
@@ -9939,7 +9862,7 @@ def build_registry() -> dict[str, tuple[QueryFn, str | None]]:
             "tfidf_top_terms": (q_tfidf_top_terms, sql_tfidf_top_terms()),
             "doc_quality": (q_doc_quality, sql_doc_quality()),
             "pii_redact": (q_pii_redact, sql_pii_redact()),
-            # --- (3) analytics (TPC-H-ish; driver-green r01+r02) ---
+            # --- (3) analytics (TPC-H-ish) ---
             "q1_pricing_summary": (q1_pricing_summary, SQL_Q1),
             "q3_top_revenue": (q3_top_revenue, SQL_Q3),
             "q5_nation_revenue": (q5_nation_revenue, SQL_Q5),
@@ -9975,7 +9898,7 @@ def build_registry() -> dict[str, tuple[QueryFn, str | None]]:
             "events_in_campaign_windows": (q_events_in_campaign_windows, SQL_CAMPAIGN_WINDOWS),
             "events_json_extract": (q_events_json_extract, SQL_EVENTS_JSON),
             "events_rollup_cascade": (q_events_rollup_cascade, SQL_ROLLUP_CASCADE),
-            # --- (5) round-5 additions (appended — prefix stays frozen) ---
+            # --- (2) LLM pipeline: dedup survivors / calibration / sweeps ---
             "dedup_survivors": (q_dedup_survivors, sql_dedup_survivors()),
             "dedup_incremental": (q_dedup_incremental, sql_dedup_incremental()),
             "lsh_calibration": (q_lsh_calibration, sql_lsh_calibration()),
@@ -9983,15 +9906,12 @@ def build_registry() -> dict[str, tuple[QueryFn, str | None]]:
             "ann_recall_eval": (q_ann_recall_eval, sql_ann_recall_eval()),
             "frame_sample": (q_frame_sample, sql_frame_sample()),
             "user_dwell_stats": (q_user_dwell_stats, SQL_USER_DWELL),
-            # --- (6) round-6 additions (past the 50-entry driver
-            # window — graded by the local gate this round, rotated
-            # into the driver window next round) ---
+            # --- (3) analytics: TPC-H q2/q11/q16, click attribution ---
             "q2_min_cost_supplier": (q2_min_cost_supplier, SQL_Q2),
             "q11_important_parts": (q11_important_parts, SQL_Q11),
             "q16_supplier_variety": (q16_supplier_variety, SQL_Q16),
             "click_attribution": (q_click_attribution, SQL_CLICK_ATTRIBUTION),
-            # --- (7) round-6 warehouse-ops additions (past the driver
-            # window — local gate this round, rotate into r07) ---
+            # --- warehouse ops: SCD2, as-of, profiling, gap-fill, layout ---
             "scd2_user_history": (q_scd2_user_history, SQL_SCD2_HISTORY),
             "scd2_point_in_time": (q_scd2_point_in_time, SQL_SCD2_SNAPSHOT),
             "purchases_with_state_asof": (q_purchases_with_state_asof, SQL_PURCHASES_STATE_ASOF),
@@ -10008,8 +9928,7 @@ def build_registry() -> dict[str, tuple[QueryFn, str | None]]:
             "zorder_layout": (q_zorder_layout, sql_zorder_layout()),
             "dup_span_fraction": (q_dup_span_fraction, sql_dup_span_fraction()),
             "repetition_signals": (q_repetition_signals, sql_repetition_signals()),
-            # --- (8) round-6 late additions (past the driver window —
-            # local gate this round, rotate into r07) ---
+            # --- analytics: pivots, grouping sets, sketches, graph rank ---
             "orders_pivot": (q_orders_pivot, SQL_ORDERS_PIVOT),
             "grouping_sets_revenue": (q_grouping_sets_revenue, SQL_GROUPING_SETS_REVENUE),
             "source_cap": (q_source_cap, SQL_SOURCE_CAP),
@@ -10024,8 +9943,7 @@ def build_registry() -> dict[str, tuple[QueryFn, str | None]]:
             "customer_revenue_standing": (q_customer_revenue_standing, SQL_CUSTOMER_REVENUE_STANDING),
             "rolling_distinct_users": (q_rolling_distinct_users, SQL_ROLLING_DISTINCT_USERS),
             "supplier_pagerank": (q_supplier_pagerank, sql_supplier_pagerank()),
-            # --- (9) round-7 additions (past the driver window — local
-            # gate this round, lead ROUND8_PREFIX next round) ---
+            # --- analytics + corpus selection: graph, DSIR, BPE, mixtures ---
             "triangle_count": (q_triangle_count, SQL_TRIANGLE_COUNT),
             "pareto_suppliers": (q_pareto_suppliers, SQL_PARETO_SUPPLIERS),
             "dsir_selection": (q_dsir_selection, sql_dsir_selection()),
@@ -10042,16 +9960,13 @@ def build_registry() -> dict[str, tuple[QueryFn, str | None]]:
             "bm25_search": (q_bm25_search, sql_bm25_search()),
             "leakage_safe_split": (q_leakage_safe_split, sql_leakage_safe_split()),
             "source_kl_divergence": (q_source_kl_divergence, sql_source_kl_divergence()),
-            # --- round-8 additions (enter the r8 window immediately) ---
+            # --- (2) LLM pipeline: drift, media near-dups, BPE merge chain ---
             "drift_vs_reference": (q_drift_vs_reference, sql_drift_vs_reference()),
             "media_near_dups": (q_media_near_dups, sql_media_near_dups()),
             "bpe_merge_chain": (q_bpe_merge_chain, sql_bpe_merge_chain()),
-            # --- round-8 LATE additions (the r8 window was already full
-            # with the 47 mandated r05-verdict rotations; these lead
-            # ROUND9_PREFIX as the only never-driver-verified entries —
-            # local-gate verified this round) ---
+            # --- (2) LLM pipeline: product-quantized ANN ---
             "pq_ann_topk": (q_pq_ann_topk, sql_pq_ann_topk()),
-            # --- round-9 additions (enter the r9 window immediately) ---
+            # --- (2) LLM pipeline: ANN, vocab, containment, novelty, retrieval ---
             "ivfpq_ann_topk": (q_ivfpq_ann_topk, sql_ivfpq_ann_topk()),
             "bpe_vocab_trained": (q_bpe_vocab_trained, sql_bpe_vocab_trained()),
             "containment_near_dups": (q_containment_near_dups, sql_containment_near_dups()),
@@ -10061,7 +9976,7 @@ def build_registry() -> dict[str, tuple[QueryFn, str | None]]:
             "contrastive_triplets": (q_contrastive_triplets, sql_contrastive_triplets()),
             "embedding_outliers": (q_embedding_outliers, sql_embedding_outliers()),
             "feature_hash_embed": (q_feature_hash_embed, sql_feature_hash_embed()),
-            # --- round-10 additions (enter the r10 window immediately) ---
+            # --- (2) LLM pipeline: persisted indexes, incremental, LM, sketches ---
             "pq_index_query": (q_pq_index_query, sql_pq_index_query()),
             "novelty_incremental": (q_novelty_incremental, sql_novelty_incremental()),
             "embedding_int8_quant": (q_embedding_int8_quant, SQL_EMBEDDING_INT8_QUANT),
@@ -10074,12 +9989,12 @@ def build_registry() -> dict[str, tuple[QueryFn, str | None]]:
             "hll_set_ops": (q_hll_set_ops, sql_hll_set_ops()),
             "bigram_nll_oov": (q_bigram_nll_oov, sql_bigram_nll_oov()),
             "semantic_decontam": (q_semantic_decontam, sql_semantic_decontam()),
-            # --- round 11: streaming CDC/SCD2 apply paths under the gate ---
+            # --- streaming: CDC/SCD2 apply paths ---
             "cdc_incremental": (q_cdc_incremental, sql_cdc_incremental()),
             "scd2_incremental": (q_scd2_incremental, SQL_SCD2_HISTORY),
-            # --- round 11: BPE train→apply corpus encode ---
+            # --- BPE train→apply corpus encode ---
             "bpe_encode": (q_bpe_encode, sql_bpe_encode()),
-            # --- round 11: custom stateful streaming operators under the gate ---
+            # --- streaming: custom stateful operators ---
             "quota_incremental": (q_quota_incremental, sql_quota_incremental()),
             "stateful_totals_incremental": (
                 q_stateful_totals_incremental,
@@ -10094,7 +10009,7 @@ def build_registry() -> dict[str, tuple[QueryFn, str | None]]:
                 sql_ingest_health_incremental(),
             ),
             "shard_incremental": (q_shard_incremental, sql_shard_incremental()),
-            # --- round 12: the last ungraded streaming behavior classes ---
+            # --- streaming: stream-stream join, complete-mode aggregations ---
             "attribution_incremental": (
                 q_attribution_incremental,
                 sql_attribution_incremental(),
@@ -10103,277 +10018,29 @@ def build_registry() -> dict[str, tuple[QueryFn, str | None]]:
             # IS the batch entry's SQL — additive state makes them equal
             "drift_incremental": (q_drift_incremental, sql_drift_vs_reference()),
             "histogram_incremental": (q_histogram_incremental, SQL_LATENCY_HISTOGRAM),
-            # --- round 12: privacy audit + join-planning diagnostics ---
+            # --- privacy audit + join-planning diagnostics ---
             "k_anonymity_lattice": (q_k_anonymity_lattice, sql_k_anonymity_lattice()),
             "join_skew_probe": (q_join_skew_probe, sql_join_skew_probe()),
-            # --- round 12: co-purchase affinity + FD discovery audit ---
+            # --- co-purchase affinity + FD discovery audit ---
             "basket_rules": (q_basket_rules, sql_basket_rules()),
             "fd_audit": (q_fd_audit, sql_fd_audit()),
-            # --- round 12: experiment/trend analytics, cross-engine-exact ---
+            # --- experiment/trend analytics, cross-engine-exact ---
             "ab_test_summary": (q_ab_test_summary, sql_ab_test_summary()),
             "value_trend_ols": (q_value_trend_ols, sql_value_trend_ols()),
         }
     )
-    ordered = {name: reg.pop(name) for name in ROUND12_PREFIX}
+    ordered = {name: reg.pop(name) for name in DRIVER_WINDOW}
     ordered.update(reg)
     return ordered
 
 
-# The driver gate's 50-entry window for round 6 (see build_registry
-# docstring for the rotation policy). Slot 1: the sole r05 failure
-# (q12 row-order hash — fixed this round, leads the window to prove
-# it). Slots 2–3: new in round 6 (TPC-H q20/q21 semi/anti-join
-# shapes). Slots 4–48: the 45 entries NOT in the r05 window — they
-# hold r04 verdicts (filter family, anonymize/faker, CDC/validation,
-# dedup/similarity/sampling/sketches/corpus/multimodal/text-stats
-# groups), so r5∪r6 again jointly cover the whole inventory and every
-# entry's latest verdict is ≤2 rounds old. Slots 49–50: r05-green
-# refill (flagship + the widest-fan-in window entry).
-ROUND6_PREFIX = [
-    # r05 failure, fixed this round
-    "q12_shipping_lateness",
-    # new in round 6
-    "q20_part_promotion", "q21_waiting_suppliers",
-    # r04-verdict rotation (everything absent from the r05 window)
-    "filter_startswith", "filter_endswith", "filter_startsends",
-    "filter_equals", "filter_anyofint", "filter_anyofstring",
-    "anonymize_supplier", "anonymize_orders", "faker_suite",
-    "fake_multi_email", "fake_email_id_prefix", "sanitize_null_bytes",
-    "keep_num_of_records", "agg_max_pk", "validation_check",
-    "datadiff_check", "dedup_exact", "minhash_signatures",
-    "simhash", "simhash_near_dups", "dedup_clusters",
-    "ngram_jaccard_adjacent", "knn_bruteforce", "knn_lsh",
-    "knn_ivf", "embedding_near_dups", "embedding_project",
-    "semdedup", "stratified_sample", "weighted_sample",
-    "mixture_sample", "pack_sequences", "training_shards",
-    "hll_users", "heavy_hitters", "bloom_probe",
-    "decontaminate", "unigram_nll", "chunk_dedup",
-    "corpus_report", "media_metadata", "multimodal_features",
-    "text_stats", "text_langid", "text_fingerprint",
-    # r05-green refill
-    "curation_pipeline", "events_session",
-]
-
-
-# The driver gate's 50-entry window for round 7. Slot 1:
-# q12_shipping_lateness — red in r5 AND r6; the real root cause
-# (DuckDB HUGEINT sum → fetchdf float64 → "11680.0" vs Spark's
-# "11680" in the driver hash) is fixed this round by casting both
-# CASE sums ::BIGINT in SQL_Q12, and the local gate is now
-# order/dtype-faithful so the unfixed form FAILS locally (verified).
-# Slots 2–34: the 33 round-6 additions that have never held a driver
-# verdict (tracked in the build_registry docstring). Slots 35–50:
-# ALL 16 round-7 additions — new entries go into the CURRENT round's
-# window so nothing ever waits two rounds for its first driver
-# verdict (the round-6 debt mistake, not repeated); the final four
-# slots went to the late additions (hard_negatives/bm25/split/KL)
-# rather than r05 refills, so the 47 r05-verdict holders lead r8.
-ROUND7_PREFIX = [
-    # red in r5+r6 — HUGEINT fix proves here
-    "q12_shipping_lateness",
-    # never driver-verified (round-6 additions, groups 6-8)
-    "q2_min_cost_supplier", "q11_important_parts", "q16_supplier_variety",
-    "click_attribution", "scd2_user_history", "scd2_point_in_time",
-    "purchases_with_state_asof", "state_tier_timeline", "column_profile",
-    "ri_orphans", "events_gapfill", "events_anomaly",
-    "latency_histogram", "zorder_layout", "dup_span_fraction",
-    "ops_healthcheck", "session_transitions", "dedup_weighted",
-    "customer_churn_sets", "orders_pivot", "grouping_sets_revenue",
-    "source_cap", "token_budget_selection", "embedding_dim_stats",
-    "events_moving_avg", "term_pmi", "lineitem_unpivot",
-    "peak_concurrency", "fuzzy_part_names", "quantile_sketch_events",
-    "customer_revenue_standing", "rolling_distinct_users", "supplier_pagerank",
-    # never driver-verified (round-7 additions — current-round debt is zero)
-    "triangle_count", "pareto_suppliers", "dsir_selection",
-    "bpe_merge_step", "mixture_temperature", "benford_profile",
-    "weighted_reservoir", "ewma_events", "source_overlap",
-    "events_mad_outliers", "interval_coverage", "funnel_3step",
-    # never driver-verified (round-7 late additions)
-    "hard_negatives", "bm25_search", "leakage_safe_split",
-    "source_kl_divergence",
-]
-
-# The round-8 window: slots 1–3 are the round-8 additions (new entries
-# always enter the CURRENT round's window — zero rotation debt); slots
-# 4–50 are the 47 entries whose latest driver verdict is r05 — the only
-# cohort predating the hash-faithful gate rewrite (the r7 verdict's
-# task #1). After this round, r7∪r8 jointly cover all entries with
-# post-rewrite verdicts.
-ROUND8_PREFIX = [
-    # new in round 8
-    "drift_vs_reference", "media_near_dups", "bpe_merge_chain",
-    # r05-verdict rotation: TPC-H cohort
-    "q17_small_quantity_revenue", "q19_disjunctive_revenue", "q22_idle_customers",
-    "q8_market_share", "q9_profit_by_nation",
-    "q1_pricing_summary", "q3_top_revenue", "q5_nation_revenue",
-    "q13_order_distribution", "q4_priority_returns", "q18_large_orders",
-    "q7_nation_volume", "q6_forecast_revenue", "q10_returned_items",
-    "q14_promo_revenue", "q15_top_supplier",
-    # r05-verdict rotation: skew / distribution
-    "skew_salted_stats", "doc_length_deciles", "value_percentiles",
-    # r05-verdict rotation: text-analysis suite
-    "token_count_bpe", "vocab_top_terms", "langid_confusion",
-    "tfidf_top_terms", "doc_quality", "pii_redact",
-    # r05-verdict rotation: warehouse rollups
-    "rollup_revenue", "distinct_parts_per_supplier", "top_customers_per_nation",
-    # r05-verdict rotation: event/window analytics
-    "asof_last_purchase", "events_in_campaign_windows", "events_json_extract",
-    "events_rollup_cascade", "events_tumbling", "events_sliding",
-    "funnel_click_purchase", "cohort_retention", "user_dwell_stats",
-    # r05-verdict rotation: reference-parity core
-    "filter_contains", "anonymize_customer", "cdc_upsert",
-    # r05-verdict rotation: incremental-curation group
-    "minhash_lsh_candidates", "dedup_survivors", "dedup_incremental",
-    "lsh_calibration", "quality_threshold_sweep", "ann_recall_eval",
-    "frame_sample",
-]
-
-
-# ACTIVE round-9 window (wired into build_registry this round).
-# Composition per the rotation ledger in the build_registry docstring:
-# the five r9 additions lead (new entries always enter the CURRENT
-# window), then the six r8-late never-driver-verified entries, then 39
-# of the 49 r06-verdict holders; the ten deferrals to the r10 window
-# are filter_startswith / filter_endswith / filter_startsends /
-# filter_equals / filter_anyofint (the simplest, most-stable Catalyst
-# predicate entries — least drift risk of the cohort; all five hold
-# randomized-warehouse fuzz parity), q20_part_promotion /
-# q21_waiting_suppliers (lineitem-family fuzz parity), and faker_suite
-# / fake_multi_email / fake_email_id_prefix (anonymization family —
-# warehouse-fuzz parity, deterministic per-value seeds, no drift risk).
-ROUND9_PREFIX = [
-    # new in round 9 (enter the current window immediately)
-    "ivfpq_ann_topk", "bpe_vocab_trained",
-    "containment_near_dups", "novelty_scores", "vocab_growth",
-    # never driver-verified (r8-late additions)
-    "pq_ann_topk", "repetition_signals", "hybrid_search_rrf",
-    "contrastive_triplets", "embedding_outliers", "feature_hash_embed",
-    # r06-verdict rotation (39 of 49; the faker trio additionally
-    # defers to r10 to make room for the three late-r9 additions —
-    # warehouse-fuzz-covered, the least-drift-risk of the remaining
-    # cohort)
-    "filter_anyofstring",
-    "anonymize_supplier", "anonymize_orders", "sanitize_null_bytes",
-    "keep_num_of_records", "agg_max_pk", "validation_check",
-    "datadiff_check", "dedup_exact", "minhash_signatures", "simhash",
-    "simhash_near_dups", "dedup_clusters", "ngram_jaccard_adjacent",
-    "knn_bruteforce", "knn_lsh", "knn_ivf", "embedding_near_dups",
-    "embedding_project", "semdedup", "stratified_sample",
-    "weighted_sample", "mixture_sample", "pack_sequences",
-    "training_shards", "hll_users", "heavy_hitters", "bloom_probe",
-    "decontaminate", "unigram_nll", "chunk_dedup", "curation_pipeline",
-    "corpus_report", "media_metadata", "multimodal_features",
-    "text_stats", "text_langid", "text_fingerprint",
-    "events_session",
-]
-
-
-# ACTIVE round-10 window (wired into build_registry this round).
-# Composition per the r9 verdict's tasks 1/3: the six r10 additions
-# lead (new entries always enter the CURRENT window), then
-# feature_hash_embed — the registry's only never-driver-verified entry
-# (r9 red on the array serialization, fixed this round — leads the
-# rotation cohort to prove the fix), then the ten r06-verdict
-# deferrals (five filter predicates, the q20/q21 pair, the faker trio
-# — the oldest verdicts in the registry), then 33 of the 50
-# r07-verdict holders. The SEVENTEEN r07 deferrals to the r11 window
-# are the ten long-staged stable relational shapes (orders_pivot /
-# grouping_sets_revenue / lineitem_unpivot / fuzzy_part_names /
-# source_cap / embedding_dim_stats / weighted_reservoir /
-# benford_profile / customer_revenue_standing / zorder_layout) plus
-# the seven tail slots the r10 additions displaced (bm25_search /
-# leakage_safe_split / source_kl_divergence / funnel_3step /
-# hard_negatives / interval_coverage / events_mad_outliers) — all
-# hold randomized-fuzz or fixed-table parity and none has churned
-# since r7.
-ROUND10_PREFIX = [
-    # new in round 10 (enter the current window immediately)
-    "pq_index_query", "novelty_incremental",
-    "embedding_int8_quant", "ann_incremental", "media_incremental",
-    "pq_residual_query", "pq_rerank_query", "bigram_nll", "zipf_fit",
-    "hll_set_ops", "bigram_nll_oov", "semantic_decontam",
-    # never driver-verified: r9 red, serialization fixed this round
-    "feature_hash_embed",
-    # r06-verdict deferrals (oldest verdicts — lead the rotation)
-    "filter_startswith", "filter_endswith", "filter_startsends",
-    "filter_equals", "filter_anyofint",
-    "q20_part_promotion", "q21_waiting_suppliers",
-    "faker_suite", "fake_multi_email", "fake_email_id_prefix",
-    # r07-verdict rotation (37 of 50)
-    "q12_shipping_lateness", "q2_min_cost_supplier", "q11_important_parts",
-    "q16_supplier_variety", "click_attribution", "scd2_user_history",
-    "scd2_point_in_time", "purchases_with_state_asof", "state_tier_timeline",
-    "column_profile", "ri_orphans", "events_gapfill", "events_anomaly",
-    "latency_histogram", "dup_span_fraction", "ops_healthcheck",
-    "session_transitions", "dedup_weighted", "customer_churn_sets",
-    "token_budget_selection", "events_moving_avg", "term_pmi",
-    "peak_concurrency", "quantile_sketch_events", "rolling_distinct_users",
-    "supplier_pagerank", "triangle_count",
-]
-
-
-# ACTIVE round-11 window (wired into build_registry this round,
-# executing the rotation exactly as staged in r10 — the r10 verdict's
-# task 1). Composition: the 23 r07-verdict holders lead (the oldest
-# verdicts after the r10 window was graded 50/50 green), then
-# r08-verdict holders in ROUND8_PREFIX order. NEW r11 entries enter at
-# the head as they land, each displacing one r08 holder from the tail
-# into ROUND12_PREFIX_STAGED.
-ROUND11_PREFIX = [
-    # new in round 11 (enter the current window immediately): the
-    # streaming CDC/SCD2 apply paths under the gate, the BPE corpus
-    # encode completing train→apply, and the custom-stateful streaming
-    # operators (applyInPandasWithState) graded end-to-end
-    "cdc_incremental", "scd2_incremental", "bpe_encode",
-    "quota_incremental", "stateful_totals_incremental",
-    "dedup_exact_incremental", "ingest_health_incremental",
-    "shard_incremental",
-    # r07-verdict deferrals (oldest verdicts — lead the rotation; the
-    # ten long-staged shapes first, then the six r10-window tail
-    # slots the late-r10 additions displaced)
-    "orders_pivot", "grouping_sets_revenue", "lineitem_unpivot",
-    "fuzzy_part_names", "source_cap", "embedding_dim_stats",
-    "weighted_reservoir", "benford_profile", "customer_revenue_standing",
-    "zorder_layout", "bm25_search", "leakage_safe_split",
-    "source_kl_divergence", "funnel_3step", "hard_negatives",
-    "interval_coverage", "events_mad_outliers",
-    "mixture_temperature", "ewma_events", "source_overlap",
-    "bpe_merge_step", "dsir_selection", "pareto_suppliers",
-    # r08-verdict rotation (33 of 47)
-    "drift_vs_reference", "media_near_dups", "bpe_merge_chain",
-    "q17_small_quantity_revenue", "q19_disjunctive_revenue", "q22_idle_customers",
-    "q8_market_share", "q9_profit_by_nation",
-    "q1_pricing_summary", "q3_top_revenue", "q5_nation_revenue",
-    "q13_order_distribution", "q4_priority_returns", "q18_large_orders",
-    "q7_nation_volume", "q6_forecast_revenue", "q10_returned_items",
-    "q14_promo_revenue", "q15_top_supplier",
-    # (skew_salted_stats, doc_length_deciles, value_percentiles,
-    # token_count_bpe, vocab_top_terms, langid_confusion,
-    # tfidf_top_terms, doc_quality displaced into the r12 window by
-    # the eight r11 additions — they stay r8-aged and lead it)
-]
-
-
-# ACTIVE round-12 window (wired into build_registry this round,
-# executing the rotation exactly as staged in r11 — the r11 verdict's
-# task 1 — plus the five r12 additions at the head, each displacing
-# one r09 holder from the tail into ROUND13_PREFIX_STAGED per the
-# staging rule). Composition: 5 new + the 31 r08-verdict holders the
-# r11 window could not fit + 14 of the oldest r09 holders.
-ROUND12_PREFIX = [
-    # new in round 12 (enter the current window immediately): the last
-    # ungraded streaming behavior classes — the watermarked
-    # stream-stream join with left-outer eviction, and the two
-    # complete-mode stateful aggregations (drift term counts, the
-    # mergeable histogram) run as REAL streaming queries — plus the
-    # k-anonymity/l-diversity rollup audit and the pre-join skew probe
+# The driver gate's window: the first 50 registry entries, in this
+# order (rotation policy in the build_registry docstring).
+DRIVER_WINDOW = [
     "attribution_incremental", "drift_incremental", "histogram_incremental",
     "k_anonymity_lattice", "join_skew_probe",
     "basket_rules", "fd_audit",
     "ab_test_summary", "value_trend_ols",
-    # r08-verdict holders (oldest after r11 — lead the rotation; the
-    # eight entries the r11 additions displaced from ROUND11's tail
-    # first)
     "skew_salted_stats", "doc_length_deciles", "value_percentiles",
     "token_count_bpe", "vocab_top_terms", "langid_confusion",
     "tfidf_top_terms", "doc_quality",
@@ -10386,48 +10053,8 @@ ROUND12_PREFIX = [
     "minhash_lsh_candidates", "dedup_survivors", "dedup_incremental",
     "lsh_calibration", "quality_threshold_sweep", "ann_recall_eval",
     "frame_sample",
-    # r09-verdict rotation (18 of 49, ROUND9_PREFIX order; the nine
-    # r12 additions displaced keep_num_of_records / agg_max_pk /
-    # validation_check / datadiff_check / dedup_exact /
-    # anonymize_orders / sanitize_null_bytes / filter_anyofstring /
-    # anonymize_supplier into the r13 list, where they stay r9-aged
-    # and lead)
     "ivfpq_ann_topk", "bpe_vocab_trained", "containment_near_dups",
     "novelty_scores", "vocab_growth", "pq_ann_topk",
     "repetition_signals", "hybrid_search_rrf", "contrastive_triplets",
     "embedding_outliers",
-]
-
-
-# STAGED round-13 window (NOT wired — round 13 renames this to the
-# active prefix, updates build_registry's `ordered = ...` line and the
-# rotation ledger, and keeps tests/test_entry_contract.py in sync).
-# Composition: the 35 remaining r09-verdict holders lead (the oldest
-# verdicts once r12 is graded; ROUND9_PREFIX order, the five entries
-# the r12 additions displaced first), then the oldest r10-verdict
-# holders (ROUND10_PREFIX order) fill to 50. Any NEW r13 entries enter
-# at the head, displacing r10 holders from the tail into the r14 list.
-ROUND13_PREFIX_STAGED = [
-    # r09-verdict holders (oldest after r12; the seven r12-displaced
-    # entries lead, then the rest in ROUND9_PREFIX order)
-    "keep_num_of_records", "agg_max_pk",
-    "validation_check", "datadiff_check", "dedup_exact",
-    "anonymize_orders", "sanitize_null_bytes",
-    "filter_anyofstring", "anonymize_supplier",
-    "minhash_signatures", "simhash", "simhash_near_dups",
-    "dedup_clusters", "ngram_jaccard_adjacent", "knn_bruteforce",
-    "knn_lsh", "knn_ivf", "embedding_near_dups", "embedding_project",
-    "semdedup", "stratified_sample", "weighted_sample",
-    "mixture_sample", "pack_sequences", "training_shards",
-    "hll_users", "heavy_hitters", "bloom_probe", "decontaminate",
-    "unigram_nll", "chunk_dedup", "curation_pipeline",
-    "corpus_report", "media_metadata", "multimodal_features",
-    "text_stats", "text_langid", "text_fingerprint", "events_session",
-    # r10-verdict rotation (11 of 50, ROUND10_PREFIX order;
-    # filter_startswith / filter_endswith / semantic_decontam /
-    # feature_hash_embed slip to the r14 fill)
-    "pq_index_query", "novelty_incremental", "embedding_int8_quant",
-    "ann_incremental", "media_incremental", "pq_residual_query",
-    "pq_rerank_query", "bigram_nll", "zipf_fit", "hll_set_ops",
-    "bigram_nll_oov",
 ]

@@ -24,7 +24,8 @@ from dataclasses import dataclass, field
 from datetime import date
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
 
 from rustic_witcher_spark.config.model import AnonymizationConfig, TableConfig
 from rustic_witcher_spark.functions.wordlists import DEFAULT_SEED
@@ -32,7 +33,13 @@ from rustic_witcher_spark.operators.cdc import apply_cdc
 from rustic_witcher_spark.operators.transforms import check_schema_drift
 from rustic_witcher_spark.plans.pipeline import anonymize_table
 from rustic_witcher_spark.sinks.parquet import write_parquet
-from rustic_witcher_spark.sources.parquet import cast_ntz_timestamps, pin_parquet_confs, list_table_files, prune_load_files
+from rustic_witcher_spark.sources.parquet import (
+    cast_ntz_timestamps,
+    list_table_files,
+    pin_parquet_confs,
+    prune_load_files,
+    read_table_files,
+)
 
 # ref default NUM_OF_BUFFERS=80; local mode needs far less
 DEFAULT_NUM_OF_BUFFERS = int(os.environ.get("NUM_OF_BUFFERS", "8"))
@@ -121,9 +128,7 @@ def process_table(
 
         if path.is_file():
             files = (str(path),)
-            df = cast_ntz_timestamps(spark.read.parquet(*files))
-            if cfg.keep_num_of_records is not None:
-                df = df.limit(cfg.keep_num_of_records)
+            df = read_table_files(spark, files, cfg.keep_num_of_records)
         else:
             listed = list_table_files(path, mode, start_date, stop_date)
             loads = prune_load_files(listed.load_files, cfg.keep_num_of_records)
@@ -134,9 +139,7 @@ def process_table(
             # (ref: anonymization_dataframe_operator.rs:116-125); CDC rows
             # are merged in full afterwards.
             if loads:
-                df = cast_ntz_timestamps(spark.read.parquet(*loads))
-                if cfg.keep_num_of_records is not None:
-                    df = df.limit(cfg.keep_num_of_records)
+                df = read_table_files(spark, loads, cfg.keep_num_of_records)
             else:
                 # CDC-only directory (table created after the full load):
                 # the snapshot materializes purely from CDC inserts over
@@ -160,6 +163,10 @@ def process_table(
         if catalog_columns is not None:
             check_schema_drift(df.columns, catalog_columns)
         out = anonymize_table(df, cfg, seed, limit_already_applied=True)
+        # the row count rides the write job: a count() afterwards would
+        # re-run the whole scan → merge → transform chain
+        rows = Observation()
+        out = out.observe(rows, F.count(F.lit(1)).alias("n"))
         write_parquet(out, str(out_path), target_files=1 if path.is_file() else None)
         upload_dir = anonymized_upload_dir()
         if upload_dir is not None:
@@ -169,7 +176,7 @@ def process_table(
                 shutil.copytree(out_path, dest, dirs_exist_ok=True)
             else:
                 shutil.copyfile(out_path, dest)
-        return TableResult(table, "anonymized", rows=out.count(), files_read=len(files))
+        return TableResult(table, "anonymized", rows=rows.get["n"], files_read=len(files))
     except Exception as e:  # noqa: BLE001 - per-table isolation, reported upward
         return TableResult(table, "error", error=f"{type(e).__name__}: {e}")
 

@@ -15,15 +15,13 @@ fresh JVM per iteration (guide §1: measure first, measure often).
 from __future__ import annotations
 
 import argparse
-import gc
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from bench import _cpu_pcts, _cpu_sample
+from bench import timed_noop
 from rustic_witcher_spark.queries import build_registry
 from rustic_witcher_spark.session import get_spark
 
@@ -60,13 +58,9 @@ def main() -> None:
         runs = []
         runs_jobs, runs_steal, runs_idle = [], [], []
         for _ in range(args.runs):
-            gc.collect()
             j0 = max(spark.sparkContext.statusTracker().getJobIdsForGroup(None) or [-1])
-            c0 = _cpu_sample()
-            t0 = time.perf_counter()
-            fn(spark, args.sf).write.format("noop").mode("overwrite").save()
-            runs.append(round(time.perf_counter() - t0, 3))
-            pcts = _cpu_pcts(c0, _cpu_sample())
+            dt, pcts = timed_noop(fn, spark, args.sf)
+            runs.append(dt)
             j1 = max(spark.sparkContext.statusTracker().getJobIdsForGroup(None) or [-1])
             runs_jobs.append(j1 - j0)
             runs_steal.append(pcts.get("steal_pct"))

@@ -69,34 +69,28 @@ def test_every_oracle_sql_parses_in_duckdb():
     assert not bad, "oracle SQL failed to plan:\n" + "\n".join(bad)
 
 
-# Enforce the round-12 rotation: the driver's correctness gate grades a
-# 50-entry PREFIX, and the prefix is an explicit list (ROUND12_PREFIX)
-# leading with never/stale-verified entries so consecutive rounds'
-# CORRECTNESS files jointly cover the whole inventory. This test pins
-# the prefix so an accidental reorder (the round-3 failure mode) fails
-# loudly here instead of silently rotating verdict coverage.
+# The driver's correctness gate grades a 50-entry PREFIX, and the
+# prefix is an explicit list (DRIVER_WINDOW) leading with the entries
+# whose latest driver verdict is oldest. This test pins the prefix so an
+# accidental reorder (the round-3 failure mode) fails loudly here
+# instead of silently rotating verdict coverage.
 
 
 def test_registry_prefix_matches_rotation_plan():
     import __spark_entry__ as entrymod
-    from rustic_witcher_spark.queries import (
-        ROUND11_PREFIX,
-        ROUND12_PREFIX,
-        ROUND13_PREFIX_STAGED,
-    )
+    from rustic_witcher_spark.queries import DRIVER_WINDOW
 
     names = list(entrymod.queries())
-    assert len(ROUND12_PREFIX) == 50
-    assert names[: len(ROUND12_PREFIX)] == ROUND12_PREFIX, (
-        "registry prefix diverged from ROUND12_PREFIX — the driver gate "
+    assert len(DRIVER_WINDOW) == 50
+    assert names[: len(DRIVER_WINDOW)] == DRIVER_WINDOW, (
+        "registry prefix diverged from DRIVER_WINDOW — the driver gate "
         "grades a 50-entry prefix; see build_registry() docstring"
     )
     assert len(names) == len(set(names))
-    # r12 window composition: the three r12 additions lead, then the
+    # r12 window composition: the nine r12 additions lead, then the
     # eight r08-aged entries the r11 additions displaced — the oldest
-    # verdicts after r11 — which must ALL be in the window (the
-    # rotation's whole point: after r12 the oldest verdict is r9)
-    assert ROUND12_PREFIX[:9] == [
+    # verdicts after r11 — which must ALL be in the window
+    assert DRIVER_WINDOW[:9] == [
         "attribution_incremental", "drift_incremental", "histogram_incremental",
         "k_anonymity_lattice", "join_skew_probe",
         "basket_rules", "fd_audit",
@@ -107,18 +101,4 @@ def test_registry_prefix_matches_rotation_plan():
         "token_count_bpe", "vocab_top_terms", "langid_confusion",
         "tfidf_top_terms", "doc_quality",
     }
-    assert r08_aged_displaced <= set(ROUND12_PREFIX)
-    # rotation, not repeat: no overlap with the r11 window
-    assert not set(ROUND12_PREFIX) & set(ROUND11_PREFIX)
-    # the staged r13 window is consistent: 50 entries, all in the
-    # registry, none overlapping the r12 window, led by the five
-    # entries the r12 additions displaced (they stay r9-aged)
-    assert len(ROUND13_PREFIX_STAGED) == 50
-    assert set(ROUND13_PREFIX_STAGED) <= set(names)
-    assert not set(ROUND13_PREFIX_STAGED) & set(ROUND12_PREFIX)
-    assert ROUND13_PREFIX_STAGED[:9] == [
-        "keep_num_of_records", "agg_max_pk",
-        "validation_check", "datadiff_check", "dedup_exact",
-        "anonymize_orders", "sanitize_null_bytes",
-        "filter_anyofstring", "anonymize_supplier",
-    ]
+    assert r08_aged_displaced <= set(DRIVER_WINDOW)

@@ -11,7 +11,7 @@ from pathlib import Path
 import pytest
 
 from rustic_witcher_spark.config.loader import load_config_str
-from rustic_witcher_spark.runner import snapshot
+from rustic_witcher_spark.runner import process_table, snapshot
 
 CFG = """
 [[tables]]
@@ -47,6 +47,52 @@ def test_snapshot_mixed_anonymize_and_copy(spark, src, tmp_path):
     out = spark.read.parquet(str(tmp_path / "out" / "customer.parquet"))
     assert out.count() == 50
     assert not [r for r in out.collect() if r["c_name"].startswith("Customer#")]
+
+
+REPLACE_CFG = """
+[[tables]]
+table_name = "customer"
+[tables.filter_type]
+type = "StartsWith"
+column = "c_name"
+value = "{prefix}"
+[tables.anonymization_type]
+type = "Multi"
+[[tables.anonymization_type.column_transformations]]
+column_name = "c_name"
+[tables.anonymization_type.column_transformations.transformation_type]
+type = "Replace"
+replacement_value = "REDACTED"
+"""
+
+
+def _last_job_id(spark) -> int:
+    sc = spark.sparkContext
+    # the status tracker is fed by the async listener bus; drain it so
+    # jobs that already ran are all visible
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(sc.statusTracker().getJobIdsForGroup(None) or [-1])
+
+
+def test_process_table_runs_pipeline_once(spark, src, tmp_path):
+    """An anonymized flat-file table costs two Spark jobs: the Parquet
+    schema inference on read and the write. The reported row count
+    rides the write instead of re-running the pipeline for a count()."""
+    cfg = load_config_str(REPLACE_CFG.format(prefix="Customer#")).table("customer")
+    j0 = _last_job_id(spark)
+    res = process_table(spark, "customer", src / "customer.parquet", cfg, tmp_path)
+    assert _last_job_id(spark) - j0 == 2
+    assert res.action == "anonymized" and res.files_read == 1
+    assert res.rows == spark.read.parquet(str(src / "customer.parquet")).count()
+    assert spark.read.parquet(str(tmp_path / "customer.parquet")).count() == res.rows
+
+
+def test_process_table_reports_zero_rows_when_filter_keeps_none(spark, src, tmp_path):
+    cfg = load_config_str(REPLACE_CFG.format(prefix="no such prefix")).table("customer")
+    res = process_table(spark, "customer", src / "customer.parquet", cfg, tmp_path)
+    assert res.action == "anonymized", res.error
+    assert res.rows == 0
+    assert spark.read.parquet(str(tmp_path / "customer.parquet")).count() == 0
 
 
 def test_snapshot_included_tables(spark, src, tmp_path):
