@@ -29,7 +29,7 @@ from rustic_witcher_spark.config.loader import load_config
 from rustic_witcher_spark.functions.wordlists import DEFAULT_SEED
 from rustic_witcher_spark.runner import DEFAULT_NUM_OF_BUFFERS, snapshot
 from rustic_witcher_spark.session import get_spark
-from rustic_witcher_spark.sources.parquet import cast_ntz_timestamps
+from rustic_witcher_spark.sources.parquet import read_table_files
 
 _MODES = {"full-load-only": "FullLoadOnly", "date-aware": "DateAware", "absolute-path": "AbsolutePath"}
 
@@ -332,8 +332,8 @@ def main(argv: list[str] | None = None) -> int:
         from rustic_witcher_spark.operators.diff import diff_summary
 
         spark = get_spark(f"datadiff-{args.table}")
-        src = cast_ntz_timestamps(spark.read.parquet(f"{args.source}/{args.table}.parquet"))
-        tgt = cast_ntz_timestamps(spark.read.parquet(f"{args.target}/{args.table}.parquet"))
+        src = read_table_files(spark, (f"{args.source}/{args.table}.parquet",))
+        tgt = read_table_files(spark, (f"{args.target}/{args.table}.parquet",))
         rows = diff_summary(src, tgt, args.pk).collect()
         counts = {r["status"]: r["n"] for r in rows}
         print(json.dumps({"table": args.table, "diff": counts, "clean": not counts}))
@@ -345,7 +345,7 @@ def main(argv: list[str] | None = None) -> int:
         spark = get_spark("validate")
         for p in sorted(Path(args.data).iterdir()):
             if p.suffix == ".parquet":
-                cast_ntz_timestamps(spark.read.parquet(str(p))).createOrReplaceTempView(p.stem)
+                read_table_files(spark, (str(p),)).createOrReplaceTempView(p.stem)
         results = run_validations(spark, load_validation_config(args.validations))
         ok = all(r.passed for r in results)
         for r in results:
@@ -356,7 +356,7 @@ def main(argv: list[str] | None = None) -> int:
         from rustic_witcher_spark.sinks.shards import write_training_shards
 
         spark = get_spark("shard")
-        df = cast_ntz_timestamps(spark.read.parquet(args.source))
+        df = read_table_files(spark, (args.source,))
         manifest = write_training_shards(df, args.id_col, args.n_shards, args.target, seed=args.seed)
         print(json.dumps(manifest, sort_keys=True))
         return 0
@@ -422,7 +422,7 @@ def main(argv: list[str] | None = None) -> int:
                 dead_letters(quarantined).write.mode("overwrite").parquet(args.quarantine_target)
             docs = quarantined.filter(f"{CORRUPT_COL} IS NULL").drop(CORRUPT_COL)
         else:
-            docs = cast_ntz_timestamps(spark.read.parquet(args.input))
+            docs = read_table_files(spark, (args.input,))
         # Observation metrics ride the single shard-write job instead of
         # paying two extra full passes (a count() before dedup re-scans the
         # source; a count() after re-runs the dedup shuffle). The sink's
@@ -455,7 +455,7 @@ def main(argv: list[str] | None = None) -> int:
         from rustic_witcher_spark.operators.sampling import group_split
 
         spark = get_spark("split")
-        docs = cast_ntz_timestamps(spark.read.parquet(args.input))
+        docs = read_table_files(spark, (args.input,))
         labeled = docs.withColumn("split", group_split(F.col(args.group_col), seed=args.seed))
         labeled.write.mode("overwrite").partitionBy("split").parquet(args.target)
         # counts from a read-back of the written partitions: validates the
@@ -485,7 +485,7 @@ def main(argv: list[str] | None = None) -> int:
         )
 
         spark = get_spark("lm-score")
-        docs = spark.read.parquet(args.input)
+        docs = read_table_files(spark, (args.input,))
         uni = unigram_logprob_score(docs, args.text_col, args.id_col).select(
             args.id_col, "n_tokens", F.col("nll").alias("unigram_nll")
         )
@@ -529,8 +529,8 @@ def main(argv: list[str] | None = None) -> int:
         from rustic_witcher_spark.streaming.drift import kl_vs_reference, term_counts
 
         spark = get_spark("drift")
-        corpus = cast_ntz_timestamps(spark.read.parquet(args.input))
-        ref = cast_ntz_timestamps(spark.read.parquet(args.reference))
+        corpus = read_table_files(spark, (args.input,))
+        ref = read_table_files(spark, (args.reference,))
         ref_counts = term_counts(ref, args.text_col)
         if args.reference_top_k is not None:
             # deterministic top-K: ties to the lexicographically smallest
@@ -560,7 +560,7 @@ def main(argv: list[str] | None = None) -> int:
         from rustic_witcher_spark.operators.multimodal import attach_perceptual_hash
 
         spark = get_spark("media-dedup")
-        src = spark.read.parquet(args.source)
+        src = read_table_files(spark, (args.source,))
         hashed = attach_perceptual_hash(src, args.binary_col).select(args.id_col, "phash")
         if args.against:
             # incremental mode: batch vs persisted fingerprint index,
@@ -622,7 +622,7 @@ def main(argv: list[str] | None = None) -> int:
             print("--residual requires --pq-subspaces > 0 (float IVF lists store raw vectors)", file=sys.stderr)
             return 2
         spark = get_spark("ann-index")
-        src = spark.read.parquet(args.source)
+        src = read_table_files(spark, (args.source,))
         if args.pq_subspaces > 0:
             from rustic_witcher_spark.operators.pq import pq_write_index
 
@@ -671,7 +671,7 @@ def main(argv: list[str] | None = None) -> int:
         spark = get_spark("tokenize")
         with open(args.merges) as fh:
             merges = json.load(fh)
-        src = spark.read.parquet(args.source)
+        src = read_table_files(spark, (args.source,))
         out = bpe_apply(src, args.text_col, merges).withColumn(
             "n_tokens", F.size("bpe_tokens").cast("long")
         )
@@ -703,7 +703,7 @@ def main(argv: list[str] | None = None) -> int:
         from rustic_witcher_spark.operators.bpe import bpe_train
 
         spark = get_spark("bpe-train")
-        src = spark.read.parquet(args.source)
+        src = read_table_files(spark, (args.source,))
         merges, sym = bpe_train(src, args.text_col, n_merges=args.merges)
         os.makedirs(args.target, exist_ok=True)
         with open(os.path.join(args.target, "merges.json"), "w") as fh:
@@ -736,7 +736,7 @@ def main(argv: list[str] | None = None) -> int:
                 "the re-rank stage only re-scores the shortlist"
             )
         spark = get_spark("ann-query")
-        q = spark.read.parquet(args.queries)
+        q = read_table_files(spark, (args.queries,))
         if os.path.isdir(os.path.join(args.index, "_codebooks")):
             if args.delta:
                 if args.rerank:
@@ -751,7 +751,7 @@ def main(argv: list[str] | None = None) -> int:
                 from rustic_witcher_spark.operators.pq import pq_query_index_rerank
 
                 out = pq_query_index_rerank(
-                    spark, args.index, q, spark.read.parquet(args.rerank),
+                    spark, args.index, q, read_table_files(spark, (args.rerank,)),
                     k=args.k, shortlist_k=args.shortlist_k, nprobe=args.nprobe,
                     id_col=args.id_col, vec_col=args.vec_col,
                 )
@@ -794,7 +794,7 @@ def main(argv: list[str] | None = None) -> int:
         from rustic_witcher_spark.operators.dedup import novelty_scores
 
         spark = get_spark("novelty")
-        docs = spark.read.parquet(args.input)
+        docs = read_table_files(spark, (args.input,))
         if args.index:
             from rustic_witcher_spark.streaming.novelty import (
                 META_NAME,
@@ -824,7 +824,7 @@ def main(argv: list[str] | None = None) -> int:
 
         spark = get_spark("containment-dedup")
         out = containment_near_duplicates(
-            spark.read.parquet(args.input),
+            read_table_files(spark, (args.input,)),
             args.text_col,
             args.id_col,
             seed=args.seed,
@@ -841,8 +841,8 @@ def main(argv: list[str] | None = None) -> int:
         spark = get_spark("hybrid-search")
         anchor_ids = [int(a) for a in args.anchors.split(",") if a.strip()]
         out = hybrid_rrf(
-            spark.read.parquet(args.docs),
-            spark.read.parquet(args.embeddings),
+            read_table_files(spark, (args.docs,)),
+            read_table_files(spark, (args.embeddings,)),
             anchor_ids=anchor_ids,
             id_col=args.id_col,
             text_col=args.text_col,

@@ -114,9 +114,10 @@ def fake_phone(value: Column, seed: int) -> Column:
     punctuation/whitespace/length preserved; strings of length ≤ 1 kept
     as-is (ref: fake_phone_transformator.rs:14-58)."""
     k = hash_slice(md5_hex(value, seed, "phone"), 1) % len(_ROTATIONS)
-    remapped: Column = F.lit(None).cast("string")
-    for i, rot in enumerate(_ROTATIONS):
-        remapped = F.when(k == i, F.translate(value, _DIGITS, rot)) if i == 0 else remapped.when(k == i, F.translate(value, _DIGITS, rot))
+    # one translate with a per-row replace string (F.translate only takes
+    # literals) instead of a CASE over nine literal translates
+    rot = F.element_at(F.lit(_ROTATIONS), (k + 1).cast("int"))
+    remapped = F.call_function("translate", value, F.lit(_DIGITS), rot)
     return F.when(F.length(value) <= 1, value).otherwise(remapped)
 
 

@@ -48,13 +48,7 @@ from rustic_witcher_spark.operators.range_join import range_join
 from rustic_witcher_spark.operators.dedup import MERSENNE_31, perm_params
 from rustic_witcher_spark.operators.materialize import materialize
 from rustic_witcher_spark.plans.pipeline import anonymize_table, pipeline_oracle_sql
-from rustic_witcher_spark.sources.parquet import (
-    _cast_ntz_from_schema,
-    _stat_key,
-    cast_ntz_timestamps,
-    pin_parquet_confs,
-    read_events,
-)
+from rustic_witcher_spark.sources.parquet import read_events, read_fixed_table, read_table_files
 from rustic_witcher_spark.streaming import drift, rollup, windows
 
 SEED = 42
@@ -62,44 +56,11 @@ SEED = 42
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
-# Schema cache for _read: parquet footer schema inference costs a py4j
-# round plus a JVM file-listing+footer read (~60-90 ms on this host)
-# PER spark.read.parquet call, and the engine re-reads the same fixed
-# table paths hundreds of times per bench/gate run. The cache holds the
-# INFERRED SCHEMA (metadata only — never rows, never plan results):
-# every invocation still builds a fresh scan over the parquet files, so
-# nothing about the computed data is memoized. Keyed by
-# (path, mtime_ns, size) so a table regenerated in-process with a new
-# schema re-infers instead of silently reading through a stale schema
-# (ADVICE r12) — the stat is nearly free.
-_READ_SCHEMA_CACHE: dict[tuple, object] = {}
-
-
 def _read(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    if table == "events":
-        # events.parquet carries ns-precision timestamps; read_events sets
-        # the runtime conf a vanilla session lacks and truncates to micros.
-        df = read_events(spark, sf_dir)
-    else:
-        # Driver sessions are vanilla: pin the runtime confs the engine's own
-        # factory sets (see pin_parquet_confs). The timezone conf is NOT
-        # snapshot-and-restored on purpose: Spark confs take effect when an
-        # ACTION runs, not when the lazy DataFrame is built, so restoring
-        # after this call would silently re-break the UTC rendering the
-        # engine's results depend on. Hosts embedding the engine in a
-        # non-UTC session should materialize engine results before running
-        # their own timezone-sensitive queries, or use a separate session.
-        pin_parquet_confs(spark)
-        path = f"{sf_dir}/{table}.parquet"
-        key = _stat_key(path)
-        schema = _READ_SCHEMA_CACHE.get(key)
-        if schema is None:
-            schema = spark.read.parquet(path).schema
-            _READ_SCHEMA_CACHE[key] = schema
-        raw = spark.read.schema(schema).parquet(path)
-        # Spark-written tables carry an explicit NTZ marker that overrides
-        # the pinned inference conf — normalize so both layouts work.
-        df = _cast_ntz_from_schema(raw, schema)
+    # Caller sessions may be vanilla: both readers pin the runtime confs the
+    # engine's own factory sets (see sources.parquet.pin_parquet_confs),
+    # and events.parquet's ns-precision ts is truncated to micros.
+    df = read_events(spark, sf_dir) if table == "events" else read_fixed_table(spark, f"{sf_dir}/{table}.parquet")
     try:
         df._rw_scan_bytes = _table_bytes(sf_dir, table)  # _spread fast path
     except OSError:
@@ -7188,7 +7149,7 @@ def q_scd2_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     merge(b0, 0)
     merge(b1, 1)
-    hist = cast_ntz_timestamps(spark.read.parquet(hist_path))
+    hist = read_table_files(spark, (hist_path,))
     return hist.select(
         "user_id",
         F.col("event_type").alias("state"),

@@ -33,13 +33,7 @@ from rustic_witcher_spark.operators.cdc import apply_cdc
 from rustic_witcher_spark.operators.transforms import check_schema_drift
 from rustic_witcher_spark.plans.pipeline import anonymize_table
 from rustic_witcher_spark.sinks.parquet import write_parquet
-from rustic_witcher_spark.sources.parquet import (
-    cast_ntz_timestamps,
-    list_table_files,
-    pin_parquet_confs,
-    prune_load_files,
-    read_table_files,
-)
+from rustic_witcher_spark.sources.parquet import list_table_files, prune_load_files, read_table_files
 
 # ref default NUM_OF_BUFFERS=80; local mode needs far less
 DEFAULT_NUM_OF_BUFFERS = int(os.environ.get("NUM_OF_BUFFERS", "8"))
@@ -103,10 +97,6 @@ def process_table(
     primary_key: list[str] | None = None,
 ) -> TableResult:
     out_path = target_dir / f"{table}.parquet"
-    # defensive conf pinning for vanilla caller sessions (see
-    # sources.parquet.pin_parquet_confs) — DMS tables carry naive
-    # timestamps that must not arrive as TIMESTAMP_NTZ
-    pin_parquet_confs(spark)
     try:
         if cfg is None or (
             not cfg.column_transformations
@@ -137,29 +127,14 @@ def process_table(
                 raise ValueError(f"table {table!r}: no parquet files found for mode {mode}")
             # The record-reduction slice applies to the LOAD snapshot only
             # (ref: anonymization_dataframe_operator.rs:116-125); CDC rows
-            # are merged in full afterwards.
-            if loads:
-                df = read_table_files(spark, loads, cfg.keep_num_of_records)
-            else:
-                # CDC-only directory (table created after the full load):
-                # the snapshot materializes purely from CDC inserts over
-                # an empty base with the CDC files' data schema.
-                from rustic_witcher_spark.operators.cdc import OP_COLUMN, TS_COLUMN
-
-                cdc_schema = cast_ntz_timestamps(spark.read.parquet(*listed.cdc_files))
-                df = cdc_schema.select(
-                    *[c for c in cdc_schema.columns if c not in (OP_COLUMN, TS_COLUMN)]
-                ).limit(0)
+            # are merged in full afterwards. A CDC-only directory (table
+            # created after the full load) has no base: the snapshot is
+            # the CDC inserts alone.
+            df = read_table_files(spark, loads, cfg.keep_num_of_records) if loads else None
             if listed.cdc_files:
                 # DateAware: CDC files are per-PK upserts/deletes over the
                 # LOAD snapshot, not extra rows (ref: cdc_operator.rs:308-328).
-                if not primary_key:
-                    raise ValueError(
-                        f"table {table!r} has CDC files but no primary key; "
-                        "pass primary_keys={table: [pk_cols]} to merge them"
-                    )
-                cdc = cast_ntz_timestamps(spark.read.parquet(*listed.cdc_files))
-                df = apply_cdc(df, cdc, primary_key)
+                df = apply_cdc(df, read_table_files(spark, listed.cdc_files), primary_key)
         if catalog_columns is not None:
             check_schema_drift(df.columns, catalog_columns)
         out = anonymize_table(df, cfg, seed, limit_already_applied=True)

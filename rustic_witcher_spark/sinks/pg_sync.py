@@ -45,7 +45,7 @@ from rustic_witcher_spark.sinks.postgres_ops import (
     setval_sql,
     split_post_import_sql,
 )
-from rustic_witcher_spark.sources.parquet import cast_ntz_timestamps, pin_parquet_confs, list_table_files, prune_load_files
+from rustic_witcher_spark.sources.parquet import list_table_files, read_table_files
 
 
 @dataclass
@@ -144,34 +144,20 @@ def sync_table(
     hitting the database — the reference anonymizes every file it
     ships, both classes.
     """
-    pin_parquet_confs(spark)  # vanilla caller sessions: no TIMESTAMP_NTZ
     cfg = config.table(table)
     qualified = f"{schema}.{table}"
     res = TableSyncResult(table)
     listed = list_table_files(path, mode, start_date, stop_date)
-    loads = prune_load_files(listed.load_files, cfg.keep_num_of_records if cfg else None)
 
-    if loads:
-        df = cast_ntz_timestamps(spark.read.parquet(*loads))
-        if cfg is not None and cfg.keep_num_of_records is not None:
-            df = df.limit(cfg.keep_num_of_records)
+    if listed.load_files:
+        df = read_table_files(spark, listed.load_files, cfg.keep_num_of_records if cfg else None)
         if cfg is not None:
             df = anonymize_table(df, cfg, seed, limit_already_applied=True)
         hooks.write_dataframe(df, qualified, "append")
         res.load_rows_written = True
 
     if listed.cdc_files:
-        # Mirror runner.process_table's guard: with pk=[], latest_by_pk
-        # would window over zero columns and collapse EVERY CDC row to a
-        # single global survivor (silent data loss), and cdc_delete_sql
-        # would emit invalid SQL. CDC upserts require a PK by definition
-        # (ref: rustic-cdc-operator/src/cdc_operator.rs:308-328).
-        if not primary_key:
-            raise ValueError(
-                f"table {table!r} has CDC files but no primary key; "
-                "pass primary_key=[pk_cols] to merge them"
-            )
-        cdc = cast_ntz_timestamps(spark.read.parquet(*listed.cdc_files))
+        cdc = read_table_files(spark, listed.cdc_files)
         data_cols = [c for c in cdc.columns if c not in (OP_COLUMN, TS_COLUMN)]
         # Dedupe to the last writer per PK FIRST, then anonymize the
         # winners (deterministic per-value transforms commute with the
@@ -179,7 +165,8 @@ def sync_table(
         # joining metadata back on the PK is wrong twice over: a PK with
         # several CDC versions cross-products against its metadata rows
         # (stale values can win), and a transformed PK column would no
-        # longer join its own metadata at all.
+        # longer join its own metadata at all. latest_by_pk refuses
+        # pk=[] here, before any staging write or SQL statement.
         staged = latest_by_pk(cdc, primary_key).select(*data_cols, OP_COLUMN)
         if cfg is not None:
             staged = anonymize_table(staged, cfg, seed, limit_already_applied=True)

@@ -19,13 +19,17 @@ union, partition per row-group span); the limit-slice case reads one file.
 
 from __future__ import annotations
 
+import os
 import re
+import weakref
 from dataclasses import dataclass
 from datetime import date, datetime
 from enum import Enum
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 FIRST_LOAD_PREFIX = "LOAD00000001"  # ref: anonymization_dataframe_operator.rs:69
 _DMS_CDC_TS = re.compile(r"^(\d{8})-?(\d{9,})?")  # e.g. 20240115-123456789.parquet
@@ -159,7 +163,9 @@ def pin_parquet_confs(spark: SparkSession) -> None:
     driver's — so these are set at read time, not only in the engine's
     own session factory. Naive parquet timestamps must arrive as
     session-TZ TIMESTAMP (NTZ can't cast to double/long) and render in
-    UTC to match the DuckDB oracles' naive reading. Both confs are
+    UTC to match the DuckDB oracles' naive reading; ns-precision
+    columns (Spark has no TIMESTAMP(NANOS)) arrive as raw long nanos,
+    which ``read_events`` truncates to micros. All three confs are
     runtime-settable and take effect at ACTION time, so there is
     deliberately no save/restore: the returned DataFrames are lazy,
     and the confs must still hold when the caller materializes them.
@@ -175,92 +181,17 @@ def pin_parquet_confs(spark: SparkSession) -> None:
     if spark in _PINNED_SESSIONS:
         return
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     _PINNED_SESSIONS.add(spark)
 
 
 # WeakSet so a stopped/garbage-collected session does not leak; a new
 # SparkSession object (even in the same JVM) re-pins.
-import weakref  # noqa: E402
-
 _PINNED_SESSIONS: "weakref.WeakSet" = weakref.WeakSet()
-_NANOS_PINNED: "weakref.WeakSet" = weakref.WeakSet()
 
 
-def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Read the events table, converting its ns-precision ``ts`` to a
-    microsecond TimestampType column.
-
-    Spark has no nanosecond timestamp type — with
-    ``spark.sql.legacy.parquet.nanosAsLong`` the parquet column arrives
-    as raw long nanos; truncate to micros (DuckDB's TIMESTAMP cast does
-    the same, keeping oracles exact).
-
-    The conf is set at RUNTIME here, not only in the engine's own
-    session factory: callers may hand us an arbitrary (vanilla)
-    SparkSession, and ``nanosAsLong`` is runtime-settable — it is read
-    per-query during parquet schema conversion, not fixed at session
-    creation.
-    """
-    from pyspark.sql import functions as F
-
-    if spark not in _NANOS_PINNED:  # same per-session memo as pin_parquet_confs
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        _NANOS_PINNED.add(spark)
-    # NB: session-wide runtime confs — a host embedding this engine in a
-    # non-UTC session shares the setting for subsequent queries (the
-    # engine's own session factory pins UTC anyway; see helper docstring).
-    pin_parquet_confs(spark)
-    # Schema-only cache (same discipline as queries._READ_SCHEMA_CACHE):
-    # footer inference costs ~60-90 ms per call on this host and the
-    # events path is read by dozens of entries per run. Rows are never
-    # cached — every call builds a fresh scan.
-    key = _stat_key(f"{sf_dir}/events.parquet")
-    schema = _EVENTS_SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        _EVENTS_SCHEMA_CACHE[key] = schema
-    df = spark.read.schema(schema).parquet(f"{sf_dir}/events.parquet")
-    ts_field = schema["ts"].dataType.typeName()
-    if ts_field in ("long", "bigint"):
-        df = df.withColumn("ts", F.timestamp_micros((F.col("ts") / 1000).cast("long")))
-    return _cast_ntz_from_schema(df, schema)
-
-
-# Keyed by (path, mtime_ns, size) — a regenerated events table
-# re-infers instead of silently reading through a stale schema
-# (ADVICE r12); the stat is nearly free.
-_EVENTS_SCHEMA_CACHE: dict[tuple, object] = {}
-
-
-def _stat_key(path: str) -> tuple:
-    """(path, mtime_ns, size) cache key for the schema caches (also
-    used by queries._READ_SCHEMA_CACHE). For directory tables the dir's
-    own stat changes whenever part files are added/replaced (Spark
-    writes fresh files), covering regeneration."""
-    import os as _os
-
-    try:
-        st = _os.stat(path)
-        return (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        return (path, None, None)
-
-
-def _cast_ntz_from_schema(df: DataFrame, schema) -> DataFrame:
-    """cast_ntz_timestamps against an already-known (Python-side)
-    schema — skips the py4j round of ``df.schema`` when the caller
-    holds the StructType, e.g. from the schema caches."""
-    from pyspark.sql import functions as F
-
-    out = df
-    for f in schema.fields:
-        if f.dataType.typeName() == "timestamp_ntz":
-            out = out.withColumn(f.name, F.col(f.name).cast("timestamp"))
-    return out
-
-
-def cast_ntz_timestamps(df: DataFrame) -> DataFrame:
+def cast_ntz_timestamps(df: DataFrame, schema: StructType | None = None) -> DataFrame:
     """Normalize TIMESTAMP_NTZ columns to session-TZ TIMESTAMP.
 
     ``pin_parquet_confs`` disables NTZ *inference*, but parquet written
@@ -269,11 +200,12 @@ def cast_ntz_timestamps(df: DataFrame) -> DataFrame:
     NTZ and breaks every epoch/interval expression downstream
     (NTZ casts to neither long nor double). Under the engine's pinned
     UTC session the cast is wall-clock-identity, so accepting both
-    layouts costs nothing."""
-    from pyspark.sql import functions as F
+    layouts costs nothing.
 
+    A caller already holding ``df``'s schema (e.g. from the schema
+    cache) passes it to skip the py4j round of ``df.schema``."""
     out = df
-    for f in df.schema.fields:
+    for f in (schema or df.schema).fields:
         if f.dataType.typeName() == "timestamp_ntz":
             out = out.withColumn(f.name, F.col(f.name).cast("timestamp"))
     return out
@@ -284,18 +216,69 @@ def read_table_files(
     files: tuple[str, ...],
     keep_num_of_records: int | None = None,
 ) -> DataFrame:
-    """Read a table's file set, honoring the record-reduction slice.
+    """Read a table's file set — the way every input Parquet table enters
+    the engine. Pins the confs (vanilla caller sessions must not get
+    TIMESTAMP_NTZ, ADVICE r04), prunes LOAD files for record reduction,
+    reads, normalizes NTZ columns and applies the record-reduction slice.
 
     The limit compiles to Catalyst GlobalLimit with parquet scan-side
     row pushdown — only the needed leading row groups are decoded
     (the reference's slice pushdown, ref :116-125).
     """
-    pruned = prune_load_files(files, keep_num_of_records)
-    # DMS tables carry the same naive-timestamp layout as the synthetic
-    # tables: pin the defensive confs here too, so a vanilla caller
-    # session doesn't get TIMESTAMP_NTZ (ADVICE r04).
     pin_parquet_confs(spark)
-    df = cast_ntz_timestamps(spark.read.parquet(*pruned))
+    df = cast_ntz_timestamps(spark.read.parquet(*prune_load_files(files, keep_num_of_records)))
     if keep_num_of_records is not None:
         df = df.limit(keep_num_of_records)
+    return df
+
+
+def read_fixed_table(spark: SparkSession, path: str) -> DataFrame:
+    """``read_table_files`` for one fixed-path table that is read again
+    and again (the registry's sf tables), through a schema cache.
+
+    Footer inference costs a py4j round plus a JVM file-listing+footer
+    read (~60-90 ms on this host) per ``spark.read.parquet`` call, and
+    the registry re-reads the same paths hundreds of times per run. The
+    cache holds the inferred SCHEMA only — never rows or plan results:
+    every call still builds a fresh scan. It is keyed by
+    (path, mtime_ns, size), so a table regenerated in-process with a
+    new schema re-infers instead of reading through a stale schema
+    (ADVICE r12); for a directory table the dir's own stat changes
+    whenever part files are added or replaced. A DMS export is a new
+    file set on every run and an ``s3://`` path cannot be stat'ed, so
+    neither belongs here.
+    """
+    schema = _cached_schema(spark, path)
+    return cast_ntz_timestamps(spark.read.schema(schema).parquet(path), schema)
+
+
+def _cached_schema(spark: SparkSession, path: str) -> StructType:
+    pin_parquet_confs(spark)  # the inferred schema depends on the pinned confs
+    try:
+        st = os.stat(path)
+    except OSError:  # no stat, no key that could go stale: infer per read
+        return spark.read.parquet(path).schema
+    key = (path, st.st_mtime_ns, st.st_size)
+    if key not in _SCHEMA_CACHE:
+        _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
+    return _SCHEMA_CACHE[key]
+
+
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
+
+
+def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Read the events table, converting its ns-precision ``ts`` to a
+    microsecond TimestampType column.
+
+    Spark has no nanosecond timestamp type — with
+    ``spark.sql.legacy.parquet.nanosAsLong`` (pinned by
+    ``pin_parquet_confs``) the parquet column arrives as raw long
+    nanos; truncate to micros (DuckDB's TIMESTAMP cast does the same,
+    keeping oracles exact).
+    """
+    path = f"{sf_dir}/events.parquet"
+    df = read_fixed_table(spark, path)
+    if _cached_schema(spark, path)["ts"].dataType.typeName() == "long":
+        df = df.withColumn("ts", F.timestamp_micros((F.col("ts") / 1000).cast("long")))
     return df

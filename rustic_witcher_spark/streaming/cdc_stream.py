@@ -18,8 +18,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from rustic_witcher_spark.operators.cdc import OP_COLUMN, TS_COLUMN, apply_cdc
-from rustic_witcher_spark.sources.parquet import cast_ntz_timestamps
+from rustic_witcher_spark.operators.cdc import apply_cdc
+from rustic_witcher_spark.sources.parquet import read_table_files
 
 
 def _swap_in(tmp: Path, final: Path) -> None:
@@ -67,12 +67,7 @@ def parquet_snapshot_merger(spark: SparkSession, snapshot_path: str, pk: list[st
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         _recover(final)
-        if final.exists():
-            base = cast_ntz_timestamps(spark.read.parquet(str(final)))
-        else:
-            base = batch_df.select(
-                *[c for c in batch_df.columns if c not in (OP_COLUMN, TS_COLUMN)]
-            ).limit(0)
+        base = read_table_files(spark, (str(final),)) if final.exists() else None
         merged = apply_cdc(base, batch_df, pk)
         # materialize BEFORE touching the current snapshot (the merged
         # plan reads it), then swap

@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 
 from rustic_witcher_spark.operators.scd2 import scd2_intervals
 from rustic_witcher_spark.streaming.cdc_stream import _recover, _swap_in
-from rustic_witcher_spark.sources.parquet import cast_ntz_timestamps
+from rustic_witcher_spark.sources.parquet import read_table_files
 
 
 def scd2_merge(
@@ -135,7 +135,7 @@ def scd2_snapshot_merger(
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         _recover(final)
         if final.exists():
-            history = cast_ntz_timestamps(spark.read.parquet(str(final)))
+            history = read_table_files(spark, (str(final),))
             merged = scd2_merge(history, batch_df, key_cols, attr_cols, ts_col, tiebreak_cols)
         else:
             merged = scd2_intervals(

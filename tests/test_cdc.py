@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from rustic_witcher_spark.operators.cdc import apply_cdc, latest_by_pk
@@ -54,6 +55,24 @@ def test_apply_cdc_composite_pk(spark):
     cdc = spark.createDataFrame([(1, "x", 9.0, "U", 1)], ["k1", "k2", "v", "Op", "_dms_ingestion_timestamp"])
     rows = {(r["k1"], r["k2"]): r["v"] for r in apply_cdc(base, cdc, ["k1", "k2"]).collect()}
     assert rows == {(1, "x"): 9.0, (1, "y"): 2.0}
+
+
+def test_empty_primary_key_is_refused(spark):
+    """A window over zero key columns would keep one row of the whole
+    CDC frame; both entry points refuse the empty key instead."""
+    with pytest.raises(ValueError, match="no primary key"):
+        latest_by_pk(_cdc(spark), [])
+    with pytest.raises(ValueError, match="no primary key"):
+        apply_cdc(_base(spark), _cdc(spark), [])
+
+
+def test_apply_cdc_without_base_keeps_surviving_cdc_rows(spark):
+    """base=None (no snapshot yet) equals the merge over an empty base."""
+    empty = _base(spark).limit(0)
+    got = apply_cdc(None, _cdc(spark), ["id"])
+    assert got.columns == ["id", "name", "val"]
+    assert sorted(got.collect()) == sorted(apply_cdc(empty, _cdc(spark), ["id"]).collect())
+    assert {r["id"] for r in got.collect()} == {2, 4}
 
 
 def test_upsert_sql_builder():

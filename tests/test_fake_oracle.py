@@ -43,6 +43,17 @@ def test_multi_email_matches_duckdb(spark, duck):
     assert_same(out, duck, f"SELECT {fake_sql.sql_fake_multi_email('a', SEED)} AS v FROM me")
 
 
+def test_phone_edge_inputs_match_duckdb(spark, duck):
+    """NULL, empty, length-1, digit-free and non-ASCII-digit inputs: only
+    ASCII digits are remapped and strings of length <= 1 are kept."""
+    vals = ["+1 (555) 010-9999", "", "5", "abc", "١٢٣ 12", "0000000000"]
+    df = spark.createDataFrame([(None,)] + [(v,) for v in vals], "a string")
+    rows = ", ".join(["(NULL)"] + [f"('{v}')" for v in vals])
+    duck.execute(f"CREATE OR REPLACE TABLE ph AS SELECT * FROM (VALUES {rows}) t(a)")
+    out = df.select(fake.fake_phone(F.col("a"), SEED).alias("v"))
+    assert_same(out, duck, f"SELECT {fake_sql.sql_fake_phone('a', SEED)} AS v FROM ph")
+
+
 def test_email_with_id_prefix_matches_duckdb(spark, duck, sf_dir):
     df = spark.read.parquet(f"{sf_dir}/customer.parquet")
     out = df.select(fake.fake_email_with_id_prefix(F.col("c_name"), F.col("c_custkey"), SEED).alias("v"))

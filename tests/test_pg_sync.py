@@ -159,7 +159,8 @@ def test_schema_dump_restore_and_sequence_discovery(spark, dms_table):
 def test_cdc_files_without_pk_raise(spark, dms_table):
     """pk=[] + CDC files would window over zero columns and collapse all
     CDC rows to one survivor (silent data loss) and emit invalid delete
-    SQL — sync_table must refuse, mirroring runner.process_table."""
+    SQL — sync_table must refuse through operators.cdc.latest_by_pk's
+    key guard before any CDC statement runs."""
     from datetime import date
 
     from rustic_witcher_spark.sinks.pg_sync import sync_table

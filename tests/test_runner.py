@@ -270,12 +270,16 @@ def test_dateaware_cdc_only_directory(spark, tmp_path):
         {"k": [1, 2, 2], "name": ["a", "b0", "b1"],
          "Op": ["I", "I", "U"], "_dms_ingestion_timestamp": [1, 1, 2]}
     ).to_parquet(d / "20240115-000000001.parquet")
+    j0 = _last_job_id(spark)
     report = snapshot(
         spark, tmp_path / "cdc_only_src", tmp_path / "out_cdconly", load_config_str(DMS_CFG),
         mode="DateAware", start_date=date(2024, 1, 1),
         primary_keys={"accounts": ["k"]},
     )
     assert report.ok, report.results
+    # the CDC files' schema is inferred once (no hand-built empty base
+    # reading them a second time); the other two jobs are the write
+    assert _last_job_id(spark) - j0 == 3
     out = spark.read.parquet(str(tmp_path / "out_cdconly" / "accounts.parquet"))
     rows = {r["k"]: r["name"] for r in out.collect()}
     assert set(rows) == {1, 2} and all(v == "X" for v in rows.values())

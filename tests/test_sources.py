@@ -196,3 +196,29 @@ def test_dynamic_partition_pruning_fires_on_dim_filter(spark, tmp_path, sf_dir):
     assert "dynamicpruningexpression" in plan.lower(), "DPP did not fire"
     expected = ev.filter(F.dayofmonth("day") <= 3).count()
     assert row["n"] == expected
+
+
+def test_schema_cache_rereads_a_rewritten_table(spark, tmp_path):
+    """The fixed-table schema cache keys on (path, mtime_ns, size): a
+    table or events file rewritten with one more column must read back
+    with that column, not through the stale cached schema."""
+    import pandas as pd
+
+    from rustic_witcher_spark.queries import _read
+
+    def write(extra: bool) -> None:
+        t = pd.DataFrame({"id": [1, 2]})
+        ev = pd.DataFrame({"event_id": [1, 2], "ts": pd.to_datetime(["2024-01-01", "2024-01-02"])})
+        if extra:
+            t["extra"] = ev["extra"] = ["a", "b"]
+        t.to_parquet(tmp_path / "t.parquet")
+        ev.to_parquet(tmp_path / "events.parquet")
+
+    write(extra=False)
+    for table in ("t", "events"):
+        assert "extra" not in _read(spark, str(tmp_path), table).columns
+    write(extra=True)
+    for table in ("t", "events"):
+        df = _read(spark, str(tmp_path), table)
+        assert "extra" in df.columns
+        assert sorted(r["extra"] for r in df.collect()) == ["a", "b"]
