@@ -29,6 +29,7 @@ from rustic_witcher_spark.config.loader import load_config
 from rustic_witcher_spark.functions.wordlists import DEFAULT_SEED
 from rustic_witcher_spark.runner import DEFAULT_NUM_OF_BUFFERS, snapshot
 from rustic_witcher_spark.session import get_spark
+from rustic_witcher_spark.sinks.parquet import write_parquet
 from rustic_witcher_spark.sources.parquet import read_table_files
 
 _MODES = {"full-load-only": "FullLoadOnly", "date-aware": "DateAware", "absolute-path": "AbsolutePath"}
@@ -389,10 +390,7 @@ def main(argv: list[str] | None = None) -> int:
         obs = Observation("ingest_bad")
         q = q.observe(obs, F.sum(F.col(CORRUPT_COL).isNotNull().cast("long")).alias("bad"))
         clean = q.filter(f"{CORRUPT_COL} IS NULL").drop(CORRUPT_COL)
-        clean.write.mode("overwrite").parquet(args.target)
-        # explicit schema on the read-back: an all-quarantined input
-        # writes a data-less dir that schema inference would choke on
-        n = spark.read.schema(clean.schema).parquet(args.target).count()
+        n = write_parquet(clean, args.target)
         bad = int(obs.get["bad"] or 0)
         report = {"rows": n, "quarantined": bad, "target": args.target}
         if args.quarantine_target:
@@ -400,7 +398,7 @@ def main(argv: list[str] | None = None) -> int:
             # for replay after an upstream fix. Written unconditionally
             # (overwrite) so a clean rerun CLEARS a previous run's dead
             # letters instead of leaving them to be replayed twice.
-            dead_letters(q).write.mode("overwrite").parquet(args.quarantine_target)
+            write_parquet(dead_letters(q), args.quarantine_target)
             report["quarantine_target"] = args.quarantine_target
         print(json.dumps(report))
         return 0
@@ -419,7 +417,7 @@ def main(argv: list[str] | None = None) -> int:
             # digest group) and land in the shards as ghost documents.
             quarantined = read_jsonl(spark, args.input, TABLE_DDL["documents"], quarantine=True)
             if args.quarantine_target:
-                dead_letters(quarantined).write.mode("overwrite").parquet(args.quarantine_target)
+                write_parquet(dead_letters(quarantined), args.quarantine_target)
             docs = quarantined.filter(f"{CORRUPT_COL} IS NULL").drop(CORRUPT_COL)
         else:
             docs = read_table_files(spark, (args.input,))
@@ -457,7 +455,7 @@ def main(argv: list[str] | None = None) -> int:
         spark = get_spark("split")
         docs = read_table_files(spark, (args.input,))
         labeled = docs.withColumn("split", group_split(F.col(args.group_col), seed=args.seed))
-        labeled.write.mode("overwrite").partitionBy("split").parquet(args.target)
+        write_parquet(labeled, args.target, partition_by=["split"])
         # counts from a read-back of the written partitions: validates the
         # write and keeps the labeling lineage single-pass (same pattern as
         # the shard sink's manifest stats). Explicit schema: a 0-row input
@@ -504,18 +502,12 @@ def main(argv: list[str] | None = None) -> int:
                 args.id_col,
                 "left",
             )
-        # docs_scored rides the write job as an observed metric — no
-        # re-read of the freshly written parquet, no second pass over
-        # the scoring plan (ADVICE r10)
-        from pyspark.sql import Observation
-
-        obs = Observation("lm_score_rows")
-        out.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(args.target)
+        docs_scored = write_parquet(out, args.target)
         print(
             json.dumps(
                 {
                     "target": args.target,
-                    "docs_scored": obs.get["n"],
+                    "docs_scored": docs_scored,
                     "bigram": bool(args.bigram),
                     "top_v": args.top_v,
                 },
@@ -583,7 +575,7 @@ def main(argv: list[str] | None = None) -> int:
                 both, args.id_col, "phash", F.col("__new"), args.max_hamming,
                 materialize_keyed=True,
             )
-            out.write.mode("overwrite").parquet(args.target)
+            write_parquet(out, args.target)
             # explicit schema on read-back: a 0-row batch writes only
             # _SUCCESS, and schema inference would raise (shards.py lesson)
             flagged = spark.read.schema(out.schema).parquet(args.target)
@@ -601,10 +593,9 @@ def main(argv: list[str] | None = None) -> int:
             }
         else:
             pairs = hamming_near_duplicates(hashed, args.id_col, "phash", args.max_hamming)
-            pairs.write.mode("overwrite").parquet(args.target)
             summary = {
                 "mode": "pairs",
-                "pairs": spark.read.schema(pairs.schema).parquet(args.target).count(),
+                "pairs": write_parquet(pairs, args.target),
                 "max_hamming": args.max_hamming,
                 "target": args.target,
             }
@@ -677,7 +668,7 @@ def main(argv: list[str] | None = None) -> int:
         )
         if args.pack_budget > 0:
             out = pack_sequences(out, args.id_col, "n_tokens", args.pack_budget)
-        out.write.mode("overwrite").parquet(args.target)
+        write_parquet(out, args.target)
         result = spark.read.schema(out.schema).parquet(args.target)
         agg = result.agg(
             F.count(F.lit(1)).alias("rows"),
@@ -708,8 +699,7 @@ def main(argv: list[str] | None = None) -> int:
         os.makedirs(args.target, exist_ok=True)
         with open(os.path.join(args.target, "merges.json"), "w") as fh:
             json.dump(merges, fh)
-        sym.write.mode("overwrite").parquet(os.path.join(args.target, "vocab"))
-        vocab_rows = spark.read.schema(sym.schema).parquet(os.path.join(args.target, "vocab")).count()
+        vocab_rows = write_parquet(sym, os.path.join(args.target, "vocab"))
         print(
             json.dumps(
                 {
@@ -773,13 +763,13 @@ def main(argv: list[str] | None = None) -> int:
                 spark, args.index, q, k=args.k, nprobe=args.nprobe,
                 id_col=args.id_col, vec_col=args.vec_col,
             )
-        out.write.mode("overwrite").parquet(args.target)
+        result_rows = write_parquet(out, args.target)
         result = spark.read.schema(out.schema).parquet(args.target)
         print(
             json.dumps(
                 {
                     "target": args.target,
-                    "result_rows": result.count(),
+                    "result_rows": result_rows,
                     "queries": result.select("query_id").distinct().count(),
                     "k": args.k,
                     "nprobe": args.nprobe,
@@ -815,8 +805,7 @@ def main(argv: list[str] | None = None) -> int:
             print(json.dumps({"error": "one-shot mode requires --target"}))
             return 2
         out = novelty_scores(docs, args.text_col, args.id_col, seed=args.seed)
-        out.write.mode("overwrite").parquet(args.target)
-        scored = spark.read.schema(out.schema).parquet(args.target).count()
+        scored = write_parquet(out, args.target)
         print(json.dumps({"mode": "one-shot", "target": args.target, "scored_docs": scored}, sort_keys=True))
         return 0
     if args.command == "containment-dedup":
@@ -830,8 +819,7 @@ def main(argv: list[str] | None = None) -> int:
             seed=args.seed,
             max_posting=args.max_posting,
         )
-        out.write.mode("overwrite").parquet(args.target)
-        pairs = spark.read.schema(out.schema).parquet(args.target).count()
+        pairs = write_parquet(out, args.target)
         print(json.dumps({"target": args.target, "flagged_pairs": pairs,
                           "max_posting": args.max_posting}, sort_keys=True))
         return 0
@@ -851,13 +839,12 @@ def main(argv: list[str] | None = None) -> int:
             pool=args.pool,
             topk=args.k,
         )
-        out.write.mode("overwrite").parquet(args.target)
-        result = spark.read.schema(out.schema).parquet(args.target)
+        result_rows = write_parquet(out, args.target)
         print(
             json.dumps(
                 {
                     "target": args.target,
-                    "result_rows": result.count(),
+                    "result_rows": result_rows,
                     "anchors": len(anchor_ids),
                     "pool": args.pool,
                     "k": args.k,

@@ -24,8 +24,7 @@ from dataclasses import dataclass, field
 from datetime import date
 from pathlib import Path
 
-from pyspark.sql import Observation, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from rustic_witcher_spark.config.model import AnonymizationConfig, TableConfig
 from rustic_witcher_spark.functions.wordlists import DEFAULT_SEED
@@ -138,11 +137,7 @@ def process_table(
         if catalog_columns is not None:
             check_schema_drift(df.columns, catalog_columns)
         out = anonymize_table(df, cfg, seed, limit_already_applied=True)
-        # the row count rides the write job: a count() afterwards would
-        # re-run the whole scan → merge → transform chain
-        rows = Observation()
-        out = out.observe(rows, F.count(F.lit(1)).alias("n"))
-        write_parquet(out, str(out_path), target_files=1 if path.is_file() else None)
+        rows = write_parquet(out, str(out_path), target_files=1 if path.is_file() else None)
         upload_dir = anonymized_upload_dir()
         if upload_dir is not None:
             upload_dir.mkdir(parents=True, exist_ok=True)
@@ -151,7 +146,7 @@ def process_table(
                 shutil.copytree(out_path, dest, dirs_exist_ok=True)
             else:
                 shutil.copyfile(out_path, dest)
-        return TableResult(table, "anonymized", rows=rows.get["n"], files_read=len(files))
+        return TableResult(table, "anonymized", rows=rows, files_read=len(files))
     except Exception as e:  # noqa: BLE001 - per-table isolation, reported upward
         return TableResult(table, "error", error=f"{type(e).__name__}: {e}")
 

@@ -34,10 +34,11 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rustic_witcher_spark.operators import pq
+from rustic_witcher_spark.sinks.parquet import write_parquet
 from rustic_witcher_spark.streaming.replay_meta import load_meta, store_meta
 
 META_NAME = "_ann_delta_meta.json"
@@ -110,12 +111,7 @@ def ann_index_append_batch(
             ).select(id_col, "cid")
             codes = codes.join(lists, id_col)
     batch_dir = os.path.join(delta_path, "data", f"batch={batch_id}")
-    # appended-row count rides the write job as an observed metric —
-    # the read-back count() was a whole extra job per micro-batch
-    # (novelty r11 rework, applied family-wide)
-    obs = Observation(f"ann_append_{batch_id}")
-    codes.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(batch_dir)
-    appended = int(obs.get["n"])
+    appended = write_parquet(codes, batch_dir)
     meta["last_batch_id"] = batch_id
     meta["indexed_rows"] = meta.get("indexed_rows", 0) + appended
     _store_meta(delta_path, meta)

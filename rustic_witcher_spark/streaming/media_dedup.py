@@ -31,12 +31,13 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rustic_witcher_spark.operators.dedup import incremental_hamming_flags
 from rustic_witcher_spark.operators.multimodal import attach_perceptual_hash
+from rustic_witcher_spark.sinks.parquet import write_parquet
 from rustic_witcher_spark.streaming.replay_meta import load_meta, store_meta
 
 META_NAME = "_media_index_meta.json"
@@ -109,12 +110,7 @@ def media_index_append_batch(
             .drop("__rn")
         )
         batch_dir = os.path.join(data_dir, f"batch={batch_id}")
-        # appended-row count rides the write job as an observed metric —
-        # the read-back count() was a whole extra job per micro-batch
-        # (novelty r11 rework, applied family-wide)
-        obs = Observation(f"media_append_{batch_id}")
-        fresh.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(batch_dir)
-        appended = int(obs.get["n"])
+        appended = write_parquet(fresh, batch_dir)
     finally:
         hashed.unpersist()
     meta["last_batch_id"] = batch_id

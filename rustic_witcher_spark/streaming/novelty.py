@@ -36,11 +36,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rustic_witcher_spark.functions.wordlists import DEFAULT_SEED
 from rustic_witcher_spark.operators.dedup import word_shingle_hashes
+from rustic_witcher_spark.sinks.parquet import write_parquet
 from rustic_witcher_spark.streaming.replay_meta import load_meta, store_meta
 
 META_NAME = "_novelty_index_meta.json"
@@ -116,9 +117,7 @@ def novelty_append_batch(
             .select("g", "first_doc")
         )
         batch_dir = os.path.join(data_dir, f"batch={batch_id}")
-        obs = Observation(f"novelty_append_{batch_id}")
-        fresh.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(batch_dir)
-        appended = int(obs.get["n"])
+        appended = write_parquet(fresh, batch_dir)
 
         novel_counts = (
             spark.read.schema(_IDX_SCHEMA).parquet(batch_dir)

@@ -1,6 +1,6 @@
 """Shared replay-cursor metadata protocol for the streaming appenders
-(`media_dedup`, `ann_stream`; the shard appender's manifest carries
-extra per-shard state but uses the same atomic-write rule).
+(`media_dedup`, `ann_stream`, `novelty`, and `shard_stream`, whose
+manifest carries extra per-shard state in the same file).
 
 One JSON file per index/delta dir records ``last_batch_id`` (the
 replay cursor) plus appender-specific counters. The write is
@@ -28,7 +28,9 @@ def load_meta(path: str, name: str, defaults: dict | None = None) -> dict:
 
 
 def store_meta(path: str, name: str, meta: dict) -> None:
-    """Atomically (tmp + rename) persist the meta dict."""
+    """Atomically (tmp + rename) persist the meta dict. Creates ``path``:
+    an empty first micro-batch writes no data, so the meta may be the
+    directory's first file."""
     os.makedirs(path, exist_ok=True)
     tmp = os.path.join(path, name + ".tmp")
     with open(tmp, "w") as fh:

@@ -34,13 +34,11 @@ sink into a fresh directory.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame
 
 from rustic_witcher_spark.operators.packing import training_shards
 from rustic_witcher_spark.sinks.shards import MANIFEST_NAME, _DIGEST_MOD, _shard_stats
+from rustic_witcher_spark.streaming.replay_meta import load_meta, store_meta
 
 
 def _empty_manifest(id_col: str, n_shards: int, seed: int) -> dict:
@@ -54,31 +52,11 @@ def _empty_manifest(id_col: str, n_shards: int, seed: int) -> dict:
     }
 
 
-def _load_manifest(path: str, id_col: str, n_shards: int, seed: int) -> dict:
-    try:
-        with open(os.path.join(path, MANIFEST_NAME)) as fh:
-            return json.load(fh)
-    except FileNotFoundError:
-        return _empty_manifest(id_col, n_shards, seed)
-
-
-def _store_manifest(path: str, manifest: dict) -> None:
-    # tmp + rename: a reader (or verify) never sees a half-written file.
-    # makedirs: an EMPTY first micro-batch writes no parquet, so the
-    # manifest may be the directory's first file (property-test find).
-    os.makedirs(path, exist_ok=True)
-    target = os.path.join(path, MANIFEST_NAME)
-    tmp = target + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
-    os.replace(tmp, target)
-
-
 def shard_append_batch(batch_df: DataFrame, batch_id: int, id_col: str, n_shards: int, path: str, seed: int = 42) -> bool:
     """Append one micro-batch into the shard layout and merge its stats
     into the manifest. Returns False when the batch was a replay (or
     empty) and nothing was written."""
-    manifest = _load_manifest(path, id_col, n_shards, seed)
+    manifest = load_meta(path, MANIFEST_NAME, _empty_manifest(id_col, n_shards, seed))
     got = (manifest["id_col"], manifest["n_shards"], manifest["seed"])
     if got != (id_col, n_shards, seed):
         # fail FAST: appending with a different layout config would hash
@@ -111,7 +89,7 @@ def shard_append_batch(batch_df: DataFrame, batch_id: int, id_col: str, n_shards
         }
     manifest["total_rows"] = sum(s["n_rows"] for s in manifest["shards"].values())
     manifest["last_batch_id"] = batch_id
-    _store_manifest(path, manifest)
+    store_meta(path, MANIFEST_NAME, manifest)
     return bool(batch_stats)
 
 

@@ -42,8 +42,9 @@ def sf_dir():
 # shuffle-partition pin is refcounted (queries._pinned_shuffle_
 # partitions — same-valued pins share, different-valued pins wait),
 # memory-sink names are unique per entry, every entry's scratch space
-# is its own mkdtemp parent, and shuffle-partition count never changes
-# results (pinned by the partition-invariance tests).
+# is its own mkdtemp parent (queries._fresh_workdir's per-entry tag),
+# and shuffle-partition count never changes results (pinned by the
+# partition-invariance tests).
 SWEEP_SERIAL_SUFFIXES = ()
 SWEEP_SERIAL_NAMES = {
     "pq_index_query", "pq_rerank_query", "pq_residual_query",

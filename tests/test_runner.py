@@ -12,6 +12,7 @@ import pytest
 
 from rustic_witcher_spark.config.loader import load_config_str
 from rustic_witcher_spark.runner import process_table, snapshot
+from rustic_witcher_spark.sinks.parquet import write_parquet
 
 CFG = """
 [[tables]]
@@ -72,6 +73,41 @@ def _last_job_id(spark) -> int:
     # jobs that already ran are all visible
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return max(sc.statusTracker().getJobIdsForGroup(None) or [-1])
+
+
+def test_write_parquet_returns_rows_written(spark, tmp_path):
+    """The sink reports the rows it wrote from the write job itself —
+    exact for empty, all-filtered and partitioned writes, one job each."""
+    empty = spark.createDataFrame([], "id long, g string")
+    df = spark.range(100).selectExpr("id", "cast(id % 3 AS string) AS g")
+    for name, frame, kw, want in (
+        ("empty", empty, {}, 0),
+        ("filtered", df.filter("id < 0"), {}, 0),
+        ("parts", df, {"partition_by": ["g"]}, 100),
+    ):
+        j0 = _last_job_id(spark)
+        assert write_parquet(frame, str(tmp_path / name), **kw) == want, name
+        assert _last_job_id(spark) - j0 == 1, name
+    assert spark.read.parquet(str(tmp_path / "parts")).count() == 100
+
+
+def test_cli_count_only_command_reads_nothing_back(spark, tmp_path, capsys):
+    """novelty one-shot reports the rows the write produced; re-reading
+    the target for a count() would cost two more jobs."""
+    from rustic_witcher_spark import cli
+
+    docs = spark.createDataFrame(
+        [(0, "alpha beta gamma delta epsilon"), (1, "alpha beta gamma delta epsilon"),
+         (2, "completely different words here now")],
+        "doc_id long, text string",
+    )
+    src = str(tmp_path / "docs.parquet")
+    docs.write.parquet(src)
+    j0 = _last_job_id(spark)
+    assert cli.main(["novelty", "--input", src, "--target", str(tmp_path / "scores")]) == 0
+    assert _last_job_id(spark) - j0 == 6
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep["scored_docs"] == 3
 
 
 def test_process_table_runs_pipeline_once(spark, src, tmp_path):
