@@ -779,25 +779,19 @@ def main(argv: list[str] | None = None) -> int:
         )
         return 0
     if args.command == "novelty":
-        from pyspark.sql import functions as F
-
         from rustic_witcher_spark.operators.dedup import novelty_scores
 
         spark = get_spark("novelty")
         docs = read_table_files(spark, (args.input,))
         if args.index:
-            from rustic_witcher_spark.streaming.novelty import (
-                META_NAME,
-                novelty_append_batch,
-                read_novelty_scores,
-            )
+            from rustic_witcher_spark.streaming.novelty import META_NAME, novelty_append_batch
             from rustic_witcher_spark.streaming.replay_meta import load_meta
 
             batch_id = load_meta(args.index, META_NAME).get("last_batch_id", -1) + 1
             ran = novelty_append_batch(
                 docs, batch_id, args.index, text_col=args.text_col, id_col=args.id_col, seed=args.seed
             )
-            n = read_novelty_scores(spark, args.index).filter(F.col("batch") == batch_id).count()
+            n = load_meta(args.index, META_NAME)["last_scored_docs"]
             print(json.dumps({"mode": "incremental", "index": args.index, "batch": batch_id,
                               "ran": ran, "scored_docs": n}, sort_keys=True))
             return 0

@@ -204,8 +204,9 @@ def _word_shingle_hashes_build(col: Column, seed: int) -> Column:
     return F.when(F.size(toks) >= 3, grams).otherwise(F.array(hash64(norm, seed, "mh") % MERSENNE_31))
 
 
-def minhash_signature(col: Column, num_perm: int = 64, n: int = 3, seed: int = DEFAULT_SEED) -> Column:
-    """MinHash signature as array<bigint>.
+def minhash_signature(col: Column, num_perm: int = 64, seed: int = DEFAULT_SEED) -> Column:
+    """MinHash signature as array<bigint> over the word 3-gram hashes
+    of ``word_shingle_hashes``.
 
     ONE md5 per token (gram hashes combined arithmetically), then
     ``num_perm`` cheap modular permutations (a·h+b mod M31) — instead of
@@ -214,11 +215,11 @@ def minhash_signature(col: Column, num_perm: int = 64, n: int = 3, seed: int = D
     no shuffle. Memoized per (input, params) — see ``_memo_column``.
     """
     return _memo_column(
-        (str(col), "minhash", num_perm, n, seed), lambda: _minhash_signature_build(col, num_perm, n, seed)
+        (str(col), "minhash", num_perm, seed), lambda: _minhash_signature_build(col, num_perm, seed)
     )
 
 
-def _minhash_signature_build(col: Column, num_perm: int, n: int, seed: int) -> Column:
+def _minhash_signature_build(col: Column, num_perm: int, seed: int) -> Column:
     def perm_fn(a: int, b: int):
         # factory, not default-arg lambda: PySpark reads lambda arity
         return lambda h: (F.lit(a) * h + F.lit(b)) % MERSENNE_31
@@ -243,7 +244,6 @@ def minhash_lsh_candidates(
     id_col: str,
     num_perm: int = 64,
     bands: int = 16,
-    n: int = 3,
     seed: int = DEFAULT_SEED,
     max_bucket_size: int = 2048,
 ) -> DataFrame:
@@ -273,7 +273,7 @@ def minhash_lsh_candidates(
     # unnest(NULL) removes them (r9 dirty-corpus fuzz finding).
     df = df.filter(F.col(text_col).isNotNull())
     rows_per_band = num_perm // bands
-    sig = minhash_signature(F.col(text_col), num_perm, n, seed)
+    sig = minhash_signature(F.col(text_col), num_perm, seed)
     banded = df.select(
         F.col(id_col).alias("__id"),
         sig.alias("__sig"),
@@ -585,7 +585,6 @@ def incremental_dedup_flags(
     is_new: Column,
     num_perm: int = 32,
     bands: int = 8,
-    n: int = 3,
     seed: int = DEFAULT_SEED,
     materialize_keyed: bool = False,
 ) -> DataFrame:
@@ -615,7 +614,7 @@ def incremental_dedup_flags(
     scan of the new batch plus two index joins.
     """
     digest = F.md5(normalized_text(F.col(text_col)))
-    sig = minhash_signature(F.col(text_col), num_perm, n, seed)
+    sig = minhash_signature(F.col(text_col), num_perm, seed)
     rows_per_band = num_perm // bands
     band_arr = F.array(*[
         F.struct(
@@ -679,7 +678,6 @@ def lsh_calibration(
     id_col: str,
     num_perm: int = 32,
     bands: int = 8,
-    n: int = 3,
     seed: int = DEFAULT_SEED,
 ) -> DataFrame:
     """Per-candidate-pair MinHash estimation error — the tuning signal
@@ -689,13 +687,13 @@ def lsh_calibration(
 
     For every banding candidate pair: ``est_jaccard`` (signature
     agreement) vs ``exact_jaccard`` (true Jaccard over the DISTINCT
-    word-n-gram hash sets — the exact quantity MinHash estimates) and
+    word-3-gram hash sets — the exact quantity MinHash estimates) and
     ``abs_err``. Scale shape: same single (band, bhash) shuffle as
     ``minhash_lsh_candidates``; the exact-Jaccard join ships the
     distinct gram-hash arrays (ints), not texts.
     """
     cands = minhash_lsh_candidates(
-        df, text_col, id_col, num_perm=num_perm, bands=bands, n=n, seed=seed, max_bucket_size=1 << 40
+        df, text_col, id_col, num_perm=num_perm, bands=bands, seed=seed, max_bucket_size=1 << 40
     )
     grams = df.select(
         F.col(id_col).alias("__gid"),

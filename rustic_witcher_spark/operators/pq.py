@@ -27,7 +27,7 @@ Design notes for the 100 TB shape:
 - ADC scoring ships the per-query lookup tables (LUT) to executors via
   ONE torrent broadcast and fancy-indexes the code matrix per Arrow
   batch (numpy kernel) — no shuffle of the corpus, |queries| x k rows
-  out of each batch, map-side reducible exactly like
+  out of each batch, through the same block kernel as
   ``similarity.brute_force_topk_block``.
 - The cosine decomposes cleanly over subspaces: dot(q, recon(c)) =
   SUM_m dot(q_m, codeword_{m,code_m}) and |recon(c)|^2 =
@@ -46,7 +46,17 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from rustic_witcher_spark.functions.wordlists import DEFAULT_SEED
-from rustic_witcher_spark.operators.similarity import _round_half_away, cosine, dot
+from rustic_witcher_spark.operators.similarity import (
+    _block_topk,
+    _empty_top_k,
+    _exact_top_k,
+    _query_block,
+    _rank_top_k,
+    _round_half_away,
+    cosine,
+    dot,
+)
+from rustic_witcher_spark.streaming.replay_meta import load_meta, store_meta
 
 # persisted layout of <index>/_codebooks (see pq_write_index)
 CODEBOOK_SCHEMA = "m int, cid int, cvec array<double>"
@@ -252,8 +262,7 @@ def pq_adc_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", F.round(cosine(F.col("__qv"), F.col("__rv")), 6).alias("sim"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _rank_top_k(scored, k)
 
 
 def _collect_codebooks(codebooks: DataFrame):
@@ -262,6 +271,48 @@ def _collect_codebooks(codebooks: DataFrame):
     import numpy as np
 
     return {(r["m"], r["cid"]): np.asarray(r["cvec"], dtype=np.float64) for r in codebooks.collect()}
+
+
+def _codeword_tables(cb: dict, n_subspaces: int, d_sub: int):
+    """Dense (m, cid) tables of a collected codebook: n2 = |codeword|²
+    and cw = the codewords. Unused slots stay NaN and can never be
+    referenced — codes only ever point at surviving codewords."""
+    import numpy as np
+
+    max_cid = max(c for _, c in cb)
+    n2 = np.full((n_subspaces, max_cid + 1), np.nan)
+    cw = np.full((n_subspaces, max_cid + 1, d_sub), np.nan)
+    for (m, cid), v in cb.items():
+        cw[m, cid] = v
+        n2[m, cid] = float(np.dot(v, v))
+    return n2, cw
+
+
+def _probe_allowed(q_ids, probe_map: dict | None):
+    """allowed[qi, coarse_cid] from {query_id: probed list ids} — tiny
+    (|queries| x n_lists); None when there is no probe map."""
+    import numpy as np
+
+    if probe_map is None:
+        return None
+    n_lists = 1 + max((c for cids in probe_map.values() for c in cids), default=0)
+    allowed = np.zeros((len(q_ids), n_lists), dtype=bool)
+    for qi, qid in enumerate(q_ids):
+        for c in probe_map.get(int(qid), ()):
+            allowed[qi, c] = True
+    return allowed
+
+
+def _mask_to_probes(sims, allowed, cids):
+    """-inf every candidate outside its query's probed lists — the
+    compute-side complement of the partition pruning that already
+    restricted the SCAN to the union of probed lists."""
+    import numpy as np
+
+    in_range = cids < allowed.shape[1]
+    mask = np.zeros((allowed.shape[0], len(cids)), dtype=bool)
+    mask[:, in_range] = allowed[:, cids[in_range]]
+    return np.where(mask, sims, -np.inf)
 
 
 def pq_adc_topk_block(
@@ -280,19 +331,15 @@ def pq_adc_topk_block(
 
     Driver collects only the codebook (KBs) and the bounded query set;
     per query it precomputes the LUT ip[q][m][code] = dot(q_m, codeword)
-    and the shared norm table n2[m][code] = |codeword|^2, broadcasts
-    them ONCE (torrent, per-executor), and the mapInPandas kernel scores
-    a whole Arrow batch of codes with two fancy-index sums — never
-    touching float vectors, never shuffling the corpus. Per-batch top-k
-    per query (bounded rows out), then one window over the k-per-batch
-    candidates — the brute_force_topk_block reduction shape.
+    and the shared norm table n2[m][code] = |codeword|^2, and the
+    ``similarity._block_topk`` kernel scores a whole Arrow batch of
+    codes with two fancy-index sums — never touching float vectors,
+    never shuffling the corpus.
 
     Output contract matches :func:`pq_adc_topk` on clean vectors
     (pinned by test): ADC sums per-subspace partials where the HOF twin
     dots the reconstruction in one pass — algebraically identical,
     float-order near-identical, and both round half-away to 6 dp.
-    Dirty-data policy as the other block kernels: NULL / zero-norm /
-    NaN queries are dropped at the kernel boundary.
 
     ``probe_map`` (used by the persisted IVF-PQ path): {query_id:
     iterable of coarse list ids this query probes}; ``cid_col`` names
@@ -303,76 +350,33 @@ def pq_adc_topk_block(
     """
     import numpy as np
 
-    spark = corpus_codes.sparkSession
-    out_ddl = "query_id long, neighbor_id long, sim double"
     cb = _collect_codebooks(codebooks)
-    qpdf = queries.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col).toPandas()
-    if qpdf.empty or not cb:
-        return spark.createDataFrame([], out_ddl + ", rank int")
+    q = _query_block(queries, id_col, vec_col)
+    if q is None or not cb:
+        return _empty_top_k(corpus_codes.sparkSession)
+    q_ids, q_mat, q_norm = q
     d_sub = dim // n_subspaces
-    max_cid = max(c for _, c in cb)
-    # dense (m, cid) tables; unused slots stay NaN and can never be
-    # referenced — codes only ever point at surviving codewords
-    n2 = np.full((n_subspaces, max_cid + 1), np.nan)
-    cw = np.full((n_subspaces, max_cid + 1, d_sub), np.nan)
-    for (m, cid), v in cb.items():
-        cw[m, cid] = v
-        n2[m, cid] = float(np.dot(v, v))
-    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-    q_mat = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf[vec_col]])
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    keep_q = np.isfinite(q_norm) & (q_norm > 0.0)
-    q_ids, q_mat, q_norm = q_ids[keep_q], q_mat[keep_q], q_norm[keep_q]
-    if not len(q_ids):
-        return spark.createDataFrame([], out_ddl + ", rank int")
+    n2, cw = _codeword_tables(cb, n_subspaces, d_sub)
     # LUT: ip[qi, m, cid] = dot(q_m, codeword_{m,cid})
     lut = np.einsum("qmd,mcd->qmc", q_mat.reshape(len(q_ids), n_subspaces, d_sub), cw)
-    # probe mask: allowed[qi, coarse_cid] — tiny (|queries| x n_lists)
-    allowed = None
-    if probe_map is not None:
-        n_lists = 1 + max((c for cids in probe_map.values() for c in cids), default=0)
-        allowed = np.zeros((len(q_ids), n_lists), dtype=bool)
-        for qi, qid in enumerate(q_ids):
-            for c in probe_map.get(int(qid), ()):
-                allowed[qi, c] = True
-    b = spark.sparkContext.broadcast((q_ids, q_norm, lut, n2, allowed))
-    sel_cols = [id_col, "codes"] + ([cid_col] if cid_col else [])
 
-    def score(batches):
-        import pandas as pd
-
-        q_ids, q_norm, lut, n2, allowed = b.value
+    def score(p, pdf):
+        q_ids, q_norm, lut, n2, allowed = p
+        pdf = pdf[pdf["codes"].notna()]
+        if pdf.empty:
+            return None
         m_idx = np.arange(lut.shape[1])
-        for pdf in batches:
-            pdf = pdf[pdf["codes"].notna()]
-            if pdf.empty:
-                continue
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            codes = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
-            ip = lut[:, m_idx, codes].sum(axis=2)  # [Q, B]
-            cnorm = np.sqrt(n2[m_idx, codes].sum(axis=1))  # [B]
-            sims = _round_half_away(ip / (q_norm[:, None] * cnorm[None, :]))
-            sims = np.where((q_ids[:, None] != c_ids[None, :]) & np.isfinite(sims), sims, -np.inf)
-            if allowed is not None:
-                batch_cids = pdf[cid_col].to_numpy(dtype=np.int64)
-                in_range = batch_cids < allowed.shape[1]
-                mask = np.zeros((len(q_ids), len(batch_cids)), dtype=bool)
-                mask[:, in_range] = allowed[:, batch_cids[in_range]]
-                sims = np.where(mask, sims, -np.inf)
-            rows = []
-            kk = min(k, sims.shape[1])
-            for qi in range(len(q_ids)):
-                row = sims[qi]
-                order = np.lexsort((c_ids, -row))[:kk]
-                for ci in order:
-                    if np.isfinite(row[ci]):
-                        rows.append((q_ids[qi], c_ids[ci], row[ci]))
-            if rows:
-                yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "sim"])
+        codes = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
+        ip = lut[:, m_idx, codes].sum(axis=2)  # [Q, B]
+        cnorm = np.sqrt(n2[m_idx, codes].sum(axis=1))  # [B]
+        sims = _round_half_away(ip / (q_norm[:, None] * cnorm[None, :]))
+        if allowed is not None:
+            sims = _mask_to_probes(sims, allowed, pdf[cid_col].to_numpy(dtype=np.int64))
+        return q_ids, pdf[id_col].to_numpy(dtype=np.int64), sims
 
-    per_batch = corpus_codes.select(*sel_cols).mapInPandas(score, out_ddl)
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return per_batch.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    payload = (q_ids, q_norm, lut, n2, _probe_allowed(q_ids, probe_map))
+    sel_cols = [id_col, "codes"] + ([cid_col] if cid_col else [])
+    return _block_topk(corpus_codes.select(*sel_cols), payload, score, k)
 
 
 def pq_residual_adc_topk_block(
@@ -407,19 +411,13 @@ def pq_residual_adc_topk_block(
     centroid)."""
     import numpy as np
 
-    spark = corpus_codes.sparkSession
-    out_ddl = "query_id long, neighbor_id long, sim double"
     cb = _collect_codebooks(codebooks)
-    qpdf = queries.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col).toPandas()
-    if qpdf.empty or not cb or not centroid_rows:
-        return spark.createDataFrame([], out_ddl + ", rank int")
+    q = _query_block(queries, id_col, vec_col)
+    if q is None or not cb or not centroid_rows:
+        return _empty_top_k(corpus_codes.sparkSession)
+    q_ids, q_mat, q_norm = q
     d_sub = dim // n_subspaces
-    max_code = max(c for _, c in cb)
-    n2 = np.full((n_subspaces, max_code + 1), np.nan)
-    cw = np.full((n_subspaces, max_code + 1, d_sub), np.nan)
-    for (m, cid), v in cb.items():
-        cw[m, cid] = v
-        n2[m, cid] = float(np.dot(v, v))
+    n2, cw = _codeword_tables(cb, n_subspaces, d_sub)
     crows = sorted(centroid_rows, key=lambda r: int(r["cid"]))
     max_ccid = max(int(r["cid"]) for r in crows)
     co = np.full((max_ccid + 1, dim), np.nan)
@@ -431,90 +429,39 @@ def pq_residual_adc_topk_block(
     # cross[cid, m, code] = dot(centroid subvector m, codeword)
     co_sub = np.nan_to_num(co).reshape(max_ccid + 1, n_subspaces, d_sub)
     cross = np.einsum("cmd,mkd->cmk", co_sub, np.nan_to_num(cw))
-    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-    q_mat = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf[vec_col]])
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    keep_q = np.isfinite(q_norm) & (q_norm > 0.0)
-    q_ids, q_mat, q_norm = q_ids[keep_q], q_mat[keep_q], q_norm[keep_q]
-    if not len(q_ids):
-        return spark.createDataFrame([], out_ddl + ", rank int")
     lut = np.einsum("qmd,mcd->qmc", q_mat.reshape(len(q_ids), n_subspaces, d_sub), cw)
     t_ip = q_mat @ np.nan_to_num(co).T  # [Q, lists]
-    allowed = None
-    if probe_map is not None:
-        n_lists = 1 + max([max_ccid] + [c for cids in probe_map.values() for c in cids])
-        allowed = np.zeros((len(q_ids), n_lists), dtype=bool)
-        for qi, qid in enumerate(q_ids):
-            for c in probe_map.get(int(qid), ()):
-                allowed[qi, c] = True
-    b = spark.sparkContext.broadcast((q_ids, q_norm, lut, n2, t_ip, co_n2, cross, allowed))
 
-    def score(batches):
-        import pandas as pd
-
-        q_ids, q_norm, lut, n2, t_ip, co_n2, cross, allowed = b.value
+    def score(p, pdf):
+        q_ids, q_norm, lut, n2, t_ip, co_n2, cross, allowed = p
+        pdf = pdf[pdf["codes"].notna() & pdf[cid_col].notna()]
+        if pdf.empty:
+            return None
         m_idx = np.arange(lut.shape[1])
-        for pdf in batches:
-            pdf = pdf[pdf["codes"].notna() & pdf[cid_col].notna()]
-            if pdf.empty:
-                continue
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            codes = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
-            bc = pdf[cid_col].to_numpy(dtype=np.int64)
-            ip = t_ip[:, bc] + lut[:, m_idx, codes].sum(axis=2)  # [Q, B]
-            n2tot = (
-                co_n2[bc]
-                + 2.0 * cross[bc[:, None], m_idx[None, :], codes].sum(axis=1)
-                + n2[m_idx, codes].sum(axis=1)
-            )  # [B]
-            sims = _round_half_away(ip / (q_norm[:, None] * np.sqrt(n2tot)[None, :]))
-            sims = np.where((q_ids[:, None] != c_ids[None, :]) & np.isfinite(sims), sims, -np.inf)
-            if allowed is not None:
-                in_range = bc < allowed.shape[1]
-                mask = np.zeros((len(q_ids), len(bc)), dtype=bool)
-                mask[:, in_range] = allowed[:, bc[in_range]]
-                sims = np.where(mask, sims, -np.inf)
-            rows = []
-            kk = min(k, sims.shape[1])
-            for qi in range(len(q_ids)):
-                row = sims[qi]
-                order = np.lexsort((c_ids, -row))[:kk]
-                for ci in order:
-                    if np.isfinite(row[ci]):
-                        rows.append((q_ids[qi], c_ids[ci], row[ci]))
-            if rows:
-                yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "sim"])
+        codes = np.stack([np.asarray(c, dtype=np.int64) for c in pdf["codes"]])
+        bc = pdf[cid_col].to_numpy(dtype=np.int64)
+        ip = t_ip[:, bc] + lut[:, m_idx, codes].sum(axis=2)  # [Q, B]
+        n2tot = (
+            co_n2[bc]
+            + 2.0 * cross[bc[:, None], m_idx[None, :], codes].sum(axis=1)
+            + n2[m_idx, codes].sum(axis=1)
+        )  # [B]
+        sims = _round_half_away(ip / (q_norm[:, None] * np.sqrt(n2tot)[None, :]))
+        if allowed is not None:
+            sims = _mask_to_probes(sims, allowed, bc)
+        return q_ids, pdf[id_col].to_numpy(dtype=np.int64), sims
 
-    per_batch = corpus_codes.select(id_col, "codes", cid_col).mapInPandas(score, out_ddl)
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return per_batch.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    payload = (q_ids, q_norm, lut, n2, t_ip, co_n2, cross, _probe_allowed(q_ids, probe_map))
+    return _block_topk(corpus_codes.select(id_col, "codes", cid_col), payload, score, k)
 
 
 INDEX_META_NAME = "_index_meta.json"
 
 
-def _write_index_meta(path: str, meta: dict) -> None:
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, INDEX_META_NAME + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, os.path.join(path, INDEX_META_NAME))
-
-
 def read_index_meta(path: str) -> dict:
     """Index-level metadata ({} for pre-r10 indexes — absence means a
     plain raw-vector quantization, so old layouts keep working)."""
-    import json
-    import os
-
-    p = os.path.join(path, INDEX_META_NAME)
-    if not os.path.exists(p):
-        return {}
-    with open(p) as fh:
-        return json.load(fh)
+    return load_meta(path, INDEX_META_NAME, {})
 
 
 def index_is_residual(path: str) -> bool:
@@ -600,7 +547,7 @@ def pq_write_index(
         codes.join(res.select(id_col, "cid"), id_col).write.mode("overwrite").partitionBy(
             "cid"
         ).parquet(f"{path}/codes")
-        _write_index_meta(path, {"residual": True})
+        store_meta(path, INDEX_META_NAME, {"residual": True})
         return
     cb = pq_codebooks(corpus, n_subspaces, n_codes, dim, id_col, vec_col, seed, iters)
     cb.write.mode("overwrite").parquet(f"{path}/_codebooks")
@@ -618,7 +565,7 @@ def pq_write_index(
         codes.join(lists, id_col).write.mode("overwrite").partitionBy("cid").parquet(f"{path}/codes")
     else:
         codes.write.mode("overwrite").parquet(f"{path}/codes")
-    _write_index_meta(path, {"residual": False})
+    store_meta(path, INDEX_META_NAME, {"residual": False})
 
 
 def codebook_df(spark, path: str) -> DataFrame:
@@ -682,7 +629,7 @@ def pq_query_index(
     if n_subspaces is None or dim is None:
         cb, inferred_m, inferred_dim = codebook_geometry(spark, path)
         if inferred_m == 0:  # empty codebook -> empty index -> empty result
-            return spark.createDataFrame([], "query_id long, neighbor_id long, sim double, rank int")
+            return _empty_top_k(spark)
         n_subspaces = n_subspaces or inferred_m
         # per-subspace width from the stored codebook, scaled by the
         # CALLER's n_subspaces when one was supplied
@@ -769,33 +716,22 @@ def pq_encode_adc_topk_block(
     """
     import numpy as np
 
-    spark = corpus.sparkSession
-    out_ddl = "query_id long, neighbor_id long, sim double"
     cb = _collect_codebooks(codebooks)
-    qpdf = queries.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col).toPandas()
-    if qpdf.empty or not cb:
-        return spark.createDataFrame([], out_ddl + ", rank int")
+    q = _query_block(queries, id_col, vec_col)
+    if q is None or not cb:
+        return _empty_top_k(corpus.sparkSession)
+    q_ids, q_mat, q_norm = q
     d_sub = dim // n_subspaces
     # per-subspace codeword tables in ASCENDING cid order (argmin ->
     # first minimum -> smallest cid, matching min(struct) ties)
-    cids_m, cw_m, cv2_m = [], [], []
+    cw_m, cv2_m = [], []
     for m in range(n_subspaces):
-        items = sorted((cid, v) for (mm, cid), v in cb.items() if mm == m)
-        cids = np.array([c for c, _ in items], dtype=np.int64)
-        mat = np.stack([v for _, v in items])
+        mat = np.stack([v for _, v in sorted((cid, v) for (mm, cid), v in cb.items() if mm == m)])
         cv2 = mat[:, 0] * mat[:, 0]
         for i in range(1, d_sub):
             cv2 = cv2 + mat[:, i] * mat[:, i]
-        cids_m.append(cids)
         cw_m.append(mat)
         cv2_m.append(cv2)
-    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-    q_mat = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf[vec_col]])
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    keep_q = np.isfinite(q_norm) & (q_norm > 0.0)
-    q_ids, q_mat, q_norm = q_ids[keep_q], q_mat[keep_q], q_norm[keep_q]
-    if not len(q_ids):
-        return spark.createDataFrame([], out_ddl + ", rank int")
     # ADC lookup tables against the (sorted) per-subspace codewords
     lut_m = [
         np.einsum("qd,cd->qc", q_mat[:, m * d_sub : (m + 1) * d_sub], cw_m[m])
@@ -827,83 +763,67 @@ def pq_encode_adc_topk_block(
         else:
             allowed[:, :] = True
         coarse = (co_mat, co_norm, allowed)
-    b = spark.sparkContext.broadcast((q_ids, q_norm, cids_m, cw_m, cv2_m, lut_m, coarse))
 
-    def score(batches):
-        import pandas as pd
+    def score(p, pdf):
+        q_ids, q_norm, cw_m, cv2_m, lut_m, coarse = p
+        c_ids = pdf[id_col].to_numpy(dtype=np.int64)
+        vecs = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+        qmask = None  # [Q, B] allowed pairs (coarse probe masking)
+        if coarse is not None:
+            co_mat, co_norm, allowed = coarse
+            # in-kernel coarse assign: cosine vs centroids with the
+            # exact left-assoc fold of similarity.cosine, argmax
+            # over ascending-cid columns = desc-sim/asc-cid ties
+            ip = vecs[:, 0][:, None] * co_mat[:, 0][None, :]
+            v2 = vecs[:, 0] * vecs[:, 0]
+            for i in range(1, vecs.shape[1]):
+                ip = ip + vecs[:, i][:, None] * co_mat[:, i][None, :]
+                v2 = v2 + vecs[:, i] * vecs[:, i]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                csim = ip / (np.sqrt(v2)[:, None] * co_norm[None, :])
+            # a zero-norm centroid (collapsed Lloyd mean) yields a
+            # NaN column; argmax would keep it only at column 0,
+            # while the relational ivf_assign/try_divide path sorts
+            # NULL sims last — mask to -inf so both faces pick the
+            # best REAL centroid (ADVICE r9; theoretical unless a
+            # mean collapses to the exact zero vector)
+            csim = np.where(np.isnan(csim), -np.inf, csim)
+            col = np.argmax(csim, axis=1)  # first max = smallest cid
+            keep_rows = allowed.any(axis=0)[col]
+            if not keep_rows.any():
+                return None
+            c_ids, vecs, col = c_ids[keep_rows], vecs[keep_rows], col[keep_rows]
+            qmask = allowed[:, col]  # [Q, B]
+        ip_sum = None
+        n2_sum = None
+        for m in range(len(cw_m)):
+            sv = vecs[:, m * d_sub : (m + 1) * d_sub]
+            cw = cw_m[m]
+            # left-assoc accumulation in dimension order — the
+            # exact float sequence of the unrolled Spark expression
+            sv2 = sv[:, 0] * sv[:, 0]
+            ip = sv[:, 0][:, None] * cw[:, 0][None, :]
+            for i in range(1, sv.shape[1]):
+                sv2 = sv2 + sv[:, i] * sv[:, i]
+                ip = ip + sv[:, i][:, None] * cw[:, i][None, :]
+            d = (sv2[:, None] - 2.0 * ip) + cv2_m[m][None, :]
+            # first min = smallest cid; a NaN distance (a codeword the
+            # Lloyd mean poisoned) orders last, as in the staged
+            # min(struct(d, cid)) — np.argmin would return it first
+            win = np.argmin(np.where(np.isnan(d), np.inf, d), axis=1)
+            part_ip = lut_m[m][:, win]  # [Q, B]
+            part_n2 = cv2_m[m][win]  # [B]
+            ip_sum = part_ip if ip_sum is None else ip_sum + part_ip
+            n2_sum = part_n2 if n2_sum is None else n2_sum + part_n2
+        sims = _round_half_away(ip_sum / (q_norm[:, None] * np.sqrt(n2_sum)[None, :]))
+        if qmask is not None:
+            sims = np.where(qmask, sims, -np.inf)
+        return q_ids, c_ids, sims
 
-        q_ids, q_norm, cids_m, cw_m, cv2_m, lut_m, coarse = b.value
-        n_sub = len(cw_m)
-        for pdf in batches:
-            pdf = pdf[pdf[vec_col].notna()]
-            if pdf.empty:
-                continue
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            vecs = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            qmask = None  # [Q, B] allowed pairs (coarse probe masking)
-            if coarse is not None:
-                co_mat, co_norm, allowed = coarse
-                # in-kernel coarse assign: cosine vs centroids with the
-                # exact left-assoc fold of similarity.cosine, argmax
-                # over ascending-cid columns = desc-sim/asc-cid ties
-                ip = vecs[:, 0][:, None] * co_mat[:, 0][None, :]
-                v2 = vecs[:, 0] * vecs[:, 0]
-                for i in range(1, vecs.shape[1]):
-                    ip = ip + vecs[:, i][:, None] * co_mat[:, i][None, :]
-                    v2 = v2 + vecs[:, i] * vecs[:, i]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    csim = ip / (np.sqrt(v2)[:, None] * co_norm[None, :])
-                # a zero-norm centroid (collapsed Lloyd mean) yields a
-                # NaN column; argmax would keep it only at column 0,
-                # while the relational ivf_assign/try_divide path sorts
-                # NULL sims last — mask to -inf so both faces pick the
-                # best REAL centroid (ADVICE r9; theoretical unless a
-                # mean collapses to the exact zero vector)
-                csim = np.where(np.isnan(csim), -np.inf, csim)
-                col = np.argmax(csim, axis=1)  # first max = smallest cid
-                keep_rows = allowed.any(axis=0)[col]
-                if not keep_rows.any():
-                    continue
-                c_ids, vecs, col = c_ids[keep_rows], vecs[keep_rows], col[keep_rows]
-                qmask = allowed[:, col]  # [Q, B]
-            ip_sum = None
-            n2_sum = None
-            for m in range(n_sub):
-                sv = vecs[:, m * d_sub : (m + 1) * d_sub]
-                cw = cw_m[m]
-                # left-assoc accumulation in dimension order — the
-                # exact float sequence of the unrolled Spark expression
-                sv2 = sv[:, 0] * sv[:, 0]
-                ip = sv[:, 0][:, None] * cw[:, 0][None, :]
-                for i in range(1, sv.shape[1]):
-                    sv2 = sv2 + sv[:, i] * sv[:, i]
-                    ip = ip + sv[:, i][:, None] * cw[:, i][None, :]
-                d = (sv2[:, None] - 2.0 * ip) + cv2_m[m][None, :]
-                win = np.argmin(d, axis=1)  # first min = smallest cid
-                part_ip = lut_m[m][:, win]  # [Q, B]
-                part_n2 = cv2_m[m][win]  # [B]
-                ip_sum = part_ip if ip_sum is None else ip_sum + part_ip
-                n2_sum = part_n2 if n2_sum is None else n2_sum + part_n2
-            sims = _round_half_away(ip_sum / (q_norm[:, None] * np.sqrt(n2_sum)[None, :]))
-            sims = np.where((q_ids[:, None] != c_ids[None, :]) & np.isfinite(sims), sims, -np.inf)
-            if qmask is not None:
-                sims = np.where(qmask, sims, -np.inf)
-            rows = []
-            kk = min(k, sims.shape[1])
-            for qi in range(len(q_ids)):
-                row = sims[qi]
-                order = np.lexsort((c_ids, -row))[:kk]
-                for ci in order:
-                    if np.isfinite(row[ci]):
-                        rows.append((q_ids[qi], c_ids[ci], row[ci]))
-            if rows:
-                yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "sim"])
-
-    per_batch = corpus.filter(F.col(vec_col).isNotNull()).select(
+    live = corpus.filter(F.col(vec_col).isNotNull()).select(
         id_col, F.col(vec_col).cast("array<double>").alias(vec_col)
-    ).mapInPandas(score, out_ddl)
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return per_batch.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    )
+    return _block_topk(live, (q_ids, q_norm, cw_m, cv2_m, lut_m, coarse), score, k)
 
 
 def pq_topk(
@@ -1087,14 +1007,4 @@ def pq_query_index_rerank(
     q = queries.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
     )
-    scored = (
-        cand.join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("sim"),
-        )
-        .filter(F.col("sim").isNotNull() & ~F.isnan(F.col("sim")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _exact_top_k(cand.join(F.broadcast(q), "query_id"), k)

@@ -46,6 +46,165 @@ def _round_half_away(x, decimals: int = 6):
     return np.copysign(np.floor(np.abs(x) * f + 0.5), x) / f
 
 
+# ---------------------------------------------------------------------------
+# The top-k contract every search face shares (this module's and pq.py's):
+# ranked by sim DESC then the smaller neighbor id, no self-matches, sims
+# rounded half-away to 6 dp, and NULL / zero-norm / non-finite vectors
+# dropped — a degenerate vector has no direction, so it can neither query
+# nor win (left in, its NaN sim ranks ABOVE every real neighbor under
+# Spark's NaN-is-greatest ordering — r9 dirty-corpus fuzz). A face owns only
+# its candidate generation and how it scores a batch.
+# ---------------------------------------------------------------------------
+
+_TOPK_DDL = "query_id long, neighbor_id long, sim double"
+
+
+def _empty_top_k(spark) -> DataFrame:
+    return spark.createDataFrame([], _TOPK_DDL + ", rank int")
+
+
+def _rank_top_k(scored: DataFrame, k: int) -> DataFrame:
+    """Ranks 1..k per query over (query_id, neighbor_id, sim) rows."""
+    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _exact_top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """Exact re-rank of candidate pairs (query_id, neighbor_id, __qv,
+    __cv). A zero-norm vector's cosine is 0/0 — NaN here, NULL in the
+    DuckDB twins; both mean "no similarity defined", so the row drops
+    before ranking."""
+    scored = (
+        pairs.filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("sim"))
+        .filter(F.col("sim").isNotNull() & ~F.isnan(F.col("sim")))
+    )
+    return _rank_top_k(scored, k)
+
+
+def _query_block(queries: DataFrame, id_col: str, vec_col: str, *extra: str):
+    """Collect a block kernel's (bounded) query side under the
+    dirty-vector rule: (ids int64, float64 matrix, norms, *extra column
+    arrays) over the NULL-free, finite, non-zero-norm queries, or None
+    when none survive."""
+    import numpy as np
+
+    qpdf = queries.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col, *extra).toPandas()
+    if qpdf.empty:
+        return None
+    mat = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf[vec_col]])
+    norm = np.linalg.norm(mat, axis=1)
+    keep = np.isfinite(norm) & (norm > 0.0)
+    if not keep.any():
+        return None
+    ids = qpdf[id_col].to_numpy(dtype=np.int64)
+    return (ids[keep], mat[keep], norm[keep], *(qpdf[c].to_numpy()[keep] for c in extra))
+
+
+def _cosine_batch(pdf, id_col: str, vec_col: str, q_mat, q_norm, *extra: str):
+    """Score one Arrow batch of raw candidate vectors against the query
+    block: the candidate side of the dirty-vector rule, then
+    dot/(|q|·|c|) rounded half-away to 6 dp — the operation order of the
+    HOF twins and the SQL oracles, so float ulps cannot flip a 6-dp
+    boundary across faces. Returns (c_ids, sims[Q, B], *extra column
+    arrays) over the surviving candidates, or None."""
+    import numpy as np
+
+    pdf = pdf[pdf[vec_col].notna()]
+    if pdf.empty:
+        return None
+    c_mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+    c_norm = np.linalg.norm(c_mat, axis=1)
+    keep = np.isfinite(c_norm) & (c_norm > 0.0)
+    if not keep.any():
+        return None
+    sims = _round_half_away((q_mat @ c_mat[keep].T) / (q_norm[:, None] * c_norm[keep][None, :]))
+    c_ids = pdf[id_col].to_numpy(dtype=np.int64)[keep]
+    return (c_ids, sims, *(pdf[c].to_numpy()[keep] for c in extra))
+
+
+def _best_per_query(q_ids, c_ids, sims, k: int):
+    """Per-batch selection: each query's top-k (sim DESC, c_id ASC)
+    among the finite, non-self sims. A NaN sim (a poisoned component
+    that survived the norm screen) is masked per candidate, never
+    allowed to hide a whole batch from a query. Returns (query row
+    indices, candidate row indices, sims), query-major."""
+    import numpy as np
+
+    sims = np.where((q_ids[:, None] != c_ids[None, :]) & np.isfinite(sims), sims, -np.inf)
+    qi_out, ci_out = [], []
+    kk = min(k, sims.shape[1])
+    for qi in range(len(q_ids)):
+        row = sims[qi]
+        for ci in np.lexsort((c_ids, -row))[:kk]:
+            if np.isfinite(row[ci]):
+                qi_out.append(qi)
+                ci_out.append(ci)
+    qi_out = np.asarray(qi_out, dtype=np.int64)
+    ci_out = np.asarray(ci_out, dtype=np.int64)
+    return qi_out, ci_out, sims[qi_out, ci_out]
+
+
+def _broadcast_map(corpus: DataFrame, payload, score, ddl: str) -> DataFrame:
+    """Ship ``payload`` to executors ONCE (torrent, per executor — never
+    per-task closure capture, which would re-serialize a large query
+    block with every task) and map every Arrow batch of ``corpus``
+    through ``score(payload, pdf)``, which returns a pandas frame or
+    None."""
+    b = corpus.sparkSession.sparkContext.broadcast(payload)
+
+    def kernel(batches):
+        p = b.value
+        for pdf in batches:
+            out = score(p, pdf)
+            if out is not None and not out.empty:
+                yield out
+
+    return corpus.mapInPandas(kernel, ddl)
+
+
+def _block_topk(corpus: DataFrame, payload, score, k: int) -> DataFrame:
+    """The shared numpy block kernel: ``score(payload, pdf)`` turns a
+    batch into (q_ids, c_ids, sims[Q, B]) or None; each batch emits its
+    per-query top-k (k·|queries| rows — bounded, never the scored cross
+    product), and one window over those candidates picks the global
+    top-k."""
+
+    def topk(p, pdf):
+        import pandas as pd
+
+        scored = score(p, pdf)
+        if scored is None:
+            return None
+        q_ids, c_ids, _ = scored
+        qi, ci, sims = _best_per_query(*scored, k)
+        return pd.DataFrame({"query_id": q_ids[qi], "neighbor_id": c_ids[ci], "sim": sims})
+
+    return _rank_top_k(_broadcast_map(corpus, payload, topk, _TOPK_DDL), k)
+
+
+def _top1_per_query(per_batch: DataFrame, keys: tuple, *carry: str) -> DataFrame:
+    """Global top-1 from per-batch candidates via a map-side-combinable
+    max(struct) — the shuffle carries |queries| rows per partition, never
+    a per-query window; -neighbor_id breaks sim ties to the smaller id."""
+    best = per_batch.groupBy(*keys).agg(
+        F.max(
+            F.struct(
+                F.col("sim").alias("sim"),
+                (-F.col("neighbor_id")).alias("__nn"),
+                F.col("neighbor_id").alias("neighbor_id"),
+                *[F.col(c).alias(c) for c in carry],
+            )
+        ).alias("b")
+    )
+    return best.select(
+        *keys,
+        F.col("b.neighbor_id").alias("neighbor_id"),
+        *[F.col(f"b.{c}").alias(c) for c in carry],
+        F.col("b.sim").alias("sim"),
+    )
+
+
 def plane_weight(seed: int, plane: int, coord: int) -> int:
     """Deterministic ±1 hyperplane weight — shared by the Spark
     expression builder and the DuckDB oracle generator."""
@@ -80,17 +239,7 @@ def brute_force_topk(
     queries = queries.filter(F.col(vec_col).isNotNull())
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("sim"))
-        # zero-norm vectors: cosine is 0/0 — NaN here, NULL in the
-        # DuckDB twins; both mean "no similarity defined", so the row
-        # drops before ranking (the block kernels' keep_q discipline)
-        .filter(F.col("sim").isNotNull() & ~F.isnan(F.col("sim")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _exact_top_k(c.crossJoin(F.broadcast(q)), k)
 
 
 _PAIR_SCHEMA_DDL = "id_a long, id_b long, sim double"
@@ -251,29 +400,27 @@ def _near_dup_pairs_lsh(df, threshold, id_col, vec_col, n_planes, n_tables, dim)
 def _near_dup_pairs_broadcast(df, threshold, id_col, vec_col):
     import numpy as np
 
-    spark = df.sparkSession
-    pdf = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).toPandas()
+    src = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    pdf = src.toPandas()
     ids = pdf["id"].to_numpy()
     mat = np.stack(pdf["v"].to_numpy()).astype(np.float64)
     norm = np.linalg.norm(mat, axis=1, keepdims=True)
     norm[norm == 0.0] = 1.0
-    bc = spark.sparkContext.broadcast((ids, mat / norm))
 
-    def score(batches):
+    def score(p, pdf_batch):
         import pandas as pd
 
-        all_ids, all_mat = bc.value
-        for pdf_batch in batches:
-            b_ids = pdf_batch["id"].to_numpy()
-            b_mat = np.stack(pdf_batch["v"].to_numpy()).astype(np.float64)
-            b_norm = np.linalg.norm(b_mat, axis=1, keepdims=True)
-            b_norm[b_norm == 0.0] = 1.0
-            sims = np.round((b_mat / b_norm) @ all_mat.T, 6)
-            keep = (sims >= threshold) & (b_ids[:, None] < all_ids[None, :])
-            r, c = np.nonzero(keep)
-            yield pd.DataFrame({"id_a": b_ids[r], "id_b": all_ids[c], "sim": sims[r, c]})
+        all_ids, all_mat = p
+        b_ids = pdf_batch["id"].to_numpy()
+        b_mat = np.stack(pdf_batch["v"].to_numpy()).astype(np.float64)
+        b_norm = np.linalg.norm(b_mat, axis=1, keepdims=True)
+        b_norm[b_norm == 0.0] = 1.0
+        sims = np.round((b_mat / b_norm) @ all_mat.T, 6)
+        keep = (sims >= threshold) & (b_ids[:, None] < all_ids[None, :])
+        r, c = np.nonzero(keep)
+        return pd.DataFrame({"id_a": b_ids[r], "id_b": all_ids[c], "sim": sims[r, c]})
 
-    return df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).mapInPandas(score, _PAIR_SCHEMA_DDL)
+    return _broadcast_map(src, (ids, mat / norm), score, _PAIR_SCHEMA_DDL)
 
 
 def hyperplane_signature(vec: Column, dim: int, n_planes: int = 16, seed: int = DEFAULT_SEED) -> Column:
@@ -470,17 +617,7 @@ def ivf_topk(
     probes = ivf_assign(queries, cent, id_col, vec_col, nprobe=nprobe).select(
         F.col("cid"), F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv")
     )
-    scored = (
-        inv.join(probes.hint("broadcast"), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("sim"))
-        # zero-norm vectors: cosine is 0/0 — NaN here, NULL in the
-        # DuckDB twins; both mean "no similarity defined", so the row
-        # drops before ranking (the block kernels' keep_q discipline)
-        .filter(F.col("sim").isNotNull() & ~F.isnan(F.col("sim")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _exact_top_k(inv.join(probes.hint("broadcast"), "cid"), k)
 
 
 def ivf_write_index(
@@ -537,17 +674,7 @@ def ivf_query_index(
         .filter(F.col("cid").isin(probe_cids))  # -> PartitionFilters on cid
         .select("cid", F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
     )
-    scored = (
-        inv.join(probes.hint("broadcast"), "cid")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("sim"))
-        # zero-norm vectors: cosine is 0/0 — NaN here, NULL in the
-        # DuckDB twins; both mean "no similarity defined", so the row
-        # drops before ranking (the block kernels' keep_q discipline)
-        .filter(F.col("sim").isNotNull() & ~F.isnan(F.col("sim")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _exact_top_k(inv.join(probes.hint("broadcast"), "cid"), k)
 
 
 def lsh_topk(
@@ -579,17 +706,7 @@ def lsh_topk(
     )
     c = sig(corpus, "neighbor_id", "__cv")
     q = sig(queries, "query_id", "__qv")
-    scored = (
-        c.join(q.hint("broadcast"), "__sig")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.round(cosine(F.col("__qv"), F.col("__cv")), 6).alias("sim"))
-        # zero-norm vectors: cosine is 0/0 — NaN here, NULL in the
-        # DuckDB twins; both mean "no similarity defined", so the row
-        # drops before ranking (the block kernels' keep_q discipline)
-        .filter(F.col("sim").isNotNull() & ~F.isnan(F.col("sim")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _exact_top_k(c.join(q.hint("broadcast"), "__sig"), k)
 
 
 def hard_negative_top1_block(
@@ -605,106 +722,44 @@ def hard_negative_top1_block(
     lambdas (interpreted multiply-adds) lose to a vectorized matmul by
     orders of magnitude.
 
-    Plan shape: the query block (ids, labels, float64 matrix) ships to
-    executors ONCE via sparkContext.broadcast (torrent, per-executor —
-    never per-task closure capture, which would re-serialize a large
-    query set with every task); mapInPandas emits ONE candidate row per
-    (query, input batch) — the per-batch argmax under the other-label
-    mask — and a map-side-combinable max(struct) reduces batches to the
-    global top-1, so the shuffle carries |queries| rows per partition
-    exactly like the HOF version. Same tie-break (sim DESC,
-    neighbor_id ASC).
+    Plan shape: the query block (ids, labels, float64 matrix) broadcasts
+    once; mapInPandas emits ONE candidate row per (query, input batch)
+    — the per-batch best under the other-label mask — and a map-side
+    max(struct) reduces batches to the global top-1, so the shuffle
+    carries |queries| rows per partition exactly like the HOF version.
 
-    Dirty-data policy (deliberate, same as cosine_near_dup_pairs):
-    NULL-vector, NULL-label, zero-norm, and NaN-component rows are
-    DROPPED at the kernel boundary — a degenerate vector has no
-    direction, so it can neither query nor win. The HOF path instead
-    propagates NULL sims (oracle-pinned) and raises on zero vectors
-    under ANSI; on clean vectors the two paths are output-identical
-    (pinned by test)."""
+    Dirty-data policy: the shared top-k contract, plus NULL-label rows
+    dropped on both sides. The HOF path instead propagates NULL sims
+    (oracle-pinned) and raises on zero vectors under ANSI; on clean
+    vectors the two paths are output-identical (pinned by test)."""
     import numpy as np
 
-    qpdf = (
-        df.filter(F.col(id_col) < n_queries)
-        .filter(F.col(label_col).isNotNull() & F.col(vec_col).isNotNull())
-        .select(id_col, vec_col, label_col)
-        .toPandas()
-    )
-    out_ddl = (
-        "query_id long, query_label int, neighbor_id long, neighbor_label int, sim double"
-    )
-    spark = df.sparkSession
-    if qpdf.empty:
-        return spark.createDataFrame([], out_ddl)
-    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-    q_labels = qpdf[label_col].to_numpy(dtype=np.int64)
-    q_mat = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf[vec_col]])
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    keep_q = np.isfinite(q_norm) & (q_norm > 0.0)
-    q_ids, q_labels = q_ids[keep_q], q_labels[keep_q]
-    if not len(q_ids):
-        return spark.createDataFrame([], out_ddl)
-    # broadcast RAW vectors + norms (not pre-normalized rows): the
-    # cosine is computed dot/(|q|·|c|) — the same operation order as
-    # the HOF twin and the SQL oracle, so float ulps can't diverge
-    # across the three faces and flip a 6-dp rounding boundary
-    b_q = spark.sparkContext.broadcast((q_ids, q_labels, q_mat[keep_q], q_norm[keep_q]))
+    queries = df.filter(F.col(id_col) < n_queries).filter(F.col(label_col).isNotNull())
+    q = _query_block(queries, id_col, vec_col, label_col)
+    out_ddl = "query_id long, query_label int, neighbor_id long, neighbor_label int, sim double"
+    if q is None:
+        return df.sparkSession.createDataFrame([], out_ddl)
+    q_ids, q_mat, q_norm, q_labels = q
 
-    def score(batches):
+    def score(p, pdf):
         import pandas as pd
 
-        q_ids, q_labels, q_mat, q_norm = b_q.value
-        for pdf in batches:
-            pdf = pdf[pdf[label_col].notna() & pdf[vec_col].notna()]
-            if pdf.empty:
-                continue
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c_labels = pdf[label_col].to_numpy(dtype=np.int64)
-            c_mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            c_norm = np.linalg.norm(c_mat, axis=1)
-            keep = np.isfinite(c_norm) & (c_norm > 0.0)
-            if not keep.any():
-                continue
-            c_ids, c_labels = c_ids[keep], c_labels[keep]
-            sims = _round_half_away((q_mat @ c_mat[keep].T) / (q_norm[:, None] * c_norm[keep][None, :]))
-            mask = q_labels[:, None] != c_labels[None, :]
-            # NaN sims (poisoned components that survived the norm
-            # screen) are masked per-candidate, never allowed to hide a
-            # whole batch from a query
-            sims = np.where(mask & np.isfinite(sims), sims, -np.inf)
-            best_rows = []
-            for qi in range(len(q_ids)):
-                row = sims[qi]
-                m = row.max()
-                if not np.isfinite(m):
-                    continue
-                cand = np.nonzero(row == m)[0]
-                ci = cand[np.argmin(c_ids[cand])]
-                best_rows.append((q_ids[qi], q_labels[qi], c_ids[ci], c_labels[ci], m))
-            if best_rows:
-                yield pd.DataFrame(
-                    best_rows,
-                    columns=["query_id", "query_label", "neighbor_id", "neighbor_label", "sim"],
-                )
+        q_ids, q_mat, q_norm, q_labels = p
+        scored = _cosine_batch(pdf[pdf[label_col].notna()], id_col, vec_col, q_mat, q_norm, label_col)
+        if scored is None:
+            return None
+        c_ids, sims, c_labels = scored
+        c_labels = c_labels.astype(np.int64)
+        sims = np.where(q_labels[:, None] != c_labels[None, :], sims, -np.inf)
+        qi, ci, best = _best_per_query(q_ids, c_ids, sims, 1)
+        return pd.DataFrame(
+            {"query_id": q_ids[qi], "query_label": q_labels[qi], "neighbor_id": c_ids[ci],
+             "neighbor_label": c_labels[ci], "sim": best}
+        )
 
-    per_batch = df.select(id_col, vec_col, label_col).mapInPandas(score, out_ddl)
-    best = per_batch.groupBy("query_id", "query_label").agg(
-        F.max(
-            F.struct(
-                F.col("sim").alias("sim"),
-                (-F.col("neighbor_id")).alias("__nn"),
-                F.col("neighbor_id").alias("neighbor_id"),
-                F.col("neighbor_label").alias("neighbor_label"),
-            )
-        ).alias("b")
-    )
-    return best.select(
-        "query_id",
-        "query_label",
-        F.col("b.neighbor_id").alias("neighbor_id"),
-        F.col("b.neighbor_label").alias("neighbor_label"),
-        F.col("b.sim").alias("sim"),
-    ).orderBy("query_id")
+    payload = (q_ids, q_mat, q_norm, q_labels.astype(np.int64))
+    per_batch = _broadcast_map(df.select(id_col, vec_col, label_col), payload, score, out_ddl)
+    return _top1_per_query(per_batch, ("query_id", "query_label"), "neighbor_label").orderBy("query_id")
 
 
 def brute_force_topk_block(
@@ -715,71 +770,21 @@ def brute_force_topk_block(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """numpy block-kernel twin of :func:`brute_force_topk` — same
-    output contract on clean vectors (query_id, neighbor_id, sim,
-    rank; self-matches excluded; ties by neighbor id), vectorized for
-    large query sets. Query block broadcast once per executor (torrent,
-    not per-task closure). Dirty-data policy as
-    hard_negative_top1_block: NULL/zero-norm/NaN vectors are dropped
-    at the kernel boundary (the HOF twin instead propagates NULL sims
-    ranked last — oracle-pinned — and raises on zero vectors under
-    ANSI).
+    output contract on clean vectors, vectorized for large query sets
+    (the HOF twin instead propagates NULL sims ranked last —
+    oracle-pinned — and raises on zero vectors under ANSI). The window
+    input is |queries|·k·|batches| rows — orders of magnitude under the
+    |queries|·|corpus| scored set the HOF version ranks."""
+    q = _query_block(queries, id_col, vec_col)
+    if q is None:
+        return _empty_top_k(corpus.sparkSession)
 
-    mapInPandas emits the per-batch top-k per query (k·|queries| rows
-    per batch — bounded, never the scored cross product), then one
-    window over the k-per-batch candidates picks the global top-k.
-    The window input is |queries|·k·|batches| rows — orders of
-    magnitude under the |queries|·|corpus| scored set the HOF version
-    ranks."""
-    import numpy as np
+    def score(p, pdf):
+        q_ids, q_mat, q_norm = p
+        scored = _cosine_batch(pdf, id_col, vec_col, q_mat, q_norm)
+        return None if scored is None else (q_ids, *scored)
 
-    spark = corpus.sparkSession
-    qpdf = queries.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col).toPandas()
-    out_ddl = "query_id long, neighbor_id long, sim double"
-    if qpdf.empty:
-        return spark.createDataFrame([], out_ddl + ", rank int")
-    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-    q_mat = np.stack([np.asarray(v, dtype=np.float64) for v in qpdf[vec_col]])
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    keep_q = np.isfinite(q_norm) & (q_norm > 0.0)
-    q_ids = q_ids[keep_q]
-    if not len(q_ids):
-        return spark.createDataFrame([], out_ddl + ", rank int")
-    # raw vectors + norms, dot/(|q|·|c|) with half-away rounding — same
-    # operation order as the HOF twin and the oracle (see
-    # hard_negative_top1_block)
-    b_q = spark.sparkContext.broadcast((q_ids, q_mat[keep_q], q_norm[keep_q]))
-
-    def score(batches):
-        import pandas as pd
-
-        q_ids, q_mat, q_norm = b_q.value
-        for pdf in batches:
-            pdf = pdf[pdf[vec_col].notna()]
-            if pdf.empty:
-                continue
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c_mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            c_norm = np.linalg.norm(c_mat, axis=1)
-            keep = np.isfinite(c_norm) & (c_norm > 0.0)
-            if not keep.any():
-                continue
-            c_ids = c_ids[keep]
-            sims = _round_half_away((q_mat @ c_mat[keep].T) / (q_norm[:, None] * c_norm[keep][None, :]))
-            sims = np.where((q_ids[:, None] != c_ids[None, :]) & np.isfinite(sims), sims, -np.inf)
-            rows = []
-            kk = min(k, sims.shape[1])
-            for qi in range(len(q_ids)):
-                row = sims[qi]
-                order = np.lexsort((c_ids, -row))[:kk]
-                for ci in order:
-                    if np.isfinite(row[ci]):
-                        rows.append((q_ids[qi], c_ids[ci], row[ci]))
-            if rows:
-                yield pd.DataFrame(rows, columns=["query_id", "neighbor_id", "sim"])
-
-    per_batch = corpus.select(id_col, vec_col).mapInPandas(score, out_ddl)
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return per_batch.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _block_topk(corpus.select(id_col, vec_col), q, score, k)
 
 
 def exclusion_top1_block(
@@ -796,95 +801,42 @@ def exclusion_top1_block(
     `contrastive_triplets`, where the exclusion is the anchor's
     near-dup partner set rather than a label mismatch.
 
-    Same block-kernel shape as :func:`hard_negative_top1_block`: the
-    anchor block (ids, float64 matrix, norms, exclusion id lists)
-    broadcasts once per executor; each Arrow batch reduces to one
-    candidate row per anchor via a matmul + masked argmax; a map-side
-    max(struct) reduces batches to the global top-1 with the standard
-    (sim DESC, neighbor_id ASC) tie-break. The anchor set is bounded by
-    the corpus' near-dup rate — the same collect budget the entry
-    documents; exclusion masking costs one np.isin per anchor per
-    batch over its (small) partner list.
+    Same block-kernel shape as :func:`hard_negative_top1_block`. The
+    anchor set is bounded by the corpus' near-dup rate — the same
+    collect budget the entry documents; exclusion masking costs one
+    np.isin per anchor per batch over its (small) partner list.
 
-    Dirty-data policy as the sibling kernels: NULL-vector, zero-norm,
-    and NaN rows drop at the kernel boundary on both the anchor and
-    corpus inputs; the HOF fallback and the SQL oracle replicate the
-    NULL/NaN drops via explicit sim filters (zero-norm remains the
-    documented ANSI-division exposure all the cosine faces share, as
-    for hard_negatives). Sims are
-    computed dot/(|a|·|c|) and rounded half-away-from-zero to 6 dp
-    INSIDE the kernel — identical operation order to the Catalyst HOF
-    and the SQL oracle, so a 6-dp rounding boundary cannot flip across
-    faces.
+    The HOF fallback and the SQL oracle replicate the kernel's NULL/NaN
+    drops via explicit sim filters (zero-norm remains the documented
+    ANSI-division exposure all the cosine faces share, as for
+    hard_negatives).
     """
     import numpy as np
 
-    apdf = (
-        anchors.filter(F.col(anchor_vec_col).isNotNull())
-        .select(anchor_id_col, anchor_vec_col, excl_col)
-        .toPandas()
-    )
+    a = _query_block(anchors, anchor_id_col, anchor_vec_col, excl_col)
     out_ddl = "anchor_id long, neighbor_id long, sim double"
-    spark = corpus.sparkSession
-    if apdf.empty:
-        return spark.createDataFrame([], out_ddl)
-    a_ids = apdf[anchor_id_col].to_numpy(dtype=np.int64)
-    a_mat = np.stack([np.asarray(v, dtype=np.float64) for v in apdf[anchor_vec_col]])
-    a_norm = np.linalg.norm(a_mat, axis=1)
-    keep_a = np.isfinite(a_norm) & (a_norm > 0.0)
-    a_ids = a_ids[keep_a]
-    if not len(a_ids):
-        return spark.createDataFrame([], out_ddl)
+    if a is None:
+        return corpus.sparkSession.createDataFrame([], out_ddl)
+    a_ids, a_mat, a_norm, a_ex = a
     # exclusion = partners ∪ {self}: a degenerate near-dup of oneself
     # can never be the negative
     a_excl = [
         np.append(np.asarray(ex if ex is not None else [], dtype=np.int64), aid)
-        for ex, aid in zip(apdf[excl_col][keep_a], a_ids)
+        for ex, aid in zip(a_ex, a_ids)
     ]
-    b_a = spark.sparkContext.broadcast((a_ids, a_mat[keep_a], a_norm[keep_a], a_excl))
 
-    def score(batches):
+    def score(p, pdf):
         import pandas as pd
 
-        a_ids, a_mat, a_norm, a_excl = b_a.value
-        for pdf in batches:
-            pdf = pdf[pdf[vec_col].notna()]
-            if pdf.empty:
-                continue
-            c_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            c_mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            c_norm = np.linalg.norm(c_mat, axis=1)
-            keep = np.isfinite(c_norm) & (c_norm > 0.0)
-            if not keep.any():
-                continue
-            c_ids = c_ids[keep]
-            sims = _round_half_away((a_mat @ c_mat[keep].T) / (a_norm[:, None] * c_norm[keep][None, :]))
-            sims = np.where(np.isfinite(sims), sims, -np.inf)
-            best_rows = []
-            for ai in range(len(a_ids)):
-                row = sims[ai].copy()
-                row[np.isin(c_ids, a_excl[ai])] = -np.inf
-                m = row.max()
-                if not np.isfinite(m):
-                    continue
-                cand = np.nonzero(row == m)[0]
-                ci = cand[np.argmin(c_ids[cand])]
-                best_rows.append((a_ids[ai], c_ids[ci], m))
-            if best_rows:
-                yield pd.DataFrame(best_rows, columns=["anchor_id", "neighbor_id", "sim"])
+        a_ids, a_mat, a_norm, a_excl = p
+        scored = _cosine_batch(pdf, id_col, vec_col, a_mat, a_norm)
+        if scored is None:
+            return None
+        c_ids, sims = scored
+        excluded = np.stack([np.isin(c_ids, ex) for ex in a_excl])
+        qi, ci, best = _best_per_query(a_ids, c_ids, np.where(excluded, -np.inf, sims), 1)
+        return pd.DataFrame({"anchor_id": a_ids[qi], "neighbor_id": c_ids[ci], "sim": best})
 
-    per_batch = corpus.select(id_col, vec_col).mapInPandas(score, out_ddl)
-    best = per_batch.groupBy("anchor_id").agg(
-        F.max(
-            F.struct(
-                F.col("sim").alias("sim"),
-                (-F.col("neighbor_id")).alias("__nn"),
-                F.col("neighbor_id").alias("neighbor_id"),
-            )
-        ).alias("b")
-    )
-    return best.select(
-        "anchor_id",
-        F.col("b.neighbor_id").alias("neighbor_id"),
-        F.col("b.sim").alias("sim"),
-    )
+    payload = (a_ids, a_mat, a_norm, a_excl)
+    per_batch = _broadcast_map(corpus.select(id_col, vec_col), payload, score, out_ddl)
+    return _top1_per_query(per_batch, ("anchor_id",))

@@ -1531,7 +1531,7 @@ WHERE rn = 1
 
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _spread(spark, _read(spark, sf_dir, "documents"))
-    sig = dedup.minhash_signature(F.col("text"), num_perm=16, n=3, seed=SEED)
+    sig = dedup.minhash_signature(F.col("text"), num_perm=16, seed=SEED)
     # array_join references `sig` ONCE — element_at per position would
     # inline the whole signature expression 16× (no CSE in the
     # interpreted higher-order-function path): measured 3.2× slower.
@@ -1567,7 +1567,7 @@ def q_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fully oracle-checked: banding, estimation, and verification are all
     deterministic, so the DuckDB twin reproduces the exact pair set."""
     df = _spread(spark, _read(spark, sf_dir, "documents"))
-    cands = dedup.minhash_lsh_candidates(df, "text", "doc_id", num_perm=32, bands=8, n=3, seed=SEED, max_bucket_size=1 << 40)
+    cands = dedup.minhash_lsh_candidates(df, "text", "doc_id", num_perm=32, bands=8, seed=SEED, max_bucket_size=1 << 40)
     return dedup.verify_candidates_jaccard(cands, df, "text", "doc_id", threshold=0.5, k=5).select(
         "id_a", "id_b", F.round("est_jaccard", 4).alias("est_jaccard"), F.round("jaccard", 4).alias("jaccard")
     )
@@ -4017,7 +4017,7 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.incremental_dedup_flags)."""
     d = _spread(spark, _read(spark, sf_dir, "documents"))
     return dedup.incremental_dedup_flags(
-        d, "text", "doc_id", (F.col("doc_id") % 10) >= 8, num_perm=32, bands=8, n=3, seed=SEED,
+        d, "text", "doc_id", (F.col("doc_id") % 10) >= 8, num_perm=32, bands=8, seed=SEED,
         materialize_keyed=True,
     )
 
@@ -4054,7 +4054,7 @@ def q_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same single (band, bhash) shuffle as the candidate generator; the
     verify join ships int arrays, not texts."""
     d = _spread(spark, _read(spark, sf_dir, "documents"))
-    return dedup.lsh_calibration(d, "text", "doc_id", num_perm=32, bands=8, n=3, seed=SEED)
+    return dedup.lsh_calibration(d, "text", "doc_id", num_perm=32, bands=8, seed=SEED)
 
 
 def sql_lsh_calibration(num_perm: int = 32, bands: int = 8) -> str:
@@ -9081,7 +9081,7 @@ def _triplet_positives(spark: SparkSession, sf_dir: str):
 
     cands = dedup.minhash_lsh_candidates(
         docs, "text", "doc_id", num_perm=TRIPLET_NUM_PERM, bands=TRIPLET_BANDS,
-        n=3, seed=SEED, max_bucket_size=1 << 40,
+        seed=SEED, max_bucket_size=1 << 40,
     )
     # Materialize the verified pair set (|pairs| rows — corpus dup-rate
     # sized): it feeds THREE consumers (both union branches of `sym`

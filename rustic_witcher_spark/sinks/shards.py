@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from rustic_witcher_spark.functions.hashing import hash64
 from rustic_witcher_spark.operators.packing import training_shards
+from rustic_witcher_spark.streaming.replay_meta import store_meta
 
 MANIFEST_NAME = "_shard_manifest.json"
 _DIGEST_MOD = (1 << 61) - 1  # Mersenne prime M61
@@ -86,8 +87,10 @@ def write_training_shards(
         "total_rows": sum(s["n_rows"] for s in stats.values()),
         "shards": {str(k): stats[k] for k in sorted(stats)},
     }
-    with open(os.path.join(path, MANIFEST_NAME), "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
+    # tmp + rename: a crash mid-write leaves no manifest (the overwrite
+    # above removed the old one), never a torn one that neither verify
+    # nor the next append could parse
+    store_meta(path, MANIFEST_NAME, manifest)
     return manifest
 
 

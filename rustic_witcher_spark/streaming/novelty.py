@@ -60,7 +60,9 @@ def novelty_append_batch(
     → append unseen grams. Returns False (no work) for a replayed
     batch_id. Empty batches advance the replay cursor without touching
     the index (explicit schemas on every read-back — a 0-row parquet
-    dir must not raise UNABLE_TO_INFER_SCHEMA)."""
+    dir must not raise UNABLE_TO_INFER_SCHEMA). The meta records the
+    batch's scored-document count (``last_scored_docs``), observed on
+    the scores write."""
     meta = load_meta(index_path, META_NAME)
     if batch_id <= meta.get("last_batch_id", -1):
         return False
@@ -137,12 +139,12 @@ def novelty_append_batch(
                 ).alias("novelty"),
             )
         )
-        scores_dir = os.path.join(index_path, "scores", f"batch={batch_id}")
-        scores.write.mode("overwrite").parquet(scores_dir)
+        scored = write_parquet(scores, os.path.join(index_path, "scores", f"batch={batch_id}"))
     finally:
         sg.unpersist()
     meta["last_batch_id"] = batch_id
     meta["indexed_rows"] = meta.get("indexed_rows", 0) + appended
+    meta["last_scored_docs"] = scored
     store_meta(index_path, META_NAME, meta)
     return True
 

@@ -1,6 +1,8 @@
 """Shared replay-cursor metadata protocol for the streaming appenders
 (`media_dedup`, `ann_stream`, `novelty`, and `shard_stream`, whose
-manifest carries extra per-shard state in the same file).
+manifest carries extra per-shard state in the same file) — and the one
+atomic JSON writer of the engine's other small metadata files (the
+batch shard manifest, the PQ index marker).
 
 One JSON file per index/delta dir records ``last_batch_id`` (the
 replay cursor) plus appender-specific counters. The write is
@@ -24,7 +26,7 @@ def load_meta(path: str, name: str, defaults: dict | None = None) -> dict:
         with open(os.path.join(path, name)) as fh:
             return json.load(fh)
     except FileNotFoundError:
-        return dict(defaults or {"last_batch_id": -1, "indexed_rows": 0})
+        return dict(defaults if defaults is not None else {"last_batch_id": -1, "indexed_rows": 0})
 
 
 def store_meta(path: str, name: str, meta: dict) -> None:

@@ -31,7 +31,7 @@ def test_exact_dedup(spark, docs):
 
 
 def test_minhash_finds_near_dups(spark, docs):
-    cands = dedup.minhash_lsh_candidates(docs, "text", "doc_id", num_perm=32, bands=16, n=3)
+    cands = dedup.minhash_lsh_candidates(docs, "text", "doc_id", num_perm=32, bands=16)
     pairs = {(r["id_a"], r["id_b"]): r["est_jaccard"] for r in cands.collect()}
     assert (1, 2) in pairs and pairs[(1, 2)] == 1.0  # identical texts: all bands agree
     assert (1, 5) in pairs and pairs[(1, 5)] == 1.0  # normalization catches case/space
@@ -41,7 +41,7 @@ def test_minhash_finds_near_dups(spark, docs):
 
 
 def test_jaccard_verification(spark, docs):
-    cands = dedup.minhash_lsh_candidates(docs, "text", "doc_id", num_perm=32, bands=16, n=3)
+    cands = dedup.minhash_lsh_candidates(docs, "text", "doc_id", num_perm=32, bands=16)
     verified = dedup.verify_candidates_jaccard(cands, docs, "text", "doc_id", threshold=0.9)
     pairs = {(r["id_a"], r["id_b"]): r["jaccard"] for r in verified.collect()}
     assert pairs[(1, 2)] == 1.0

@@ -148,13 +148,32 @@ def test_fused_kernel_identical_to_staged_path(spark, emb):
     explicitly left-associated to reproduce the Catalyst unrolled
     expression float-for-float — this test is the tripwire if anyone
     'optimizes' it back to a BLAS matmul that re-associates the sums
-    and flips a near-tie assignment."""
-    queries = emb.filter(F.col("vec_id") < 8)
-    cb = pq._localize(pq.pq_codebooks(emb, 16, 16, 64))
-    codes = pq.pq_encode(emb, cb, 16, 64)
-    staged = pq.pq_adc_topk_block(codes, cb, queries, k=5, n_subspaces=16, dim=64)
-    fused = pq.pq_encode_adc_topk_block(emb, cb, queries, k=5, n_subspaces=16, dim=64)
-    assert _rows(staged) == _rows(fused)
+    and flips a near-tie assignment.
+
+    The second corpus poisons the codebook: its NaN component enters a
+    Lloyd mean and trains a NaN codeword at (m=0, cid=1). The staged
+    min(struct(d, cid)) orders that codeword's NaN distance above every
+    number; the fused argmin must too, or every subvector lands on the
+    NaN codeword and every sim is masked (0 rows instead of 12)."""
+    import random
+
+    rnd = random.Random(11)
+    poisoned = spark.createDataFrame(
+        [(i, [rnd.gauss(0, 1) for _ in range(16)]) for i in range(30)]
+        + [(30, [float("nan")] + [1.0] * 15)],
+        "vec_id long, embedding array<double>",
+    )
+    for corpus, n_queries, k, n_sub, n_codes, dim, n_rows in (
+        (emb, 8, 5, 16, 16, 64, 40),
+        (poisoned, 4, 3, 4, 4, 16, 12),
+    ):
+        queries = corpus.filter(F.col("vec_id") < n_queries)
+        cb = pq._localize(pq.pq_codebooks(corpus, n_sub, n_codes, dim))
+        codes = pq.pq_encode(corpus, cb, n_sub, dim)
+        staged = pq.pq_adc_topk_block(codes, cb, queries, k=k, n_subspaces=n_sub, dim=dim)
+        fused = pq.pq_encode_adc_topk_block(corpus, cb, queries, k=k, n_subspaces=n_sub, dim=dim)
+        assert len(_rows(staged)) == n_rows
+        assert _rows(staged) == _rows(fused)
 
 
 def test_indivisible_dim_raises():

@@ -651,26 +651,68 @@ def test_brute_force_topk_block_matches_hof(spark):
 
 
 def test_block_kernels_drop_degenerate_vectors(spark):
-    """Dirty-data policy pin: NULL and zero-norm vectors are dropped at
-    the kernel boundary — they never query and never win (the HOF twin
-    instead propagates NULL sims / raises on zero under ANSI; that
-    divergence is documented, this pins the kernel side)."""
-    from rustic_witcher_spark.operators.similarity import brute_force_topk_block, hard_negative_top1_block
+    """Dirty-data policy pin for every block face: NULL, zero-norm and
+    NaN-component vectors are dropped at the kernel boundary — they
+    never query, and in the raw-vector kernels they never win; an exact
+    tie goes to the smaller neighbor id. (The HOF twins instead
+    propagate NULL sims / raise on zero under ANSI; that divergence is
+    documented, this pins the kernel side.)"""
+    from pyspark.sql import functions as F
 
-    rows = [
-        (0, [1.0, 0.0], 1),
-        (2, None, 2),           # NULL vector: never a neighbor
-        (3, [-1.0, -0.1], 2),   # real (negative-sim) candidate
-        (4, [0.0, 0.0], 2),     # zero vector: no direction, must not win
-    ]
-    df = spark.createDataFrame(rows, EMB_SCHEMA)
-    out = hard_negative_top1_block(df, 1).collect()
-    assert len(out) == 1
-    assert out[0]["neighbor_id"] == 3  # the real candidate, not the zero vec
-    assert out[0]["sim"] < 0
+    from rustic_witcher_spark.operators import pq
+    from rustic_witcher_spark.operators.similarity import (
+        brute_force_topk_block,
+        exclusion_top1_block,
+        hard_negative_top1_block,
+    )
 
-    topk = brute_force_topk_block(df, df.filter("vec_id = 0"), k=5).collect()
-    assert sorted(r["neighbor_id"] for r in topk) == [3]  # NULL/zero dropped
+    base = spark.createDataFrame(
+        [
+            (0, [1.0, 0.0], 1),            # the one live query
+            (1, None, 2),                  # NULL vector
+            (2, [0.0, 0.0], 2),            # zero vector: no direction
+            (3, [float("nan"), 1.0], 2),   # NaN component
+            (10, [-1.0, -0.1], 2),         # real (negative-sim) candidate
+        ],
+        EMB_SCHEMA,
+    )
+    tied = base.unionByName(spark.createDataFrame([(11, [0.6, 0.8], 3), (12, [0.6, 0.8], 3)], EMB_SCHEMA))
+    clean = tied.filter("vec_id IN (0, 10, 11, 12)")
+    cb = pq._localize(pq.pq_codebooks(clean, n_subspaces=2, n_codes=2, dim=2))
 
-    # a NULL-vector query emits nothing instead of NULL-sim rows
-    assert hard_negative_top1_block(df.withColumn("vec_id", df.vec_id + 0), 3).count() == 1
+    def faces(corpus):
+        """face -> (query_id, neighbor_id, sim) rows, queries = ids 0..3"""
+        queries = corpus.filter("vec_id < 4")
+        anchors = queries.select(
+            F.col("vec_id").alias("anchor_id"),
+            F.col("embedding").alias("__qv"),
+            F.lit(None).cast("array<long>").alias("__ex"),
+        )
+        codes = pq.pq_encode(corpus, cb, n_subspaces=2, dim=2)
+        frames = {
+            "hard_negative_top1_block": hard_negative_top1_block(corpus, 4),
+            "brute_force_topk_block": brute_force_topk_block(corpus, queries, k=5),
+            "exclusion_top1_block": exclusion_top1_block(corpus, anchors).withColumnRenamed("anchor_id", "query_id"),
+            "pq_adc_topk_block": pq.pq_adc_topk_block(codes, cb, queries, k=5, n_subspaces=2, dim=2),
+            "pq_encode_adc_topk_block": pq.pq_encode_adc_topk_block(corpus, cb, queries, k=5, n_subspaces=2, dim=2),
+        }
+        return {
+            name: [tuple(r) for r in df.orderBy("query_id", F.col("sim").desc(), "neighbor_id")
+                   .select("query_id", "neighbor_id", "sim").collect()]
+            for name, df in frames.items()
+        }
+
+    raw = ("hard_negative_top1_block", "brute_force_topk_block", "exclusion_top1_block")
+    for name, rows in faces(base).items():
+        assert {q for q, _, _ in rows} == {0}, name  # degenerate queries emit nothing
+        if name in raw:
+            # the negative-sim candidate is the only one that may win
+            assert [(n, s < 0) for _, n, s in rows] == [(10, True)], name
+    for name, rows in faces(tied).items():
+        assert {q for q, _, _ in rows} == {0}, name
+        ranked = [n for _, n, _ in rows]
+        if name in raw:
+            assert ranked[0] == 11, name
+        if name.endswith("_topk_block"):  # both tied rows ranked, smaller id first
+            sims = {n: s for _, n, s in rows}
+            assert sims[11] == sims[12] and ranked.index(11) < ranked.index(12), name

@@ -110,6 +110,28 @@ def test_cli_count_only_command_reads_nothing_back(spark, tmp_path, capsys):
     assert rep["scored_docs"] == 3
 
 
+def test_cli_incremental_novelty_reads_no_scores_back(spark, tmp_path, capsys):
+    """novelty --index reports the batch's scored docs from the count
+    observed on its scores write (kept in the index meta), not from a
+    read-back of the partition it has just written."""
+    from rustic_witcher_spark import cli
+
+    docs = spark.createDataFrame(
+        [(0, "alpha beta gamma delta epsilon"), (1, "alpha beta gamma delta epsilon"),
+         (2, "completely different words here now")],
+        "doc_id long, text string",
+    )
+    src = str(tmp_path / "docs.parquet")
+    docs.write.parquet(src)
+    argv = ["novelty", "--input", src, "--index", str(tmp_path / "idx")]
+    for batch, jobs in ((0, 9), (1, 8)):
+        j0 = _last_job_id(spark)
+        assert cli.main(argv) == 0
+        assert _last_job_id(spark) - j0 == jobs, batch
+        rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert rep == {"mode": "incremental", "index": argv[-1], "batch": batch, "ran": True, "scored_docs": 3}
+
+
 def test_process_table_runs_pipeline_once(spark, src, tmp_path):
     """An anonymized flat-file table costs two Spark jobs: the Parquet
     schema inference on read and the write. The reported row count

@@ -272,6 +272,36 @@ def test_cli_split_empty_input_reports_empty_splits(spark, tmp_path, capsys):
     assert rep["splits"] == {}
 
 
+def test_crash_mid_manifest_write_leaves_no_torn_manifest(spark, tmp_path, monkeypatch):
+    """The manifest is written tmp-then-rename: a crash inside the JSON
+    write of a re-run leaves the torn bytes in the tmp sibling, never
+    under the manifest name, where verify and the streaming appender
+    would fail to parse it. (The re-run's overwrite has already removed
+    the old manifest together with the old data, so the crashed
+    directory holds no manifest until a re-run completes.)"""
+    path = str(tmp_path / "out")
+    want = sh.write_training_shards(_docs(spark), "doc_id", 4, path)
+
+    def torn_dump(obj, fh, *args, **kwargs):
+        fh.write("{")
+        raise OSError("disk full")
+
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", torn_dump)
+        try:
+            sh.write_training_shards(_docs(spark), "doc_id", 4, path)
+        except OSError:
+            pass
+        else:
+            raise AssertionError("the torn manifest write did not raise")
+    manifest = os.path.join(path, sh.MANIFEST_NAME)
+    if os.path.exists(manifest):
+        with open(manifest) as fh:
+            assert json.load(fh) == want
+    assert sh.write_training_shards(_docs(spark), "doc_id", 4, path) == want
+    assert sh.verify_training_shards(spark, path) == []
+
+
 def test_write_empty_corpus_yields_empty_manifest(spark, tmp_path):
     """ADVICE r7 regression: a 0-row input writes only _SUCCESS; the
     manifest read-back must use the writer's schema (inference would
