@@ -56,7 +56,7 @@ from rustic_witcher_spark.operators.similarity import (
     cosine,
     dot,
 )
-from rustic_witcher_spark.streaming.replay_meta import load_meta, store_meta
+from rustic_witcher_spark.streaming.replay_meta import load_meta, recover, store_meta
 
 # persisted layout of <index>/_codebooks (see pq_write_index)
 CODEBOOK_SCHEMA = "m int, cid int, cvec array<double>"
@@ -636,6 +636,7 @@ def pq_query_index(
         dim = dim or n_subspaces * (inferred_dim // inferred_m)
     else:
         cb = codebook_df(spark, path)
+    recover(f"{path}/codes")  # a codes swap `ann_stream.merge_ann_delta` crashed in
     probe_map = None
     cid_col = None
     if os.path.isdir(f"{path}/_centroids"):

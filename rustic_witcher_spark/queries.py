@@ -7032,9 +7032,9 @@ def q_cdc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     The snapshot dir is a fresh mkdtemp per invocation (previous runs
     wiped first) — the novelty_incremental discipline. Scale shape per
     micro-batch: ONE pk-hash shuffle (the last-writer window) plus the
-    anti-join against the snapshot; a production deployment points
-    ``merge_fn`` at Delta/Iceberg MERGE, which is this same join
-    pruned to touched partitions.
+    anti-join against the snapshot; a production deployment registers
+    a Delta/Iceberg MERGE as its foreachBatch callable instead, which
+    is this same join pruned to touched partitions.
 
     Twin: sequential batch replay equals ONE last-ts-wins merge of the
     combined CDC set because ts strictly increases across batches —

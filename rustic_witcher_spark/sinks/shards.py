@@ -30,15 +30,12 @@ construction (n_shards is a config constant, never data-scaled).
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rustic_witcher_spark.functions.hashing import hash64
 from rustic_witcher_spark.operators.packing import training_shards
-from rustic_witcher_spark.streaming.replay_meta import store_meta
+from rustic_witcher_spark.streaming.replay_meta import load_meta, recover, stage, store_meta, swap_in
 
 MANIFEST_NAME = "_shard_manifest.json"
 _DIGEST_MOD = (1 << 61) - 1  # Mersenne prime M61
@@ -62,6 +59,11 @@ def write_training_shards(
     """Shard ``df`` deterministically, write ``shard=N/`` parquet
     partitions under ``path``, and write + return the manifest.
 
+    Shards and manifest are written together into a staged dir that
+    `replay_meta.swap_in` promotes to ``path``: a crash at any point
+    leaves the previous shards with their own manifest, never shards
+    without one.
+
     The upstream lineage (which may carry an expensive dedup/quality
     pipeline, as in ``cli curate``) executes exactly ONCE — the
     partitioned write. The manifest stats aggregate runs over a
@@ -71,11 +73,12 @@ def write_training_shards(
     write-path check — the digest records what actually landed on
     disk, not what the plan was supposed to produce."""
     sharded = training_shards(df, id_col, n_shards, seed=seed)
-    sharded.write.mode("overwrite").partitionBy("shard").parquet(path)
+    staged = stage(path)
+    sharded.write.mode("overwrite").partitionBy("shard").parquet(staged)
     # explicit schema: a 0-row input writes only _SUCCESS, and a
     # schema-inference read-back would die with UNABLE_TO_INFER_SCHEMA
     # instead of yielding the empty manifest an empty corpus deserves
-    written = sharded.sparkSession.read.schema(sharded.schema).parquet(path)
+    written = sharded.sparkSession.read.schema(sharded.schema).parquet(staged)
     stats = {
         int(r["shard"]): {"n_rows": int(r["n_rows"]), "digest": int(r["digest"])}
         for r in _shard_stats(written, id_col, seed).collect()
@@ -87,10 +90,8 @@ def write_training_shards(
         "total_rows": sum(s["n_rows"] for s in stats.values()),
         "shards": {str(k): stats[k] for k in sorted(stats)},
     }
-    # tmp + rename: a crash mid-write leaves no manifest (the overwrite
-    # above removed the old one), never a torn one that neither verify
-    # nor the next append could parse
-    store_meta(path, MANIFEST_NAME, manifest)
+    store_meta(staged, MANIFEST_NAME, manifest)
+    swap_in(path)
     return manifest
 
 
@@ -101,8 +102,10 @@ def verify_training_shards(spark: SparkSession, path: str) -> list[str]:
     The digest recompute is one aggregate over the re-read — order-
     and partitioning-insensitive by design, so a re-read through any
     split strategy verifies."""
-    with open(os.path.join(path, MANIFEST_NAME)) as fh:
-        manifest = json.load(fh)
+    recover(path)
+    manifest = load_meta(path, MANIFEST_NAME, {})
+    if not manifest:
+        return [f"no manifest: {MANIFEST_NAME} is missing from {path}"]
     if manifest["shards"]:
         df = spark.read.parquet(path)
     else:

@@ -39,17 +39,17 @@ from pyspark.sql import functions as F
 
 from rustic_witcher_spark.operators import pq
 from rustic_witcher_spark.sinks.parquet import write_parquet
-from rustic_witcher_spark.streaming.replay_meta import load_meta, store_meta
+from rustic_witcher_spark.streaming.replay_meta import (
+    advance,
+    load_meta,
+    read_indexed,
+    recover,
+    stage,
+    store_meta,
+    swap_in,
+)
 
 META_NAME = "_ann_delta_meta.json"
-
-
-def _load_meta(path: str) -> dict:
-    return load_meta(path, META_NAME)
-
-
-def _store_meta(path: str, meta: dict) -> None:
-    store_meta(path, META_NAME, meta)
 
 
 def _delta_schema(id_col: str, with_cid: bool) -> str:
@@ -78,7 +78,7 @@ def ann_index_append_batch(
     contract), so a caller driving many batches — or one that already
     probed the geometry for an empty-base check — passes it through
     instead of re-paying the codebook aggregate job per call."""
-    meta = _load_meta(delta_path)
+    meta = load_meta(delta_path, META_NAME)
     if batch_id <= meta.get("last_batch_id", -1):
         return False
     spark = batch_df.sparkSession
@@ -111,10 +111,7 @@ def ann_index_append_batch(
             ).select(id_col, "cid")
             codes = codes.join(lists, id_col)
     batch_dir = os.path.join(delta_path, "data", f"batch={batch_id}")
-    appended = write_parquet(codes, batch_dir)
-    meta["last_batch_id"] = batch_id
-    meta["indexed_rows"] = meta.get("indexed_rows", 0) + appended
-    _store_meta(delta_path, meta)
+    advance(delta_path, META_NAME, meta, batch_id, write_parquet(codes, batch_dir))
     return True
 
 
@@ -157,20 +154,14 @@ def read_delta_codes(
     from pyspark.sql import Window
 
     with_cid = os.path.isdir(f"{base_index_path}/_centroids")
-    schema = _delta_schema(id_col, with_cid)
-    data_dir = os.path.join(delta_path, "data")
     if meta is None:
-        meta = _load_meta(delta_path)
-    if not os.path.isdir(data_dir) or meta.get("indexed_rows", 0) == 0:
-        return spark.createDataFrame([], schema)
+        meta = load_meta(delta_path, META_NAME)
     order = [F.col("batch").asc(), F.concat_ws(",", F.col("codes").cast("array<string>")).asc()]
     if with_cid:
         order.append(F.col("cid").asc())
     w = Window.partitionBy(id_col).orderBy(*order)
     return (
-        spark.read.schema(schema + ", batch long")
-        .parquet(data_dir)
-        .filter(F.col("batch") <= meta.get("last_batch_id", -1))
+        read_indexed(spark, os.path.join(delta_path, "data"), _delta_schema(id_col, with_cid), meta)
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("batch", "__rn")
@@ -209,12 +200,13 @@ def merge_ann_delta(spark, base_index_path: str, delta_path: str, id_col: str = 
 
     Id collisions (contract violation — ids are unique across the
     stream) resolve base-wins, so a merge can never silently replace
-    an already-indexed vector. The base codes dir is rewritten via the
-    same rename swap as the media-index compactor (documented
-    non-atomic window; recovery = rename ``codes_old`` back)."""
+    an already-indexed vector. The base codes dir is replaced through
+    `replay_meta.swap_in`, like the media-index compaction: a crash at
+    any point leaves base queries working (`pq.pq_query_index` recovers
+    the swap before it reads), and a re-run folds the same delta."""
     import shutil
 
-    meta = _load_meta(delta_path)
+    meta = load_meta(delta_path, META_NAME)
     with_cid = os.path.isdir(f"{base_index_path}/_centroids")
     # ONE meta snapshot decides the fold set, the cleanup set, and the
     # row accounting: re-reading the meta here could see a cursor a
@@ -226,20 +218,14 @@ def merge_ann_delta(spark, base_index_path: str, delta_path: str, id_col: str = 
     if n_delta == 0:
         return {**meta, "merged_rows": 0}
     base_dir = f"{base_index_path}/codes"
+    recover(base_dir)
     base = spark.read.schema(_delta_schema(id_col, with_cid)).parquet(base_dir)
     fresh = delta.join(base.select(id_col), id_col, "left_anti")
-    merged = base.unionByName(fresh)
-    compact_dir = f"{base_index_path}/codes_compact"
-    shutil.rmtree(compact_dir, ignore_errors=True)
-    writer = merged.write.mode("overwrite")
+    writer = base.unionByName(fresh).write.mode("overwrite")
     if with_cid:
         writer = writer.partitionBy("cid")
-    writer.parquet(compact_dir)
-    old = f"{base_index_path}/codes_old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(base_dir, old)
-    os.rename(compact_dir, base_dir)
-    shutil.rmtree(old)
+    writer.parquet(stage(base_dir))
+    swap_in(base_dir)
     # drop only the batch partitions that were folded (≤ cursor): a
     # torn-write batch dir past the cursor stays put for its scheduled
     # replay, which overwrites it byte-for-byte and re-cursors it
@@ -253,9 +239,9 @@ def merge_ann_delta(spark, base_index_path: str, delta_path: str, id_col: str = 
     # snapshot back would rewind last_batch_id (un-skipping a replay of
     # a batch whose rows this merge just folded). Subtract only what
     # was actually folded; an advanced cursor survives.
-    fresh_meta = _load_meta(delta_path)
+    fresh_meta = load_meta(delta_path, META_NAME)
     fresh_meta["indexed_rows"] = max(0, fresh_meta.get("indexed_rows", 0) - n_delta)
-    _store_meta(delta_path, fresh_meta)
+    store_meta(delta_path, META_NAME, fresh_meta)
     return {**fresh_meta, "merged_rows": n_delta}
 
 

@@ -15,8 +15,9 @@ Design (the shard-appender pattern, `streaming/shard_stream.py`):
   records ``last_batch_id``; a replayed (≤) batch is skipped before
   any write. Both outputs are batch-partitioned and written with
   overwrite (``flags/batch=<id>``, ``data/batch=<id>``), and the index
-  read is FILTERED to strictly older batches — so a replay that does
-  run (crash between the data write and the meta write) re-flags
+  read is FILTERED to the batches at or below the cursor
+  (`replay_meta.read_indexed`) — so a replay that does run (crash
+  between the data write and the meta write) re-flags
   against exactly the pre-batch index (never seeing its own
   fingerprints, which would flag the whole batch as dups of itself)
   and rewrites its own partitions byte-for-byte instead of appending
@@ -33,22 +34,20 @@ import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from rustic_witcher_spark.operators.dedup import incremental_hamming_flags
 from rustic_witcher_spark.operators.multimodal import attach_perceptual_hash
 from rustic_witcher_spark.sinks.parquet import write_parquet
-from rustic_witcher_spark.streaming.replay_meta import load_meta, store_meta
+from rustic_witcher_spark.streaming.replay_meta import (
+    advance,
+    load_meta,
+    read_indexed,
+    recover,
+    stage,
+    swap_in,
+)
 
 META_NAME = "_media_index_meta.json"
-
-
-def _load_meta(path: str) -> dict:
-    return load_meta(path, META_NAME)
-
-
-def _store_meta(path: str, meta: dict) -> None:
-    store_meta(path, META_NAME, meta)
 
 
 def media_index_append_batch(
@@ -65,7 +64,7 @@ def media_index_append_batch(
     touching the index (schemas are always passed explicitly on
     read-back — a 0-row parquet dir must not raise
     UNABLE_TO_INFER_SCHEMA, the `sinks/shards.py` lesson)."""
-    meta = _load_meta(index_path)
+    meta = load_meta(index_path, META_NAME)
     if batch_id <= meta.get("last_batch_id", -1):
         return False
     spark = batch_df.sparkSession
@@ -76,19 +75,10 @@ def media_index_append_batch(
     hashed = hashed.persist()
     try:
         data_dir = os.path.join(index_path, "data")
-        if meta.get("indexed_rows", 0) > 0:
-            # the index is batch-partitioned; read strictly OLDER batches
-            # so a crash-replay (data appended, meta not yet written)
-            # re-flags against exactly the pre-batch index instead of
-            # seeing its own fingerprints and flagging itself as dups
-            idx_schema = hashed.schema.add("batch", T.LongType())
-            index = (
-                spark.read.schema(idx_schema).parquet(data_dir)
-                .filter(F.col("batch") < batch_id)
-                .select(id_col, "phash")
-            )
-        else:
-            index = spark.createDataFrame([], hashed.schema)
+        # the cursored index only: a crash-replay (data appended, meta
+        # not yet written) re-flags against exactly the pre-batch index
+        # instead of seeing its own fingerprints and flagging itself
+        index = read_indexed(spark, data_dir, hashed.schema.toDDL(), meta).select(id_col, "phash")
 
         both = hashed.withColumn("__new", F.lit(True)).unionByName(index.withColumn("__new", F.lit(False)))
         flags = incremental_hamming_flags(both, id_col, "phash", F.col("__new"), max_hamming)
@@ -113,9 +103,7 @@ def media_index_append_batch(
         appended = write_parquet(fresh, batch_dir)
     finally:
         hashed.unpersist()
-    meta["last_batch_id"] = batch_id
-    meta["indexed_rows"] = meta.get("indexed_rows", 0) + appended
-    _store_meta(index_path, meta)
+    advance(index_path, META_NAME, meta, batch_id, appended)
     return True
 
 
@@ -127,54 +115,28 @@ def compact_media_index(spark, index_path: str) -> dict:
 
     Safe with respect to replay: only batches AT OR BELOW the replay
     cursor are compacted, into ``batch=<last_batch_id>`` — which the
-    index read (``batch < next_id``) still sees for every future
-    batch, and the cursor means no batch ≤ last_batch_id can re-run.
-    A batch dir PAST the cursor (torn write: data landed, crash before
-    the meta update) is carried through untouched — folding it down to
+    cursored index read still sees for every future batch, and the
+    cursor means no batch ≤ last_batch_id can re-run. A batch dir PAST
+    the cursor (torn write: data landed, crash before the meta update)
+    is carried through the swap untouched — folding it down to
     ``batch=<last_batch_id>`` would let its own scheduled replay see
     its own fingerprints in the pre-batch index and flag the whole
     batch as exact dups of itself. Fingerprints are already unique
     across the cursored index (exact-dups are never re-indexed;
     replays overwrite their own partition), so compaction is purely
-    file layout. The old data is swapped via rename with a documented
-    non-atomic window (data_old left behind on a crash between
-    renames — recovery is renaming it back), the same
-    parquet-directory-level trade as the shard sink's manifest."""
-    import shutil
-
-    meta = _load_meta(index_path)
+    file layout. The new layout replaces ``data`` through
+    `replay_meta.swap_in`: a crash at any point leaves a working
+    index, which the next read or compaction recovers."""
+    meta = load_meta(index_path, META_NAME)
     cursor = meta.get("last_batch_id", -1)
     if cursor < 0 or meta.get("indexed_rows", 0) == 0:
         return meta
     data_dir = os.path.join(index_path, "data")
-    df = spark.read.parquet(data_dir)  # schema known-present: indexed_rows > 0
-    cols = [c for c in df.columns if c != "batch"]
-    compact_root = os.path.join(index_path, "data_compact")
-    shutil.rmtree(compact_root, ignore_errors=True)
-    target = os.path.join(compact_root, f"batch={cursor}")
-    df.filter(F.col("batch") <= cursor).select(*cols).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(target)
-    # carry torn-write batch dirs (> cursor) through the swap unchanged
-    for name in os.listdir(data_dir):
-        if name.startswith("batch=") and int(name.split("=", 1)[1]) > cursor:
-            os.rename(os.path.join(data_dir, name), os.path.join(compact_root, name))
-    old = os.path.join(index_path, "data_old")
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(data_dir, old)
-    os.rename(compact_root, data_dir)
-    # Rescue any batch dir a live appender landed between the carry
-    # loop's listdir and the rename: it rode into `old` with the swap,
-    # is > cursor (the cursor means no batch at or below it can run
-    # again), and wasn't in the carry snapshot — without this it would
-    # be rmtree'd while the appender's meta records it as indexed,
-    # silently losing its fingerprints forever.
-    for name in os.listdir(old):
-        if name.startswith("batch=") and int(name.split("=", 1)[1]) > cursor:
-            dest = os.path.join(data_dir, name)
-            if not os.path.exists(dest):
-                os.rename(os.path.join(old, name), dest)
-    shutil.rmtree(old)
+    recover(data_dir)
+    ddl = spark.read.parquet(data_dir).drop("batch").schema.toDDL()  # present: indexed_rows > 0
+    compacted = read_indexed(spark, data_dir, ddl, meta).drop("batch").coalesce(1)
+    compacted.write.mode("overwrite").parquet(os.path.join(stage(data_dir), f"batch={cursor}"))
+    swap_in(data_dir, cursor)
     return meta
 
 

@@ -2,8 +2,9 @@
 ``operators.scd2.scd2_intervals``.
 
 Each micro-batch of change events merges into a materialized SCD2
-history (parquet snapshot via the same crash-safe swap as
-cdc_stream.py; production points the merger at Delta/Iceberg MERGE):
+history (a parquet snapshot replaced through `replay_meta`'s
+crash-safe directory swap, like cdc_stream.py; a Delta/Iceberg MERGE
+plugs in as its own ``writeStream.foreachBatch`` callable):
 
 1. split the history into TOUCHED keys (present in the batch — a semi
    join on the batch's distinct keys; AQE broadcasts a normal-sized
@@ -42,15 +43,15 @@ proportional to batch key cardinality, never to history size.
 
 from __future__ import annotations
 
+import os
 from collections.abc import Sequence
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from rustic_witcher_spark.operators.scd2 import scd2_intervals
-from rustic_witcher_spark.streaming.cdc_stream import _recover, _swap_in
 from rustic_witcher_spark.sources.parquet import read_table_files
+from rustic_witcher_spark.streaming.replay_meta import recover, stage, swap_in
 
 
 def scd2_merge(
@@ -127,22 +128,19 @@ def scd2_snapshot_merger(
     tiebreak_cols: Sequence[str] = (),
 ):
     """foreachBatch callable maintaining a parquet SCD2 history with
-    the crash-safe backup/promote swap from cdc_stream."""
-    final = Path(history_path)
-    tmp = Path(f"{history_path}__next")
-    _recover(final)
+    `replay_meta`'s crash-safe directory swap."""
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        _recover(final)
-        if final.exists():
-            history = read_table_files(spark, (str(final),))
+        recover(history_path)
+        if os.path.exists(history_path):
+            history = read_table_files(spark, (history_path,))
             merged = scd2_merge(history, batch_df, key_cols, attr_cols, ts_col, tiebreak_cols)
         else:
             merged = scd2_intervals(
                 batch_df, key_cols, attr_cols, ts_col, tiebreak_cols, keep_tiebreak=True
             )
-        merged.write.mode("overwrite").parquet(str(tmp))
-        _swap_in(tmp, final)
+        merged.write.mode("overwrite").parquet(stage(history_path))
+        swap_in(history_path)
 
     return merge
 
@@ -156,12 +154,10 @@ def streaming_scd2_apply(
     ts_col: str,
     checkpoint: str,
     tiebreak_cols: Sequence[str] = (),
-    merge_fn=None,
 ):
-    """Start the continuous SCD2-maintenance query."""
-    fn = merge_fn or scd2_snapshot_merger(
-        spark, history_path, key_cols, attr_cols, ts_col, tiebreak_cols
-    )
+    """Start the continuous SCD2-maintenance query over the parquet
+    history merger."""
+    fn = scd2_snapshot_merger(spark, history_path, key_cols, attr_cols, ts_col, tiebreak_cols)
     return (
         change_stream.writeStream.foreachBatch(fn)
         .option("checkpointLocation", checkpoint)

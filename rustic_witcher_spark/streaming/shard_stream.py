@@ -20,8 +20,10 @@ design rather than re-implementing it:
   before any write. The one non-atomic window — crash AFTER the data
   append but BEFORE the manifest write — re-appends the batch on
   recovery, which the digest then counts twice; ``verify`` flags
-  exactly that shard, which is the audit doing its job (the batch
-  sink's overwrite mode has the same torn-write window). True
+  exactly that shard, which is the audit doing its job. (The batch
+  sink has no such window: it writes shards and manifest into a staged
+  dir and swaps the whole dir in with `replay_meta.swap_in`, which an
+  append cannot do without rewriting every shard.) True
   transactional appends need a table format with commit logs; this
   sink stays at parquet-directory level by design, like the reference
   export path (rustic-anonymization-operator's parquet writer).

@@ -98,6 +98,13 @@ def test_cli_shard_and_verify(spark, tmp_path, capsys):
     rows = part.collect()[:-1]
     spark.createDataFrame(rows, part.schema).write.mode("overwrite").parquet(f"{out}/shard=0")
     assert cli.main(["shard-verify", "--path", out]) == 1
+    capsys.readouterr()
+
+    # a missing manifest is a reported violation, not a traceback
+    os.remove(os.path.join(out, "_shard_manifest.json"))
+    assert cli.main(["shard-verify", "--path", out]) == 1
+    report = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert report["ok"] is False and report["problems"]
 
 
 def test_cli_curate_end_to_end(spark, tmp_path, capsys):
@@ -276,9 +283,10 @@ def test_crash_mid_manifest_write_leaves_no_torn_manifest(spark, tmp_path, monke
     """The manifest is written tmp-then-rename: a crash inside the JSON
     write of a re-run leaves the torn bytes in the tmp sibling, never
     under the manifest name, where verify and the streaming appender
-    would fail to parse it. (The re-run's overwrite has already removed
-    the old manifest together with the old data, so the crashed
-    directory holds no manifest until a re-run completes.)"""
+    would fail to parse it. (The re-run writes shards and manifest into
+    a staged dir that replaces the old one only once both are written,
+    so the crashed directory still holds the previous shards and their
+    manifest, and verifies clean.)"""
     path = str(tmp_path / "out")
     want = sh.write_training_shards(_docs(spark), "doc_id", 4, path)
 
@@ -294,6 +302,7 @@ def test_crash_mid_manifest_write_leaves_no_torn_manifest(spark, tmp_path, monke
             pass
         else:
             raise AssertionError("the torn manifest write did not raise")
+    assert sh.verify_training_shards(spark, path) == []
     manifest = os.path.join(path, sh.MANIFEST_NAME)
     if os.path.exists(manifest):
         with open(manifest) as fh:

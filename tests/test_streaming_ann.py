@@ -175,7 +175,43 @@ def test_merge_folds_delta_into_base_and_keeps_cursor(spark, base_index, tmp_pat
     meta = json.load(open(os.path.join(delta, META_NAME)))
     assert meta["last_batch_id"] == 1 and meta["indexed_rows"] == 0
     assert ann_index_append_batch(spark.createDataFrame(extra[:3], SCHEMA), 1, idx, delta) is False
-    assert not os.path.exists(f"{idx}/codes_old")
+    assert not os.path.exists(f"{idx}/codes__backup")
+
+
+def test_merge_crash_between_renames_keeps_base_queryable(spark, base_index, tmp_path, monkeypatch):
+    """A crash between the two renames of the merge's codes swap (old
+    codes parked, merged codes not yet promoted) leaves no ``codes``
+    dir. Queries must still answer exactly as before the merge, and a
+    re-run must fold every delta row — with no hand rename."""
+    import shutil
+
+    idx = str(tmp_path / "idx")
+    shutil.copytree(base_index, idx)
+    delta = str(tmp_path / "delta")
+    extra = _vectors(12, start=900)
+    ann_index_append_batch(spark.createDataFrame(extra, SCHEMA), 0, idx, delta)
+    queries = spark.createDataFrame(_vectors(4, seed=55, start=950), SCHEMA)
+    before = sorted(map(tuple, query_with_delta(spark, idx, delta, queries, k=5, nprobe=4).collect()))
+    real_rename, renames = os.rename, []
+
+    def crash_on_second_rename(src, dst):
+        renames.append(src)
+        if len(renames) == 2:
+            raise OSError("crash between renames")
+        real_rename(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", crash_on_second_rename)
+        with pytest.raises(OSError, match="crash between renames"):
+            merge_ann_delta(spark, idx, delta)
+    assert not os.path.exists(f"{idx}/codes")
+
+    got = sorted(map(tuple, query_with_delta(spark, idx, delta, queries, k=5, nprobe=4).collect()))
+    assert got == before
+    assert merge_ann_delta(spark, idx, delta)["merged_rows"] == 12
+    codes = spark.read.schema("vec_id long, codes array<int>, cid int").parquet(f"{idx}/codes")
+    assert {r.vec_id for r in codes.collect()} == set(range(60)) | {r[0] for r in extra}
+    assert sorted(map(tuple, pq.pq_query_index(spark, idx, queries, k=5, nprobe=4).collect())) == before
 
 
 def test_merge_during_torn_window_excludes_uncursored_batch(spark, base_index, tmp_path):
@@ -346,16 +382,16 @@ def test_merge_concurrent_append_not_folded_and_cursor_not_rewound(spark, base_i
 
     # merge's FIRST meta load sees the pre-append snapshot (cursor 0);
     # every later load (store-time re-read) sees the real file (cursor 1)
-    real_load, calls = ann_stream._load_meta, []
+    real_load, calls = ann_stream.load_meta, []
 
-    def stale_first(path):
-        m = real_load(path)
+    def stale_first(*args):
+        m = real_load(*args)
         if not calls:
             calls.append(1)
             m = {**m, "last_batch_id": 0, "indexed_rows": 4}
         return m
 
-    monkeypatch.setattr(ann_stream, "_load_meta", stale_first)
+    monkeypatch.setattr(ann_stream, "load_meta", stale_first)
     rep = merge_ann_delta(spark, idx, delta)
     monkeypatch.undo()
 

@@ -3,6 +3,10 @@ micro-batches and the stateless fingerprint projection on a stream."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from rustic_witcher_spark.streaming import dedup as sdedup
 
 SCHEMA = "doc_id long, text string"
@@ -114,10 +118,11 @@ def test_snapshot_swap_is_crash_safe(spark, tmp_path):
     pre-crash snapshot: the old rmtree(final)->rename(tmp) sequence had
     a window with no snapshot at all, after which the merger silently
     treated the missing path as an empty base."""
-    from rustic_witcher_spark.streaming.cdc_stream import _backup_path, _recover, _swap_in
+    from rustic_witcher_spark.streaming.replay_meta import recover, swap_in
 
     final = tmp_path / "snap"
     tmp = tmp_path / "snap__next"
+    backup = tmp_path / "snap__backup"
 
     def mkdir_with(path, tag):
         path.mkdir()
@@ -126,35 +131,63 @@ def test_snapshot_swap_is_crash_safe(spark, tmp_path):
     # normal swap: tmp promoted, no backup left behind
     mkdir_with(final, "old")
     mkdir_with(tmp, "new")
-    _swap_in(tmp, final)
+    swap_in(str(final))
     assert (final / "data.txt").read_text() == "new"
-    assert not _backup_path(final).exists() and not tmp.exists()
+    assert not backup.exists() and not tmp.exists()
 
     # crash after final->backup rename but before tmp promotion:
     # recovery restores the parked snapshot
-    final.rename(_backup_path(final))
+    final.rename(backup)
     assert not final.exists()
-    _recover(final)
+    recover(str(final))
     assert (final / "data.txt").read_text() == "new"
 
     # crash after tmp promotion but before backup cleanup: the live
     # snapshot wins and the stale backup is dropped
-    mkdir_with(_backup_path(final), "stale")
-    _recover(final)
+    mkdir_with(backup, "stale")
+    recover(str(final))
     assert (final / "data.txt").read_text() == "new"
-    assert not _backup_path(final).exists()
+    assert not backup.exists()
+
+
+def test_swap_carry_survives_a_crash_mid_carry(tmp_path, monkeypatch):
+    """A compaction swap carries the parked layout's batch dirs above
+    ITS cursor into the promoted one. A crash mid-carry must not lose
+    the rest when recovery runs after an appender has already advanced
+    the meta cursor: the carry cursor is parked with the backup."""
+    from rustic_witcher_spark.streaming.replay_meta import recover, stage, swap_in
+
+    data = tmp_path / "data"
+    for n in (0, 1, 2, 3):
+        (data / f"batch={n}").mkdir(parents=True)
+    os.makedirs(os.path.join(stage(str(data)), "batch=1"))  # batches 0-1, compacted
+    real_rename, renames = os.rename, []
+
+    def crash_on_third_rename(src, dst):
+        renames.append(src)
+        if len(renames) == 3:  # park, promote, then the first carry
+            raise OSError("crash mid-carry")
+        real_rename(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", crash_on_third_rename)
+        with pytest.raises(OSError, match="crash mid-carry"):
+            swap_in(str(data), 1)
+    recover(str(data))
+    assert sorted(os.listdir(data)) == ["batch=1", "batch=2", "batch=3"]
+    assert not (tmp_path / "data__backup").exists()
 
 
 def test_snapshot_merger_recovers_backup_on_startup(spark, tmp_path):
     """parquet_snapshot_merger must roll a parked backup forward before
     its first merge, so pre-crash rows survive into the next batch."""
-    from rustic_witcher_spark.streaming.cdc_stream import _backup_path, parquet_snapshot_merger
+    from rustic_witcher_spark.streaming.cdc_stream import parquet_snapshot_merger
 
     snap = tmp_path / "snapshot"
     schema = "k long, name string, Op string, _dms_ingestion_timestamp long"
     # pre-crash snapshot, parked as backup (crash happened mid-swap)
     spark.createDataFrame([(1, "a")], "k long, name string").write.parquet(
-        str(_backup_path(snap))
+        str(tmp_path / "snapshot__backup")
     )
     merge = parquet_snapshot_merger(spark, str(snap), ["k"])
     merge(spark.createDataFrame([(2, "b", "I", 1)], schema), 0)

@@ -237,7 +237,7 @@ def test_compact_media_index_preserves_set_and_future_flags(spark, tmp_path):
     after = {(r.doc_id, r.phash) for r in data.collect()}
     assert after == before
     assert data.select("batch").distinct().count() == 1  # one partition now
-    assert not os.path.exists(os.path.join(midx, "data_old"))
+    assert not os.path.exists(os.path.join(midx, "data__backup"))
     # next batch still flags against the compacted index
     media_index_append_batch(
         spark.createDataFrame([(4, _blob(0)), (5, _blob(9))], SCHEMA), 3, "doc_id", "media", midx
@@ -284,6 +284,43 @@ def test_compact_during_torn_window_leaves_uncursored_batch(spark, tmp_path):
     assert spark.read.parquet(os.path.join(midx, "data")).count() == 3
 
 
+def test_compaction_crash_between_renames_leaves_a_working_index(spark, tmp_path, monkeypatch):
+    """A crash between the two renames of the compaction's directory
+    swap (old layout parked, new layout not yet promoted) leaves no
+    ``data`` dir. The next batch must still flag against every indexed
+    fingerprint, and a re-run of the compaction must succeed — with
+    no hand rename in between."""
+    from rustic_witcher_spark.streaming.media_dedup import compact_media_index
+
+    midx = str(tmp_path / "midx")
+    for bi, rows in enumerate([[(1, _blob(0))], [(2, _blob(1))]]):
+        media_index_append_batch(spark.createDataFrame(rows, SCHEMA), bi, "doc_id", "media", midx)
+    real_rename, renames = os.rename, []
+
+    def crash_on_second_rename(src, dst):
+        renames.append(src)
+        if len(renames) == 2:
+            raise OSError("crash between renames")
+        real_rename(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", crash_on_second_rename)
+        with pytest.raises(OSError, match="crash between renames"):
+            compact_media_index(spark, midx)
+    assert not os.path.exists(os.path.join(midx, "data"))
+
+    # a re-upload of doc 1's blob is an exact dup; a new blob is not
+    media_index_append_batch(
+        spark.createDataFrame([(3, _blob(0)), (4, _blob(9))], SCHEMA), 2, "doc_id", "media", midx
+    )
+    f = _flags(spark, midx)
+    assert f[3] == (True, True) and f[4] == (False, False)
+    assert compact_media_index(spark, midx)["last_batch_id"] == 2
+    data = spark.read.parquet(os.path.join(midx, "data"))
+    assert {r.doc_id for r in data.collect()} == {1, 2, 4}
+    assert data.select("batch").distinct().count() == 1
+
+
 def test_compact_empty_index_is_noop(spark, tmp_path):
     from rustic_witcher_spark.streaming.media_dedup import compact_media_index
 
@@ -309,9 +346,9 @@ def test_cli_media_index_compact(spark, tmp_path, capsys):
 
 def test_compact_rescues_batch_landed_in_rename_window(spark, tmp_path, monkeypatch):
     """Regression for the compactor-vs-appender race: a batch dir the
-    appender lands between the carry loop's listdir snapshot and the
-    data→data_old rename rides into data_old with the swap. It must be
-    rescued into the new layout before data_old is deleted — otherwise
+    appender lands before the data→data__backup rename rides into the
+    backup with the swap. It must be carried into the new layout
+    before the backup is deleted — otherwise
     its fingerprints are lost forever while the appender's meta records
     the batch as indexed (so no replay ever rewrites them)."""
     from rustic_witcher_spark.streaming import media_dedup
@@ -347,7 +384,7 @@ def test_compact_rescues_batch_landed_in_rename_window(spark, tmp_path, monkeypa
     json.dump(meta, open(meta_path, "w"))
 
     assert os.path.isdir(os.path.join(data_dir, "batch=2"))
-    assert not os.path.exists(os.path.join(midx, "data_old"))
+    assert not os.path.exists(os.path.join(midx, "data__backup"))
     data = spark.read.parquet(data_dir)
     assert {r.doc_id for r in data.collect()} == {1, 2, 3}
     # a re-upload of doc 3's blob still flags as a dup — the rescued
