@@ -2,8 +2,10 @@
 
 Several operators (SemDeDup's assignment subtree, the curation
 pipeline's shared stages, connected-components' per-round lineage
-truncation) materialize an intermediate DataFrame once instead of
-recomputing it per consumer / letting the plan double per iteration.
+truncation, and the k-means trainer behind ``similarity.ivf_centroids``
+and ``pq.pq_codebooks``) materialize an intermediate DataFrame once
+instead of recomputing it per consumer / letting the plan double per
+iteration.
 
 HOW to materialize is a deployment decision, not an operator decision:
 
@@ -13,10 +15,12 @@ HOW to materialize is a deployment decision, not an operator decision:
 - ``reliable``: ``checkpoint`` — blocks on the cluster's checkpoint
   dir (HDFS/S3); a lost node costs a re-read, not the job. Requires
   ``spark.sparkContext.setCheckpointDir(...)`` to have been called.
-  Right for hours-long 100 TB runs.
+  Right for hours-long 100 TB runs. Every IVF and PQ face trains
+  through the trainer, so under this mode they all need the dir.
 - ``persist``: ``persist(MEMORY_AND_DISK_2)`` — 2×-replicated cache;
   keeps lineage (recompute still possible) at 2× storage cost.
-- ``off``: return the plan untouched (recompute per consumer).
+- ``off``: return the plan untouched (recompute per consumer — a
+  trained IVF/PQ model is then re-trained by each job that reads it).
 
 Selected via ``SPARK_GRAFT_MATERIALIZE`` so cluster deployments can
 flip the strategy without touching operator call sites.

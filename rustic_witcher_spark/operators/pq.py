@@ -20,7 +20,9 @@ Design notes for the 100 TB shape:
 
 - Codebooks are (n_subspaces x n_codes) subvectors — a few KB. They
   broadcast everywhere; training them reads the corpus twice (seed
-  sample + one Lloyd pass), both as plain DataFrame aggregations.
+  sample + one Lloyd pass), both as plain DataFrame aggregations, and
+  the trained codebook is cut from lineage once (``similarity._lloyd``)
+  so no consumer trains it again.
 - Encoding is one corpus pass producing (id, codes array<int>) — this
   is the artifact you persist (``pq_write_index``); re-encoding only
   happens when the codebook is retrained.
@@ -42,7 +44,7 @@ this module extends the training-data-pipeline surface (SURVEY §2's
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rustic_witcher_spark.functions.wordlists import DEFAULT_SEED
@@ -50,11 +52,15 @@ from rustic_witcher_spark.operators.similarity import (
     _block_topk,
     _empty_top_k,
     _exact_top_k,
+    _lloyd,
     _query_block,
     _rank_top_k,
     _round_half_away,
+    _seed_sample,
     cosine,
     dot,
+    ivf_assign,
+    ivf_centroids,
 )
 from rustic_witcher_spark.streaming.replay_meta import load_meta, recover, store_meta
 
@@ -147,44 +153,25 @@ def pq_codebooks(
     seed: int = DEFAULT_SEED,
     iters: int = 1,
 ) -> DataFrame:
-    """Train per-subspace codebooks as (m, cid, cvec).
-
-    Seeding mirrors ``similarity.ivf_centroids``: the initial codewords
-    of EVERY subspace are the slices of the same ``n_codes``
-    md5-hash-ordered sample vectors (no driver randomness — stable
-    across runs, partitionings, and cluster sizes), then ``iters``
-    Lloyd steps refine each subspace independently: assign (broadcast
-    scoring) -> per-(m, cid, pos) mean -> rebuild. A codeword that wins
-    no subvectors drops out (same convention as the IVF oracle —
-    replayed identically by SQL, so the faces cannot drift).
+    """Train per-subspace codebooks as (m, cid, cvec) with the trainer
+    ``similarity.ivf_centroids`` uses: the initial codewords of EVERY
+    subspace are the slices of the same ``n_codes`` ``_seed_sample``
+    vectors, then ``iters`` ``_lloyd`` steps refine each subspace
+    independently, the assignment being squared L2 per subspace
+    (``_assign``). A codeword that wins no subvectors drops out (same
+    convention as the IVF oracle — replayed identically by SQL, so the
+    faces cannot drift). The frame comes back cut from lineage, so
+    callers use it directly.
     """
     if dim % n_subspaces:
         raise ValueError(f"dim {dim} not divisible by n_subspaces {n_subspaces}")
     d_sub = dim // n_subspaces
-    seeds = (
-        corpus.filter(F.col(vec_col).isNotNull())
-        .withColumn("__r", F.md5(F.concat(F.lit(f"{seed}|pq|"), F.col(id_col).cast("string"))))
-        .orderBy("__r", id_col)
-        .limit(n_codes)
-    )
-    # n_codes rows post-limit — the unpartitioned window is benign
-    w = Window.orderBy("__r", id_col)
-    seeded = seeds.select(F.row_number().over(w).alias("cid"), F.col(vec_col).cast("array<double>").alias("__v"))
+    corpus = corpus.filter(F.col(vec_col).isNotNull())
+    seeded = _seed_sample(corpus, n_codes, "pq", seed, id_col, vec_col)
     slices = F.array(*[F.slice(F.col("__v"), j * d_sub + 1, d_sub) for j in range(n_subspaces)])
     cb = seeded.select("cid", F.posexplode(slices).alias("m", "cvec"))
-    sub = None
-    for _ in range(iters):
-        if sub is None:
-            sub = _subvectors(corpus, n_subspaces, d_sub, id_col, vec_col)
-        assigned = _assign(sub, cb, id_col, d_sub)
-        cb = (
-            assigned.select("m", "cid", F.posexplode("sv").alias("pos", "v"))
-            .groupBy("m", "cid", "pos")
-            .agg(F.avg("v").alias("mv"))
-            .groupBy("m", "cid")
-            .agg(F.transform(F.array_sort(F.collect_list(F.struct("pos", "mv"))), lambda s: s["mv"]).alias("cvec"))
-        )
-    return cb
+    sub = _subvectors(corpus, n_subspaces, d_sub, id_col, vec_col)
+    return _lloyd(cb, lambda c: _assign(sub, c, id_col, d_sub), "sv", iters, "m")
 
 
 def pq_encode(
@@ -228,7 +215,7 @@ def pq_adc_topk(
     Returns (query_id, neighbor_id, sim, rank); self-matches excluded;
     ties break on neighbor id.
     """
-    cb = _localize(pq_codebooks(corpus, n_subspaces, n_codes, dim, id_col, vec_col, seed, iters))
+    cb = pq_codebooks(corpus, n_subspaces, n_codes, dim, id_col, vec_col, seed, iters)
     codes = pq_encode(corpus, cb, n_subspaces, dim, id_col, vec_col)
     # (m|cid) -> codeword map as ONE broadcast row; reconstruction is a
     # pure expression over it — no shuffle, no per-row python
@@ -481,8 +468,6 @@ def residual_frame(
     The subtraction is ELEMENTWISE (zip_with) — no accumulation, so
     the DuckDB twin's list_transform(i -> v[i] − c[i]) is bit-exact.
     NULL vectors drop at the ivf_assign choke point (r9 convention)."""
-    from rustic_witcher_spark.operators.similarity import ivf_assign
-
     assign = ivf_assign(corpus, centroids, id_col, vec_col, nprobe=1).select(id_col, "cid")
     cvt = centroids.select("cid", "cvec")
     return (
@@ -530,19 +515,14 @@ def pq_write_index(
     readers without the marker treat the index as raw (pre-r10
     layouts keep working).
     """
-    spark = corpus.sparkSession
     if residual:
         if coarse_clusters <= 0:
             raise ValueError("residual=True requires coarse_clusters > 0")
-        from rustic_witcher_spark.operators.similarity import ivf_centroids
-
         cent = ivf_centroids(corpus, coarse_clusters, id_col, vec_col, seed=seed, iters=iters)
         cent.write.mode("overwrite").parquet(f"{path}/_centroids")
-        cent = spark.read.schema("cid int, cvec array<double>").parquet(f"{path}/_centroids")
         res = residual_frame(corpus, cent, id_col, vec_col)
         cb = pq_codebooks(res, n_subspaces, n_codes, dim, id_col, "rv", seed, iters)
         cb.write.mode("overwrite").parquet(f"{path}/_codebooks")
-        cb = spark.read.schema(CODEBOOK_SCHEMA).parquet(f"{path}/_codebooks")
         codes = pq_encode(res, cb, n_subspaces, dim, id_col, "rv")
         codes.join(res.select(id_col, "cid"), id_col).write.mode("overwrite").partitionBy(
             "cid"
@@ -551,14 +531,8 @@ def pq_write_index(
         return
     cb = pq_codebooks(corpus, n_subspaces, n_codes, dim, id_col, vec_col, seed, iters)
     cb.write.mode("overwrite").parquet(f"{path}/_codebooks")
-    # encode against the WRITTEN codebook (parquet round-trips doubles
-    # losslessly): keeps the Lloyd pipeline out of the encode lineage,
-    # so training runs once, not once per downstream job
-    cb = corpus.sparkSession.read.schema(CODEBOOK_SCHEMA).parquet(f"{path}/_codebooks")
     codes = pq_encode(corpus, cb, n_subspaces, dim, id_col, vec_col)
     if coarse_clusters > 0:
-        from rustic_witcher_spark.operators.similarity import ivf_assign, ivf_centroids
-
         cent = ivf_centroids(corpus, coarse_clusters, id_col, vec_col, seed=seed, iters=iters)
         cent.write.mode("overwrite").parquet(f"{path}/_centroids")
         lists = ivf_assign(corpus, cent, id_col, vec_col, nprobe=1).select(id_col, "cid")
@@ -640,8 +614,6 @@ def pq_query_index(
     probe_map = None
     cid_col = None
     if os.path.isdir(f"{path}/_centroids"):
-        from rustic_witcher_spark.operators.similarity import ivf_assign
-
         cent = spark.read.parquet(f"{path}/_centroids")
         probes = (
             ivf_assign(queries.filter(F.col(vec_col).isNotNull()), cent, id_col, vec_col, nprobe=nprobe)
@@ -842,13 +814,10 @@ def pq_topk(
     """Train + fused encode/ADC in one call — the one-shot search
     path (the persisted-index path materializes codes instead).
 
-    The trained codebook (KBs) is materialized ONCE into a local-rows
-    DataFrame before scoring: otherwise the scoring job's lineage
-    contains the whole training pipeline and Spark recomputes the
-    Lloyd pass a second time inside it (measured ~2x on the entry).
-    Collected-and-reparallelized doubles are the exact same values —
-    no parity impact."""
-    cb = _localize(pq_codebooks(corpus, n_subspaces, n_codes, dim, id_col, vec_col, seed, iters))
+    ``pq_codebooks`` returns the trained codebook (KBs) cut from
+    lineage, so the scoring job reads it instead of replaying the
+    Lloyd pass inside its own plan (measured ~2x on the entry)."""
+    cb = pq_codebooks(corpus, n_subspaces, n_codes, dim, id_col, vec_col, seed, iters)
     return pq_encode_adc_topk_block(corpus, cb, queries, k, n_subspaces, dim, id_col, vec_col)
 
 
@@ -879,10 +848,11 @@ def ivfpq_topk(
     the scan cost per query batch is nprobe/n_clusters of the codes —
     already 16x smaller than the vectors.
 
-    Both trainings are deterministic and _localize'd (lineage cut —
-    otherwise every downstream job replays the Lloyd passes); the
-    driver-side collects are the two tiny codebooks plus the
-    |queries| x nprobe probe assignment (the QUERY side only — tiny).
+    Both trainings are deterministic and come back cut from lineage
+    (``similarity._lloyd`` — otherwise every downstream job replays
+    the Lloyd passes); the driver-side collects are the two tiny
+    models plus the |queries| x nprobe probe assignment (the QUERY
+    side only — tiny).
     The corpus-side coarse assign, the PQ encode, and the probe
     restriction all run INSIDE the fused kernel's single corpus pass
     (pq_encode_adc_topk_block's coarse stage) — the relational
@@ -892,12 +862,10 @@ def ivfpq_topk(
     keeps the relational assign: it pays it once at index BUILD and
     buys parquet partition pruning at every query.
     """
-    from rustic_witcher_spark.operators.similarity import ivf_centroids
-
-    cent = _localize(ivf_centroids(corpus, n_clusters, id_col, vec_col, seed=seed, iters=iters))
-    cb = _localize(pq_codebooks(corpus, n_subspaces, n_codes, dim, id_col, vec_col, seed, iters))
+    cent = ivf_centroids(corpus, n_clusters, id_col, vec_col, seed=seed, iters=iters)
+    cb = pq_codebooks(corpus, n_subspaces, n_codes, dim, id_col, vec_col, seed, iters)
     # probe assignment DRIVER-SIDE: the query set is bounded (it is
-    # collected for the LUTs anyway) and the centroids are local rows —
+    # collected for the LUTs anyway) and the centroids are a few rows —
     # spinning a Spark job (crossJoin + window) for |Q| rows costs a
     # whole job floor per run. Same left-assoc cosine fold and
     # desc-sim/asc-cid tie-break as ivf_assign / the oracle's probe CTE.
@@ -944,16 +912,6 @@ def _probe_assign_local(qrows, crows, nprobe: int, id_col: str, vec_col: str) ->
         order = sorted(range(len(cids)), key=lambda j: (-key[j], cids[j]))[:nprobe]
         out[int(r[id_col])] = [cids[j] for j in order]
     return out
-
-
-def _localize(cb: DataFrame) -> DataFrame:
-    """Collect a (tiny) codebook and re-create it as a local-rows
-    DataFrame, cutting the training pipeline out of downstream
-    lineage."""
-    rows = cb.collect()
-    if not rows:
-        return cb
-    return cb.sparkSession.createDataFrame(rows, schema=cb.schema)
 
 
 def pq_query_index_rerank(

@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from rustic_witcher_spark.functions.wordlists import DEFAULT_SEED
+from rustic_witcher_spark.operators.materialize import materialize
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -506,6 +507,44 @@ def sql_random_projection(vec_expr: str, in_dim: int, out_dim: int, seed: int = 
     return "[" + ", ".join(outs) + "]"
 
 
+def _seed_sample(corpus: DataFrame, k: int, salt: str, seed: int, id_col: str, vec_col: str) -> DataFrame:
+    """(cid, __v): the ``k`` k-means seeds shared by every trainer — the
+    corpus vectors first in md5(``seed|salt|id``) order, numbered 1..k.
+    No driver randomness, so the sample is stable across runs,
+    partitionings and cluster sizes, and the SQL twins replay it."""
+    seeds = (
+        corpus.withColumn("__r", F.md5(F.concat(F.lit(f"{seed}|{salt}|"), F.col(id_col).cast("string"))))
+        .orderBy("__r", id_col)
+        .limit(k)
+    )
+    # Unpartitioned window → Spark logs "No Partition Defined for Window"
+    # in bench runs. Intentional and benign: it runs over exactly k rows
+    # post-limit, never over the corpus.
+    w = Window.orderBy("__r", id_col)
+    return seeds.select(F.row_number().over(w).alias("cid"), F.col(vec_col).cast("array<double>").alias("__v"))
+
+
+def _lloyd(cent: DataFrame, assign, vec: str, iters: int, *keys: str) -> DataFrame:
+    """``iters`` Lloyd steps over the model ``cent`` (*keys, cid, cvec),
+    each a pure DataFrame pass: ``assign(cent)`` labels every training
+    row (*keys, cid, ``vec``) → per-(keys, cid, pos) mean → rebuild in
+    pos order. A codeword that wins no rows drops out (the SQL twins
+    replay that). The trained model — a few KB — leaves through
+    ``materialize``, the one lineage cut: without it every consumer
+    (an index write, each assignment, a driver collect) replays the
+    whole seed + Lloyd pipeline."""
+    for _ in range(iters):
+        cent = (
+            assign(cent)
+            .select(*keys, "cid", F.posexplode(F.col(vec).cast("array<double>")).alias("pos", "v"))
+            .groupBy(*keys, "cid", "pos")
+            .agg(F.avg("v").alias("mv"))
+            .groupBy(*keys, "cid")
+            .agg(F.transform(F.array_sort(F.collect_list(F.struct("pos", "mv"))), lambda s: s["mv"]).alias("cvec"))
+        )
+    return materialize(cent, eager=False)
+
+
 def ivf_centroids(
     corpus: DataFrame,
     n_clusters: int,
@@ -514,13 +553,10 @@ def ivf_centroids(
     seed: int = DEFAULT_SEED,
     iters: int = 0,
 ) -> DataFrame:
-    """Deterministic IVF centroids as (cid, cvec).
-
-    Seeds are a hash-ordered pseudo-random sample of corpus vectors
-    (md5 of the id — no driver randomness, stable across runs and
-    cluster sizes), optionally refined by ``iters`` Lloyd steps, each a
-    pure DataFrame pass: assign (k-way broadcast scoring) → mean vector
-    per cluster via posexplode/groupBy/rebuild.
+    """Deterministic IVF centroids as (cid, cvec): the ``_seed_sample``
+    seeds refined by ``iters`` ``_lloyd`` steps whose assignment is
+    cosine (``ivf_assign``, k-way broadcast scoring). The frame comes
+    back cut from lineage (``_lloyd``), so callers use it directly.
 
     NULL vectors are DROPPED structurally: a NULL row selected as a
     seed would poison a centroid, and the oracle skeletons' corpus CTE
@@ -528,28 +564,8 @@ def ivf_centroids(
     candidate set (r9 dirty-corpus fuzz).
     """
     corpus = corpus.filter(F.col(vec_col).isNotNull())
-    seeds = (
-        corpus.withColumn("__r", F.md5(F.concat(F.lit(f"{seed}|ivf|"), F.col(id_col).cast("string"))))
-        .orderBy("__r", id_col)
-        .limit(n_clusters)
-    )
-    # Unpartitioned window → Spark logs "No Partition Defined for Window"
-    # in bench runs. Intentional and benign: it runs over exactly
-    # n_clusters rows (16 by default) post-limit, never over the corpus.
-    w = Window.orderBy("__r", id_col)
-    cent = seeds.select(F.row_number().over(w).alias("cid"), F.col(vec_col).cast("array<double>").alias("cvec"))
-    for _ in range(iters):
-        assigned = ivf_assign(corpus, cent, id_col, vec_col)
-        cent = (
-            assigned.select("cid", F.posexplode(F.col(vec_col).cast("array<double>")).alias("pos", "v"))
-            .groupBy("cid", "pos")
-            .agg(F.avg("v").alias("m"))
-            .groupBy("cid")
-            .agg(
-                F.transform(F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]).alias("cvec")
-            )
-        )
-    return cent
+    cent = _seed_sample(corpus, n_clusters, "ivf", seed, id_col, vec_col).withColumnRenamed("__v", "cvec")
+    return _lloyd(cent, lambda c: ivf_assign(corpus, c, id_col, vec_col), vec_col, iters)
 
 
 def ivf_assign(
@@ -603,14 +619,7 @@ def ivf_topk(
     partition pruning. Recall is tunable via nprobe; exact duplicates
     are always recalled (identical vector → identical nearest list).
     """
-    from rustic_witcher_spark.operators.materialize import materialize
-
-    # centroids are n_clusters rows but their subtree is the whole Lloyd
-    # step (cross-join + posexplode + two aggregates); consumed by BOTH
-    # ivf_assign calls below, Catalyst re-derives it once per consumer
-    # (two full duplicate subtrees in the r12 plan capture). Cut it once
-    # — n_clusters rows, trivially checkpointable at any scale.
-    cent = materialize(ivf_centroids(corpus, n_clusters, id_col, vec_col, iters=iters))
+    cent = ivf_centroids(corpus, n_clusters, id_col, vec_col, iters=iters)
     inv = ivf_assign(corpus, cent, id_col, vec_col, nprobe=1).select(
         F.col("cid"), F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv")
     )
@@ -637,11 +646,7 @@ def ivf_write_index(
     parquet PARTITION PRUNING — the scan literally never opens the
     other lists' files (asserted in tests via PartitionFilters).
     """
-    from rustic_witcher_spark.operators.materialize import materialize
-
-    # two consumers (the _centroids write and the corpus assignment) —
-    # cut the Lloyd subtree once, same rationale as ivf_topk above
-    cent = materialize(ivf_centroids(corpus, n_clusters, id_col, vec_col, iters=iters))
+    cent = ivf_centroids(corpus, n_clusters, id_col, vec_col, iters=iters)
     cent.write.mode("overwrite").parquet(f"{path}/_centroids")
     inv = ivf_assign(corpus, cent, id_col, vec_col, nprobe=1)
     inv.write.mode("overwrite").partitionBy("cid").parquet(f"{path}/lists")

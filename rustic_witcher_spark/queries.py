@@ -2129,6 +2129,64 @@ cent1 AS (
 )"""
 
 
+_SQL_PQ_SQD = (
+    "(list_dot_product({a}, {a}) - 2.0 * list_dot_product({a}, {b})"
+    " + list_dot_product({b}, {b}))"
+)
+
+
+def _sql_pq_cb1_ctes(
+    src: str, vec: str, n_subspaces: int, n_codes: int, d_sub: int, seed: int, p: str = "p", train_pred: str = ""
+) -> str:
+    """Shared CTE skeleton replaying ``pq.pq_codebooks`` (iters=1) over
+    ``src`` (vec_id, ``vec``): the md5-ordered seed sample sliced into
+    every subspace, one Lloyd step (argmin squared-L2 assignment →
+    per-position mean → list rebuild), then the encode against the
+    trained codebook. Defines CTEs ms and ``p``-prefixed seeds/cb0/sub/
+    a0/w0/cb1/a1 (cb1 = (m, cid, cvec); a1 rows with rn = 1 are the
+    codes). The squared distance uses the dot-product decomposition of
+    ``pq._sq_dist`` so assignment tie-breaks agree bit-for-bit.
+    ``train_pred`` restricts the TRAINING rows (seed sample + Lloyd
+    assignment) while a1 still encodes all of ``src`` — the
+    ann_incremental twin's frozen-codebook contract, as in
+    ``_sql_ivf_cent1_ctes``."""
+    sqd = _SQL_PQ_SQD
+    where = f" WHERE {train_pred}" if train_pred else ""
+    return f"""ms AS (SELECT unnest(range(0, {n_subspaces})) AS m),
+{p}seeds AS (
+  SELECT vec_id, {vec}, md5('{seed}|pq|' || vec_id::VARCHAR) AS r
+  FROM {src}{where} ORDER BY r, vec_id LIMIT {n_codes}
+),
+{p}cb0 AS (
+  SELECT ms.m, s.cid, list_slice(s.{vec}, ms.m * {d_sub} + 1, ms.m * {d_sub} + {d_sub}) AS cvec
+  FROM (SELECT row_number() OVER (ORDER BY r, vec_id) AS cid, {vec} FROM {p}seeds) s CROSS JOIN ms
+),
+{p}sub AS (
+  SELECT c.vec_id, ms.m, list_slice(c.{vec}, ms.m * {d_sub} + 1, ms.m * {d_sub} + {d_sub}) AS sv
+  FROM {src} c CROSS JOIN ms
+),
+{p}a0 AS (
+  SELECT vec_id, m, sv, cid,
+         row_number() OVER (PARTITION BY vec_id, m
+                            ORDER BY {sqd.format(a='sv', b='cvec')} ASC, cid ASC) AS rn
+  FROM {p}sub JOIN {p}cb0 USING (m){where}
+),
+{p}w0 AS (SELECT vec_id, m, sv, cid FROM {p}a0 WHERE rn = 1),
+{p}cb1 AS (
+  SELECT m, cid, list(mv ORDER BY pos) AS cvec FROM (
+    SELECT m, cid, pos, avg(sv[pos]) AS mv
+    FROM {p}w0 CROSS JOIN (SELECT unnest(range(1, {d_sub + 1})) AS pos)
+    GROUP BY m, cid, pos
+  ) GROUP BY m, cid
+),
+{p}a1 AS (
+  SELECT vec_id, m, cid,
+         row_number() OVER (PARTITION BY vec_id, m
+                            ORDER BY {sqd.format(a='sv', b='cvec')} ASC, cid ASC) AS rn
+  FROM {p}sub JOIN {p}cb1 USING (m)
+)"""
+
+
 def sql_knn_ivf(n_clusters: int = 8, nprobe: int = 2, k: int = 5, dim: int = 64, seed: int = 42) -> str:
     """DuckDB twin of ``similarity.ivf_topk(iters=1)``: the shared
     seed/Lloyd skeleton (``_sql_ivf_cent1_ctes``), nprobe probing,
@@ -2197,55 +2255,15 @@ def q_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sql_pq_ann_topk(
     n_subspaces: int = 16, n_codes: int = 16, dim: int = 64, k: int = 5, seed: int = 42
 ) -> str:
-    """DuckDB twin of ``pq.pq_topk``: md5-ordered seed sample (shared
-    across subspaces, sliced), one Lloyd step per subspace, argmin
-    encode, codeword-concat reconstruction, cosine re-rank. The
-    squared-distance argmin uses the same dot-product decomposition
-    (d(a,b) = a.a - 2 a.b + b.b, each a sequential fold) as the Spark
-    ``pq._sq_dist`` expression so assignment tie-breaks agree
-    bit-for-bit."""
+    """DuckDB twin of ``pq.pq_topk``: the shared PQ train/encode
+    skeleton (``_sql_pq_cb1_ctes``, unprefixed), codeword-concat
+    reconstruction, cosine re-rank."""
     d_sub = dim // n_subspaces
-    sqd = (
-        "(list_dot_product({a}, {a}) - 2.0 * list_dot_product({a}, {b})"
-        " + list_dot_product({b}, {b}))"
-    )
     cos = _SQL_IVF_COS
     return f"""
 WITH corpus AS MATERIALIZED (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL),
-ms AS (SELECT unnest(range(0, {n_subspaces})) AS m),
-seeds AS (
-  SELECT vec_id, v, md5('{seed}|pq|' || vec_id::VARCHAR) AS r
-  FROM corpus ORDER BY r, vec_id LIMIT {n_codes}
-),
-cb0 AS (
-  SELECT ms.m, s.cid, list_slice(s.v, ms.m * {d_sub} + 1, ms.m * {d_sub} + {d_sub}) AS cvec
-  FROM (SELECT row_number() OVER (ORDER BY r, vec_id) AS cid, v FROM seeds) s CROSS JOIN ms
-),
-sub AS (
-  SELECT c.vec_id, ms.m, list_slice(c.v, ms.m * {d_sub} + 1, ms.m * {d_sub} + {d_sub}) AS sv
-  FROM corpus c CROSS JOIN ms
-),
-a0 AS (
-  SELECT vec_id, m, sv, cid,
-         row_number() OVER (PARTITION BY vec_id, m
-                            ORDER BY {sqd.format(a='sv', b='cvec')} ASC, cid ASC) AS rn
-  FROM sub JOIN cb0 USING (m)
-),
-w0 AS (SELECT vec_id, m, sv, cid FROM a0 WHERE rn = 1),
-cb1 AS (
-  SELECT m, cid, list(mv ORDER BY pos) AS cvec FROM (
-    SELECT m, cid, pos, avg(sv[pos]) AS mv
-    FROM w0 CROSS JOIN (SELECT unnest(range(1, {d_sub + 1})) AS pos)
-    GROUP BY m, cid, pos
-  ) GROUP BY m, cid
-),
-a1 AS (
-  SELECT vec_id, m, cid,
-         row_number() OVER (PARTITION BY vec_id, m
-                            ORDER BY {sqd.format(a='sv', b='cvec')} ASC, cid ASC) AS rn
-  FROM sub JOIN cb1 USING (m)
-),
+{_sql_pq_cb1_ctes('corpus', 'v', n_subspaces, n_codes, d_sub, seed, p='')},
 recon AS (
   SELECT c.vec_id, flatten(list(b.cvec ORDER BY c.m)) AS rv
   FROM (SELECT vec_id, m, cid FROM a1 WHERE rn = 1) c
@@ -2275,9 +2293,9 @@ def q_ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe/n_clusters of a codes table that is already 16x smaller
     than the vectors — multiplicative pruning from the two stages.
 
-    The oracle splices the two existing derivations (the shared
-    `_sql_ivf_cent1_ctes` skeleton + the `sql_pq_ann_topk` train/
-    encode/reconstruct CTEs, prefixed) and joins candidates through
+    The oracle splices the two shared training skeletons
+    (`_sql_ivf_cent1_ctes` + `_sql_pq_cb1_ctes`, the latter
+    p-prefixed) and joins candidates through
     the probed lists — so this entry can only be green if both parent
     derivations AND their composition agree.
 
@@ -2309,53 +2327,17 @@ def sql_ivfpq_ann_topk(
 ) -> str:
     """DuckDB twin of ``pq.ivfpq_topk``: the shared IVF cent1 skeleton
     (corpus/seeds/cent0/a0/m0/cent1 — verbatim `_sql_ivf_cent1_ctes`,
-    same CTEs as sql_knn_ivf) + the PQ train/encode/reconstruct CTEs
-    of sql_pq_ann_topk under ``p``-prefixed names, then: inv = each
-    corpus vector's nearest coarse list, probes = each query's nprobe
-    nearest lists, candidates = inv ⨝ probes on cid, scored against
-    the PQ reconstruction (ADC ≡ reconstructed cosine)."""
+    same CTEs as sql_knn_ivf) + the PQ train/encode skeleton
+    (``_sql_pq_cb1_ctes``, ``p``-prefixed) and reconstruction, then:
+    inv = each corpus vector's nearest coarse list, probes = each
+    query's nprobe nearest lists, candidates = inv ⨝ probes on cid,
+    scored against the PQ reconstruction (ADC ≡ reconstructed cosine)."""
     d_sub = dim // n_subspaces
-    sqd = (
-        "(list_dot_product({a}, {a}) - 2.0 * list_dot_product({a}, {b})"
-        " + list_dot_product({b}, {b}))"
-    )
     cos = _SQL_IVF_COS
     return f"""
 WITH {_sql_ivf_cent1_ctes(n_clusters, dim, seed)},
 pcorpus AS (SELECT vec_id, v FROM corpus WHERE v IS NOT NULL),
-ms AS (SELECT unnest(range(0, {n_subspaces})) AS m),
-pseeds AS (
-  SELECT vec_id, v, md5('{seed}|pq|' || vec_id::VARCHAR) AS r
-  FROM pcorpus ORDER BY r, vec_id LIMIT {n_codes}
-),
-pcb0 AS (
-  SELECT ms.m, s.cid, list_slice(s.v, ms.m * {d_sub} + 1, ms.m * {d_sub} + {d_sub}) AS cvec
-  FROM (SELECT row_number() OVER (ORDER BY r, vec_id) AS cid, v FROM pseeds) s CROSS JOIN ms
-),
-psub AS (
-  SELECT c.vec_id, ms.m, list_slice(c.v, ms.m * {d_sub} + 1, ms.m * {d_sub} + {d_sub}) AS sv
-  FROM pcorpus c CROSS JOIN ms
-),
-pa0 AS (
-  SELECT vec_id, m, sv, cid,
-         row_number() OVER (PARTITION BY vec_id, m
-                            ORDER BY {sqd.format(a='sv', b='cvec')} ASC, cid ASC) AS rn
-  FROM psub JOIN pcb0 USING (m)
-),
-pw0 AS (SELECT vec_id, m, sv, cid FROM pa0 WHERE rn = 1),
-pcb1 AS (
-  SELECT m, cid, list(mv ORDER BY pos) AS cvec FROM (
-    SELECT m, cid, pos, avg(sv[pos]) AS mv
-    FROM pw0 CROSS JOIN (SELECT unnest(range(1, {d_sub + 1})) AS pos)
-    GROUP BY m, cid, pos
-  ) GROUP BY m, cid
-),
-pa1 AS (
-  SELECT vec_id, m, cid,
-         row_number() OVER (PARTITION BY vec_id, m
-                            ORDER BY {sqd.format(a='sv', b='cvec')} ASC, cid ASC) AS rn
-  FROM psub JOIN pcb1 USING (m)
-),
+{_sql_pq_cb1_ctes('pcorpus', 'v', n_subspaces, n_codes, d_sub, seed)},
 recon AS (
   SELECT c.vec_id, flatten(list(b.cvec ORDER BY c.m)) AS rv
   FROM (SELECT vec_id, m, cid FROM pa1 WHERE rn = 1) c
@@ -2501,10 +2483,6 @@ def sql_pq_residual_query(
     v − c), PQ train/encode over rres, v̂ = c + reconstructed residual,
     then the shared probe/score/rank tail over v̂."""
     d_sub = dim // n_subspaces
-    sqd = (
-        "(list_dot_product({a}, {a}) - 2.0 * list_dot_product({a}, {b})"
-        " + list_dot_product({b}, {b}))"
-    )
     cos = _SQL_IVF_COS
     return f"""
 WITH {_sql_ivf_cent1_ctes(n_clusters, dim, seed)},
@@ -2521,39 +2499,7 @@ rres AS (
          list_transform(generate_series(1, {dim}), i -> c.v[i] - k.cvec[i]) AS rv
   FROM rass r JOIN corpus c USING (vec_id) JOIN cent1 k USING (cid)
 ),
-ms AS (SELECT unnest(range(0, {n_subspaces})) AS m),
-pseeds AS (
-  SELECT vec_id, rv, md5('{seed}|pq|' || vec_id::VARCHAR) AS r
-  FROM rres ORDER BY r, vec_id LIMIT {n_codes}
-),
-pcb0 AS (
-  SELECT ms.m, s.cid, list_slice(s.rv, ms.m * {d_sub} + 1, ms.m * {d_sub} + {d_sub}) AS cvec
-  FROM (SELECT row_number() OVER (ORDER BY r, vec_id) AS cid, rv FROM pseeds) s CROSS JOIN ms
-),
-psub AS (
-  SELECT c.vec_id, ms.m, list_slice(c.rv, ms.m * {d_sub} + 1, ms.m * {d_sub} + {d_sub}) AS sv
-  FROM rres c CROSS JOIN ms
-),
-pa0 AS (
-  SELECT vec_id, m, sv, cid,
-         row_number() OVER (PARTITION BY vec_id, m
-                            ORDER BY {sqd.format(a='sv', b='cvec')} ASC, cid ASC) AS rn
-  FROM psub JOIN pcb0 USING (m)
-),
-pw0 AS (SELECT vec_id, m, sv, cid FROM pa0 WHERE rn = 1),
-pcb1 AS (
-  SELECT m, cid, list(mv ORDER BY pos) AS cvec FROM (
-    SELECT m, cid, pos, avg(sv[pos]) AS mv
-    FROM pw0 CROSS JOIN (SELECT unnest(range(1, {d_sub + 1})) AS pos)
-    GROUP BY m, cid, pos
-  ) GROUP BY m, cid
-),
-pa1 AS (
-  SELECT vec_id, m, cid,
-         row_number() OVER (PARTITION BY vec_id, m
-                            ORDER BY {sqd.format(a='sv', b='cvec')} ASC, cid ASC) AS rn
-  FROM psub JOIN pcb1 USING (m)
-),
+{_sql_pq_cb1_ctes('rres', 'rv', n_subspaces, n_codes, d_sub, seed)},
 reconr AS (
   SELECT c.vec_id, flatten(list(b.cvec ORDER BY c.m)) AS rr
   FROM (SELECT vec_id, m, cid FROM pa1 WHERE rn = 1) c
@@ -2708,53 +2654,16 @@ def sql_ann_incremental(
 ) -> str:
     """Twin of base-index + streamed delta + query_with_delta: the
     sql_ivfpq_ann_topk derivation with BOTH quantizers trained on the
-    base split only (train_pred on the IVF skeleton; pseeds/pa0
-    filtered for PQ) while pa1 encode, inv assignment, probes and ADC
-    scoring run over the full corpus — the frozen-codebook semantics
-    of the appender."""
+    base split only (``train_pred`` on both training skeletons) while
+    pa1 encode, inv assignment, probes and ADC scoring run over the
+    full corpus — the frozen-codebook semantics of the appender."""
     d_sub = dim // n_subspaces
     base = "vec_id % 10 < 8"
-    sqd = (
-        "(list_dot_product({a}, {a}) - 2.0 * list_dot_product({a}, {b})"
-        " + list_dot_product({b}, {b}))"
-    )
     cos = _SQL_IVF_COS
     return f"""
 WITH {_sql_ivf_cent1_ctes(n_clusters, dim, seed, train_pred=base)},
 pcorpus AS (SELECT vec_id, v FROM corpus WHERE v IS NOT NULL),
-ms AS (SELECT unnest(range(0, {n_subspaces})) AS m),
-pseeds AS (
-  SELECT vec_id, v, md5('{seed}|pq|' || vec_id::VARCHAR) AS r
-  FROM pcorpus WHERE {base} ORDER BY r, vec_id LIMIT {n_codes}
-),
-pcb0 AS (
-  SELECT ms.m, s.cid, list_slice(s.v, ms.m * {d_sub} + 1, ms.m * {d_sub} + {d_sub}) AS cvec
-  FROM (SELECT row_number() OVER (ORDER BY r, vec_id) AS cid, v FROM pseeds) s CROSS JOIN ms
-),
-psub AS (
-  SELECT c.vec_id, ms.m, list_slice(c.v, ms.m * {d_sub} + 1, ms.m * {d_sub} + {d_sub}) AS sv
-  FROM pcorpus c CROSS JOIN ms
-),
-pa0 AS (
-  SELECT vec_id, m, sv, cid,
-         row_number() OVER (PARTITION BY vec_id, m
-                            ORDER BY {sqd.format(a='sv', b='cvec')} ASC, cid ASC) AS rn
-  FROM psub JOIN pcb0 USING (m) WHERE {base}
-),
-pw0 AS (SELECT vec_id, m, sv, cid FROM pa0 WHERE rn = 1),
-pcb1 AS (
-  SELECT m, cid, list(mv ORDER BY pos) AS cvec FROM (
-    SELECT m, cid, pos, avg(sv[pos]) AS mv
-    FROM pw0 CROSS JOIN (SELECT unnest(range(1, {d_sub + 1})) AS pos)
-    GROUP BY m, cid, pos
-  ) GROUP BY m, cid
-),
-pa1 AS (
-  SELECT vec_id, m, cid,
-         row_number() OVER (PARTITION BY vec_id, m
-                            ORDER BY {sqd.format(a='sv', b='cvec')} ASC, cid ASC) AS rn
-  FROM psub JOIN pcb1 USING (m)
-),
+{_sql_pq_cb1_ctes('pcorpus', 'v', n_subspaces, n_codes, d_sub, seed, train_pred=base)},
 recon AS (
   SELECT c.vec_id, flatten(list(b.cvec ORDER BY c.m)) AS rv
   FROM (SELECT vec_id, m, cid FROM pa1 WHERE rn = 1) c

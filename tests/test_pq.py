@@ -168,7 +168,7 @@ def test_fused_kernel_identical_to_staged_path(spark, emb):
         (poisoned, 4, 3, 4, 4, 16, 12),
     ):
         queries = corpus.filter(F.col("vec_id") < n_queries)
-        cb = pq._localize(pq.pq_codebooks(corpus, n_sub, n_codes, dim))
+        cb = pq.pq_codebooks(corpus, n_sub, n_codes, dim)
         codes = pq.pq_encode(corpus, cb, n_sub, dim)
         staged = pq.pq_adc_topk_block(codes, cb, queries, k=k, n_subspaces=n_sub, dim=dim)
         fused = pq.pq_encode_adc_topk_block(corpus, cb, queries, k=k, n_subspaces=n_sub, dim=dim)

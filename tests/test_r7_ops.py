@@ -678,7 +678,7 @@ def test_block_kernels_drop_degenerate_vectors(spark):
     )
     tied = base.unionByName(spark.createDataFrame([(11, [0.6, 0.8], 3), (12, [0.6, 0.8], 3)], EMB_SCHEMA))
     clean = tied.filter("vec_id IN (0, 10, 11, 12)")
-    cb = pq._localize(pq.pq_codebooks(clean, n_subspaces=2, n_codes=2, dim=2))
+    cb = pq.pq_codebooks(clean, n_subspaces=2, n_codes=2, dim=2)
 
     def faces(corpus):
         """face -> (query_id, neighbor_id, sim) rows, queries = ids 0..3"""
