@@ -57,6 +57,7 @@ from rustic_witcher_spark.operators.similarity import (
     _rank_top_k,
     _round_half_away,
     _seed_sample,
+    _trainable,
     cosine,
     dot,
     ivf_assign,
@@ -160,13 +161,14 @@ def pq_codebooks(
     independently, the assignment being squared L2 per subspace
     (``_assign``). A codeword that wins no subvectors drops out (same
     convention as the IVF oracle — replayed identically by SQL, so the
-    faces cannot drift). The frame comes back cut from lineage, so
-    callers use it directly.
+    faces cannot drift). It trains on the ``_trainable`` rows only,
+    and the frame comes back cut from lineage, so callers use it
+    directly.
     """
     if dim % n_subspaces:
         raise ValueError(f"dim {dim} not divisible by n_subspaces {n_subspaces}")
     d_sub = dim // n_subspaces
-    corpus = corpus.filter(F.col(vec_col).isNotNull())
+    corpus = _trainable(corpus, vec_col)
     seeded = _seed_sample(corpus, n_codes, "pq", seed, id_col, vec_col)
     slices = F.array(*[F.slice(F.col("__v"), j * d_sub + 1, d_sub) for j in range(n_subspaces)])
     cb = seeded.select("cid", F.posexplode(slices).alias("m", "cvec"))

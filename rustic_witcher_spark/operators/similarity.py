@@ -507,6 +507,17 @@ def sql_random_projection(vec_expr: str, in_dim: int, out_dim: int, seed: int = 
     return "[" + ", ".join(outs) + "]"
 
 
+def _trainable(corpus: DataFrame, vec_col: str) -> DataFrame:
+    """The rows a k-means trainer learns from: ``dot(v, v) < inf`` drops
+    NULL, NaN, ±inf and overflowing vectors (Spark and DuckDB both order
+    NaN above every value, so the SQL twins' copy of the predicate
+    agrees). One such vector picked as a seed or averaged into a Lloyd
+    mean poisons its codeword for every consumer. Zero vectors stay: PQ
+    trains by L2, and a zero residual (a singleton IVF list) is a real
+    point."""
+    return corpus.filter(dot(F.col(vec_col), F.col(vec_col)) < F.lit(float("inf")))
+
+
 def _seed_sample(corpus: DataFrame, k: int, salt: str, seed: int, id_col: str, vec_col: str) -> DataFrame:
     """(cid, __v): the ``k`` k-means seeds shared by every trainer — the
     corpus vectors first in md5(``seed|salt|id``) order, numbered 1..k.
@@ -557,13 +568,10 @@ def ivf_centroids(
     seeds refined by ``iters`` ``_lloyd`` steps whose assignment is
     cosine (``ivf_assign``, k-way broadcast scoring). The frame comes
     back cut from lineage (``_lloyd``), so callers use it directly.
-
-    NULL vectors are DROPPED structurally: a NULL row selected as a
-    seed would poison a centroid, and the oracle skeletons' corpus CTE
-    excludes them before seeding — the seed sample must see the same
-    candidate set (r9 dirty-corpus fuzz).
+    It trains on the ``_trainable`` rows only, as the oracle skeleton
+    ``_sql_ivf_cent1_ctes`` does.
     """
-    corpus = corpus.filter(F.col(vec_col).isNotNull())
+    corpus = _trainable(corpus, vec_col)
     cent = _seed_sample(corpus, n_clusters, "ivf", seed, id_col, vec_col).withColumnRenamed("__v", "cvec")
     return _lloyd(cent, lambda c: ivf_assign(corpus, c, id_col, vec_col), vec_col, iters)
 

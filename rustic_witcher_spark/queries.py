@@ -2094,30 +2094,38 @@ _SQL_IVF_COS = (
 )
 
 
+# the trainers' row filter, ``similarity._trainable``: NULL, NaN, ±inf
+# and overflowing vectors fail it (DuckDB orders NaN above every value)
+_SQL_TRAINABLE = "list_dot_product({v}, {v}) < 'Infinity'::DOUBLE"
+
+
 def _sql_ivf_cent1_ctes(n_clusters: int, dim: int, seed: int, train_pred: str = "TRUE") -> str:
     """Shared CTE skeleton replaying ``similarity.ivf_centroids``
     (iters=1): md5-seeded centroid sample + one Lloyd step
     (nearest-centroid assignment → per-position mean → list rebuild).
     Embedded by BOTH sql_knn_ivf and sql_semdedup so the two oracles
-    cannot drift from each other; defines CTEs corpus/seeds/cent0/a0/
-    m0/cent1 (cent1 = (cid, cvec)). ``train_pred`` (r10) restricts the
-    TRAINING corpus (seed sample + Lloyd assignment) without touching
-    downstream consumers — the ann_incremental twin trains on the base
-    split while assigning/scoring the full corpus, exactly like the
-    streaming appender's frozen-codebook contract."""
+    cannot drift from each other; defines CTEs corpus/train/seeds/
+    cent0/a0/m0/cent1 (cent1 = (cid, cvec)). The seed sample and the
+    Lloyd assignment read ``train``: the ``_SQL_TRAINABLE`` rows of the
+    corpus that pass ``train_pred`` (r10), which restricts the
+    TRAINING corpus without touching downstream consumers — the
+    ann_incremental twin trains on the base split while
+    assigning/scoring the full corpus, exactly like the streaming
+    appender's frozen-codebook contract."""
     cos = _SQL_IVF_COS
     return f"""corpus AS MATERIALIZED (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE embedding IS NOT NULL),
+train AS (SELECT vec_id, v FROM corpus WHERE {train_pred} AND {_SQL_TRAINABLE.format(v='v')}),
 seeds AS (
   SELECT vec_id, v, md5('{seed}|ivf|' || vec_id::VARCHAR) AS r
-  FROM corpus WHERE {train_pred} ORDER BY r, vec_id LIMIT {n_clusters}
+  FROM train ORDER BY r, vec_id LIMIT {n_clusters}
 ),
 cent0 AS (SELECT row_number() OVER (ORDER BY r, vec_id) AS cid, v AS cvec FROM seeds),
 a0 AS (
   SELECT c.vec_id, c.v, k.cid,
          row_number() OVER (PARTITION BY c.vec_id
                             ORDER BY {cos.format(a='c.v', b='k.cvec')} DESC, k.cid ASC) AS rn
-  FROM corpus c CROSS JOIN cent0 k WHERE {train_pred}
+  FROM train c CROSS JOIN cent0 k
 ),
 m0 AS (SELECT cid, v FROM a0 WHERE rn = 1),
 cent1 AS (
@@ -2136,26 +2144,27 @@ _SQL_PQ_SQD = (
 
 
 def _sql_pq_cb1_ctes(
-    src: str, vec: str, n_subspaces: int, n_codes: int, d_sub: int, seed: int, p: str = "p", train_pred: str = ""
+    src: str, vec: str, n_subspaces: int, n_codes: int, d_sub: int, seed: int, p: str = "p", train_pred: str = "TRUE"
 ) -> str:
     """Shared CTE skeleton replaying ``pq.pq_codebooks`` (iters=1) over
     ``src`` (vec_id, ``vec``): the md5-ordered seed sample sliced into
     every subspace, one Lloyd step (argmin squared-L2 assignment →
     per-position mean → list rebuild), then the encode against the
-    trained codebook. Defines CTEs ms and ``p``-prefixed seeds/cb0/sub/
-    a0/w0/cb1/a1 (cb1 = (m, cid, cvec); a1 rows with rn = 1 are the
-    codes). The squared distance uses the dot-product decomposition of
-    ``pq._sq_dist`` so assignment tie-breaks agree bit-for-bit.
-    ``train_pred`` restricts the TRAINING rows (seed sample + Lloyd
-    assignment) while a1 still encodes all of ``src`` — the
-    ann_incremental twin's frozen-codebook contract, as in
-    ``_sql_ivf_cent1_ctes``."""
+    trained codebook. Defines CTEs ms and ``p``-prefixed train/seeds/
+    cb0/sub/a0/w0/cb1/a1 (cb1 = (m, cid, cvec); a1 rows with rn = 1 are
+    the codes). The squared distance uses the dot-product
+    decomposition of ``pq._sq_dist`` so assignment tie-breaks agree
+    bit-for-bit. The seed sample and the Lloyd assignment read
+    ``train``: the ``_SQL_TRAINABLE`` rows of ``src`` that pass
+    ``train_pred``, which restricts the TRAINING rows while a1 still
+    encodes all of ``src`` — the ann_incremental twin's
+    frozen-codebook contract, as in ``_sql_ivf_cent1_ctes``."""
     sqd = _SQL_PQ_SQD
-    where = f" WHERE {train_pred}" if train_pred else ""
     return f"""ms AS (SELECT unnest(range(0, {n_subspaces})) AS m),
+{p}train AS (SELECT vec_id, {vec} FROM {src} WHERE {train_pred} AND {_SQL_TRAINABLE.format(v=vec)}),
 {p}seeds AS (
   SELECT vec_id, {vec}, md5('{seed}|pq|' || vec_id::VARCHAR) AS r
-  FROM {src}{where} ORDER BY r, vec_id LIMIT {n_codes}
+  FROM {p}train ORDER BY r, vec_id LIMIT {n_codes}
 ),
 {p}cb0 AS (
   SELECT ms.m, s.cid, list_slice(s.{vec}, ms.m * {d_sub} + 1, ms.m * {d_sub} + {d_sub}) AS cvec
@@ -2169,7 +2178,7 @@ def _sql_pq_cb1_ctes(
   SELECT vec_id, m, sv, cid,
          row_number() OVER (PARTITION BY vec_id, m
                             ORDER BY {sqd.format(a='sv', b='cvec')} ASC, cid ASC) AS rn
-  FROM {p}sub JOIN {p}cb0 USING (m){where}
+  FROM {p}sub JOIN {p}cb0 USING (m) WHERE vec_id IN (SELECT vec_id FROM {p}train)
 ),
 {p}w0 AS (SELECT vec_id, m, sv, cid FROM {p}a0 WHERE rn = 1),
 {p}cb1 AS (

@@ -141,6 +141,13 @@ def test_empty_inputs_yield_empty_with_schema(spark):
     assert out2.count() == 0
 
 
+def _gauss_rows(n=30, dim=16, seed=11):
+    import random
+
+    rnd = random.Random(seed)
+    return [(i, [rnd.gauss(0, 1) for _ in range(dim)]) for i in range(n)]
+
+
 def test_fused_kernel_identical_to_staged_path(spark, emb):
     """pq_topk fuses encode+ADC into one kernel pass; it must be
     row-identical to the staged pipeline (DataFrame encode -> ADC over
@@ -150,30 +157,54 @@ def test_fused_kernel_identical_to_staged_path(spark, emb):
     'optimizes' it back to a BLAS matmul that re-associates the sums
     and flips a near-tie assignment.
 
-    The second corpus poisons the codebook: its NaN component enters a
-    Lloyd mean and trains a NaN codeword at (m=0, cid=1). The staged
-    min(struct(d, cid)) orders that codeword's NaN distance above every
-    number; the fused argmin must too, or every subvector lands on the
-    NaN codeword and every sim is masked (0 rows instead of 12)."""
-    import random
-
-    rnd = random.Random(11)
+    The second codebook carries a NaN codeword at (m=0, cid=1), put
+    there by hand (the trainers no longer learn from non-finite
+    vectors, but a persisted codebook can still hold one). The staged
+    min(struct(d, cid)) orders that codeword's NaN distance above
+    every number; the fused argmin must too, or every subvector lands
+    on the NaN codeword and every sim is masked (0 rows instead of
+    12)."""
+    gauss = spark.createDataFrame(_gauss_rows(), "vec_id long, embedding array<double>")
+    trained = pq.pq_codebooks(gauss, 4, 4, 16).collect()
+    assert any((r["m"], r["cid"]) == (0, 1) for r in trained)
     poisoned = spark.createDataFrame(
-        [(i, [rnd.gauss(0, 1) for _ in range(16)]) for i in range(30)]
-        + [(30, [float("nan")] + [1.0] * 15)],
-        "vec_id long, embedding array<double>",
+        [
+            (r["m"], r["cid"], [float("nan")] + r["cvec"][1:] if (r["m"], r["cid"]) == (0, 1) else r["cvec"])
+            for r in trained
+        ],
+        pq.CODEBOOK_SCHEMA,
     )
-    for corpus, n_queries, k, n_sub, n_codes, dim, n_rows in (
-        (emb, 8, 5, 16, 16, 64, 40),
-        (poisoned, 4, 3, 4, 4, 16, 12),
+    for corpus, cb, n_queries, k, n_sub, dim, n_rows in (
+        (emb, pq.pq_codebooks(emb, 16, 16, 64), 8, 5, 16, 64, 40),
+        (gauss, poisoned, 4, 3, 4, 16, 12),
     ):
         queries = corpus.filter(F.col("vec_id") < n_queries)
-        cb = pq.pq_codebooks(corpus, n_sub, n_codes, dim)
         codes = pq.pq_encode(corpus, cb, n_sub, dim)
         staged = pq.pq_adc_topk_block(codes, cb, queries, k=k, n_subspaces=n_sub, dim=dim)
         fused = pq.pq_encode_adc_topk_block(corpus, cb, queries, k=k, n_subspaces=n_sub, dim=dim)
         assert len(_rows(staged)) == n_rows
         assert _rows(staged) == _rows(fused)
+
+
+def test_trainers_drop_non_finite_vectors(spark):
+    """A NaN, +inf or NULL training vector is dropped by both k-means
+    trainers (seed sample and Lloyd mean alike): they return exactly
+    the model they train on the clean rows, with only finite values."""
+    import math
+
+    from rustic_witcher_spark.operators.similarity import ivf_centroids
+
+    schema = "vec_id long, embedding array<double>"
+    clean = spark.createDataFrame(_gauss_rows(), schema)
+    dirty = clean.unionByName(
+        spark.createDataFrame(
+            [(30, [float("nan")] + [1.0] * 15), (31, [float("inf")] + [1.0] * 15), (32, None)], schema
+        )
+    )
+    for train in (lambda df: ivf_centroids(df, 4, iters=1), lambda df: pq.pq_codebooks(df, 4, 4, 16)):
+        rows = _rows(train(dirty))
+        assert rows == _rows(train(clean))
+        assert all(math.isfinite(x) for r in rows for x in r[-1])
 
 
 def test_indivisible_dim_raises():
