@@ -395,23 +395,6 @@ def extract_features(
     return df.mapInPandas(run, schema=out_schema)
 
 
-def resize_stub(df: DataFrame, binary_col: str = "media", target: tuple[int, int] = (224, 224)) -> DataFrame:
-    """Resize plumbing: same mapInPandas shape as extract_features; the
-    stub 'resize' re-hashes bytes to a fixed-size digest standing in for
-    resized pixels (real impl: Pillow resize per batch)."""
-    out_schema = T.StructType(df.schema.fields + [T.StructField("resized", T.BinaryType())])
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["resized"] = pdf[binary_col].map(
-                lambda d: hashlib.md5((d or b"") + f"{target}".encode()).digest()
-            )
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
 def default_frame_digest(data: bytes, i: int) -> bytes:
     """Raw-byte frame digest (fast path when no SQL twin is needed)."""
     return hashlib.md5(data + bytes([i])).digest()

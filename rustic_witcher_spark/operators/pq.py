@@ -54,11 +54,9 @@ from rustic_witcher_spark.operators.similarity import (
     _exact_top_k,
     _lloyd,
     _query_block,
-    _rank_top_k,
     _round_half_away,
     _seed_sample,
     _trainable,
-    cosine,
     dot,
     ivf_assign,
     ivf_centroids,
@@ -214,8 +212,10 @@ def pq_adc_topk(
     oracle-parity face — the registered scale path is
     :func:`pq_adc_topk_block`, pinned output-identical by test.
 
-    Returns (query_id, neighbor_id, sim, rank); self-matches excluded;
-    ties break on neighbor id.
+    Returns (query_id, neighbor_id, sim, rank), ranked by the shared
+    ``_exact_top_k`` contract: self-matches excluded, ties break on
+    neighbor id, and a query with no defined cosine (a zero vector or a
+    NaN component) gets no rows — as from the block faces.
     """
     cb = pq_codebooks(corpus, n_subspaces, n_codes, dim, id_col, vec_col, seed, iters)
     codes = pq_encode(corpus, cb, n_subspaces, dim, id_col, vec_col)
@@ -241,17 +241,12 @@ def pq_adc_topk(
                     F.concat(j.cast("string"), F.lit("|"), F.element_at(F.col("codes"), j + 1).cast("string")),
                 ),
             )
-        ).alias("__rv"),
+        ).alias("__cv"),
     )
     q = queries.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("__qv")
     )
-    scored = (
-        recon.crossJoin(F.broadcast(q))
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", F.round(cosine(F.col("__qv"), F.col("__rv")), 6).alias("sim"))
-    )
-    return _rank_top_k(scored, k)
+    return _exact_top_k(recon.crossJoin(F.broadcast(q)), k)
 
 
 def _collect_codebooks(codebooks: DataFrame):

@@ -145,26 +145,3 @@ def read_novelty_scores(spark, index_path: str) -> DataFrame:
     return spark.read.schema(
         "doc_id long, n_shingles long, n_novel long, novelty double, batch long"
     ).parquet(os.path.join(index_path, "scores"))
-
-
-def write_novelty_stream(
-    doc_stream: DataFrame,
-    index_path: str,
-    checkpoint: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    queryName: str = "novelty_index",
-):
-    """Run the index loop as a Structured Streaming query (foreachBatch).
-    Per-batch scores land under ``<index_path>/scores/batch=N``; the
-    gram-first-owner set under ``<index_path>/data``."""
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        novelty_append_batch(batch_df, batch_id, index_path, text_col=text_col, id_col=id_col)
-
-    return (
-        doc_stream.writeStream.foreachBatch(_apply)
-        .queryName(queryName)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )

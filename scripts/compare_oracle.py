@@ -33,11 +33,16 @@ Faithfulness rules (calibrated round 7 against the r6 driver verdicts):
     element-wise container path only for NESTED values the rejection
     scan reports in its error message.
 
+The last line printed is ``registry <16hex> <16hex>`` (``registry_hash``),
+pinned by tests/test_r10_ops.py.
+
 Usage: python scripts/compare_oracle.py [sf_dir] [name ...]
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
 import math
 import os
 import sys
@@ -64,6 +69,16 @@ def create_views(con, sf_dir: str) -> None:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}/*.parquet')")
         elif p.exists():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+
+
+def registry_hash() -> str:
+    """``<names> <oracles>``: the first 16 hex digits of sha256 over the
+    registry's entry names in order, then over its sorted (name, oracle
+    SQL) pairs. Renaming, reordering or adding an entry moves the first
+    half; any change to a twin's SQL text moves the second."""
+    names = json.dumps(list(entrymod.queries()))
+    oracles = json.dumps(sorted(entrymod.oracle_sql().items()))
+    return " ".join(hashlib.sha256(s.encode()).hexdigest()[:16] for s in (names, oracles))
 
 
 def normalize(v) -> str:
@@ -178,6 +193,7 @@ def main():
             if os.environ.get("VERBOSE"):
                 traceback.print_exc()
     print(f"\n{len(qs) - len(failures)}/{len(qs)} OK; failures: {failures}")
+    print(f"registry {registry_hash()}")
     sys.exit(1 if failures else 0)
 
 

@@ -207,6 +207,24 @@ def test_trainers_drop_non_finite_vectors(spark):
         assert all(math.isfinite(x) for r in rows for x in r[-1])
 
 
+def test_hof_face_drops_degenerate_queries(spark):
+    """pq_adc_topk ranks through the shared top-k contract: a zero-vector
+    or NaN-component query has no defined cosine and gets no rows, as
+    from the block face — instead of NULL or NaN sims ranked first."""
+    schema = "vec_id long, embedding array<double>"
+    corpus = spark.createDataFrame(_gauss_rows(), schema)
+    queries = corpus.filter("vec_id = 0").unionByName(
+        spark.createDataFrame([(100, [0.0] * 16), (101, [float("nan")] + [1.0] * 15)], schema)
+    )
+    cb = pq.pq_codebooks(corpus, 4, 4, 16)
+    codes = pq.pq_encode(corpus, cb, 4, 16)
+    hof = pq.pq_adc_topk(corpus, queries, k=3, n_subspaces=4, n_codes=4, dim=16)
+    block = pq.pq_adc_topk_block(codes, cb, queries, k=3, n_subspaces=4, dim=16)
+    for face in (hof, block):
+        assert {r["query_id"] for r in face.collect()} == {0}
+        assert face.count() == 3
+
+
 def test_indivisible_dim_raises():
     with pytest.raises(ValueError, match="not divisible"):
         pq.pq_codebooks(None, n_subspaces=5, n_codes=2, dim=64)

@@ -23,6 +23,13 @@ _spec.loader.exec_module(compare_oracle)
 container_cols = compare_oracle.container_cols
 
 
+def test_registry_hash_is_pinned():
+    """Entry names and order plus every oracle's SQL text, as one value
+    (``compare_oracle.registry_hash``). A change that moves it must
+    update this pin and record the old and new value in CHANGES.md."""
+    assert compare_oracle.registry_hash() == "ce1475661871e6a0 4542027738417091"
+
+
 # ---------------------------------------------------------------------------
 # gate self-tests: list-typed result columns must be REJECTED
 # ---------------------------------------------------------------------------
