@@ -514,8 +514,11 @@ def _trainable(corpus: DataFrame, vec_col: str) -> DataFrame:
     agrees). One such vector picked as a seed or averaged into a Lloyd
     mean poisons its codeword for every consumer. Zero vectors stay: PQ
     trains by L2, and a zero residual (a singleton IVF list) is a real
-    point."""
-    return corpus.filter(dot(F.col(vec_col), F.col(vec_col)) < F.lit(float("inf")))
+    point. The NULL test is spelled out although the comparison implies
+    it: ``ivf_assign`` filters on it too, and with the same conjuncts the
+    trainer's corpus reads plan alike (one Spark job fewer in SemDeDup's
+    build)."""
+    return corpus.filter(F.col(vec_col).isNotNull() & (dot(F.col(vec_col), F.col(vec_col)) < F.lit(float("inf"))))
 
 
 def _seed_sample(corpus: DataFrame, k: int, salt: str, seed: int, id_col: str, vec_col: str) -> DataFrame:
