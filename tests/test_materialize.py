@@ -7,18 +7,17 @@ fault-tolerance against speed, never semantics.
 
 from __future__ import annotations
 
+import random
+
 import pytest
 
+from rustic_witcher_spark.operators import pq, similarity
 from rustic_witcher_spark.operators.cluster import connected_components
 from rustic_witcher_spark.operators.materialize import materialize
 
 
 def _trained(spark):
     """(ivf_centroids, pq_codebooks) frames trained on one small corpus."""
-    import random
-
-    from rustic_witcher_spark.operators import pq, similarity
-
     rnd = random.Random(5)
     corpus = spark.createDataFrame(
         [(i, [rnd.gauss(0, 1) for _ in range(8)]) for i in range(24)], "vec_id long, embedding array<double>"
