@@ -11,6 +11,20 @@ Designed for 100 TB corpora:
 
 All hashing uses the engine's md5-based deterministic primitive so
 results are partitioning-invariant and (where declared) DuckDB-checkable.
+
+Each decision of the family is defined once, and every operator (plus
+the registry entries and the streaming faces) goes through it:
+- ``text_digest``: the exact-dedup key, md5 of the normalized text;
+- ``word_shingle_hashes``: the word-3-gram hash kernel;
+- ``doc_grams``: the distinct (doc_id, gram) rows, NULL text dropped;
+- ``_lsh_bands``: the MinHash LSH band keys — the candidate generator
+  and the incremental flags must agree on them;
+- ``_bucket_pairs``: the capped bucket → in-bucket pair enumeration
+  behind both MinHash and hamming banding;
+- ``_set_jaccard``: set Jaccard, 1.0 on an empty union.
+The DuckDB twins in queries.py spell the digest, the gram hashes, the
+band keys and the band pairs once each too (``_SQL_DIGEST``,
+``_sql_word3_hashes``, ``_sql_lsh_bands``, ``_SQL_LSH_PAIRS``).
 """
 
 from __future__ import annotations
@@ -42,6 +56,13 @@ def normalized_text(col: Column) -> Column:
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 
+def text_digest(col: Column) -> Column:
+    """The dedup key: md5 of the normalized text. Exact dedup, survivor
+    selection, batch-vs-corpus flags, streaming dedup and the corpus
+    reports all group on it, so they agree on what "the same text" is."""
+    return F.md5(normalized_text(col))
+
+
 # ------------------------------------------------------------------- exact
 
 
@@ -51,7 +72,7 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     One shuffle on the text hash; at scale, group on a 64-bit digest of
     the text rather than the full text to keep shuffle rows small.
     """
-    digest = F.md5(normalized_text(F.col(text_col))).alias("__digest")
+    digest = text_digest(F.col(text_col)).alias("__digest")
     w = Window.partitionBy("__digest").orderBy(F.col(id_col).asc())
     return (
         df.withColumn("__digest", digest)
@@ -128,28 +149,6 @@ def _char_shingles_build(col: Column, k: int) -> Column:
     return F.element_at(F.transform(F.array(normalized_text(col)), build), 1)
 
 
-def word_shingles(col: Column, n: int = 3) -> Column:
-    """Word n-gram shingles (n=3): token windows joined by spaces.
-
-    Texts with fewer than n tokens yield one shingle (the whole
-    normalized text). Not deduplicated — MinHash's min is multiset-safe
-    and skipping the distinct keeps the projection cheaper.
-    """
-    norm = normalized_text(col)
-
-    # let-bind the token array: captured in the gram lambda it would
-    # re-split the normalized text per gram (O(n²) in doc length)
-    def grams_of(toks: Column) -> Column:
-        cnt = F.size(toks)
-        grams = F.transform(
-            F.sequence(F.lit(1), cnt - (n - 1)),
-            lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(n)]),
-        )
-        return F.when(cnt >= n, grams).otherwise(F.array(F.array_join(toks, " ")))
-
-    return F.element_at(F.transform(F.array(F.split(norm, " ")), grams_of), 1)
-
-
 def perm_params(num_perm: int, seed: int = DEFAULT_SEED) -> list[tuple[int, int]]:
     """Deterministic (a, b) parameters for the universal-hash permutation
     family h_i(x) = (a_i·x + b_i) mod M31 — derived from md5 so every
@@ -204,6 +203,19 @@ def _word_shingle_hashes_build(col: Column, seed: int) -> Column:
     return F.when(F.size(toks) >= 3, grams).otherwise(F.array(hash64(norm, seed, "mh") % MERSENNE_31))
 
 
+def doc_grams(df: DataFrame, text_col: str, id_col: str, seed: int = DEFAULT_SEED) -> DataFrame:
+    """(doc_id, g): one row per DISTINCT word-3-gram hash of each
+    document — the posting rows containment, novelty and the streaming
+    novelty index are built from. NULL-text docs are dropped ("no
+    content → no signature", the minhash/simhash convention): a shared
+    NULL-marker gram would otherwise tie every NULL doc to every other
+    (ADVICE r9)."""
+    return df.filter(F.col(text_col).isNotNull()).select(
+        F.col(id_col).alias("doc_id"),
+        F.explode(F.array_distinct(word_shingle_hashes(F.col(text_col), seed))).alias("g"),
+    )
+
+
 def minhash_signature(col: Column, num_perm: int = 64, seed: int = DEFAULT_SEED) -> Column:
     """MinHash signature as array<bigint> over the word 3-gram hashes
     of ``word_shingle_hashes``.
@@ -238,6 +250,52 @@ def _minhash_signature_build(col: Column, num_perm: int, seed: int) -> Column:
     )
 
 
+def _lsh_bands(sig: Column, num_perm: int, bands: int) -> Column:
+    """The LSH band keys of a MinHash signature, array<struct<band,
+    bhash>>: band b is the md5 of its ``num_perm // bands`` signature
+    rows comma-joined. Batch candidates and batch-vs-corpus flags both
+    bucket on these keys, so incremental ``near_dup`` agrees with the
+    candidate pairs only because both call this."""
+    r = num_perm // bands
+    return F.array(*[
+        F.struct(
+            F.lit(b).alias("band"),
+            F.md5(F.concat_ws(",", *[F.element_at(sig, b * r + i + 1).cast("string") for i in range(r)])).alias("bhash"),
+        )
+        for b in range(bands)
+    ])
+
+
+def _bucket_pairs(keyed: DataFrame, bucket_cols: list[str], payload: str, cap: int, pair) -> DataFrame:
+    """Every member pair of every bucket of ``keyed`` (columns ``__id``,
+    ``payload`` and ``bucket_cols``), as the struct fields ``pair(x, y)``
+    builds from two (__id, payload) members with x.__id < y.__id.
+
+    Pairs come from grouping each bucket and enumerating member pairs
+    in-bucket — NOT a self-join: a self-join would compute the keyed
+    subplan twice (exchange reuse is not guaranteed) and shuffle it
+    twice. array_sort makes the enumeration deterministic regardless of
+    collect_list order.
+
+    ``cap`` bounds degenerate buckets: members beyond the cap (lowest
+    id first, deterministic) are dropped BEFORE the collect, via a
+    row_number over the same keys the groupBy uses — same hash
+    partitioning, so no extra shuffle, and the aggregation buffer never
+    materializes an unbounded array; enumeration stays O(cap²) per
+    bucket."""
+    wcap = Window.partitionBy(*bucket_cols).orderBy("__id")
+    keyed = keyed.withColumn("__rn", F.row_number().over(wcap)).filter(F.col("__rn") <= cap).drop("__rn")
+    mem = F.col("mem")
+    pairs_arr = F.flatten(F.transform(mem, lambda x, i: F.transform(F.slice(mem, i + 2, F.size(mem)), lambda y: pair(x, y))))
+    return (
+        keyed.groupBy(*bucket_cols)
+        .agg(F.array_sort(F.collect_list(F.struct("__id", payload))).alias("mem"))
+        .filter(F.size("mem") >= 2)
+        .select(F.explode(pairs_arr).alias("p"))
+        .select("p.*")
+    )
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str,
@@ -258,21 +316,16 @@ def minhash_lsh_candidates(
 
     ``max_bucket_size`` bounds degenerate buckets (at web scale,
     boilerplate/empty docs can put millions of rows in one band hash —
-    the unbounded case, not the exception): members beyond the cap
-    (lowest-id first, deterministic) are dropped from that bucket BEFORE
-    the collect, via a row_number over the same (band, bhash) keys the
-    groupBy uses — same hash partitioning, so no extra shuffle, and the
-    aggregation buffer never materializes an unbounded array. Docs
-    dropped here are near-identical to the kept members anyway (same
-    band hash) and exact-dedup catches true duplicates; pair
-    enumeration stays O(cap²) per bucket.
+    the unbounded case, not the exception): the lowest-id members are
+    kept (``_bucket_pairs``). Docs dropped there are near-identical to
+    the kept members anyway (same band hash) and exact-dedup catches
+    true duplicates.
     """
     # NULL-text rows are DROPPED: no content → no signature. Left in,
     # every NULL doc hashes to the SAME (empty) band keys in Spark and
     # they all pair with each other, while the DuckDB twins'
     # unnest(NULL) removes them (r9 dirty-corpus fuzz finding).
     df = df.filter(F.col(text_col).isNotNull())
-    rows_per_band = num_perm // bands
     sig = minhash_signature(F.col(text_col), num_perm, seed)
     banded = df.select(
         F.col(id_col).alias("__id"),
@@ -280,49 +333,15 @@ def minhash_lsh_candidates(
     ).select(
         "__id",
         "__sig",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.md5(F.concat_ws(",", *[F.element_at(F.col("__sig"), b * rows_per_band + r + 1).cast("string") for r in range(rows_per_band)])).alias("bhash"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("bk"),
+        F.explode(_lsh_bands(F.col("__sig"), num_perm, bands)).alias("bk"),
     ).select("__id", "__sig", F.col("bk.band").alias("band"), F.col("bk.bhash").alias("bhash"))
 
-    # Pairs come from grouping each bucket and enumerating member pairs
-    # in-bucket — NOT a self-join: a self-join would compute the whole
-    # signature subplan twice (exchange reuse is not guaranteed) and
-    # shuffle it twice. Bucket membership is bounded by real duplicate
-    # clusters; array_sort makes the (id_a < id_b) enumeration
-    # deterministic regardless of collect_list order.
-    wcap = Window.partitionBy("band", "bhash").orderBy("__id")
-    banded = banded.withColumn("__rn", F.row_number().over(wcap)).filter(F.col("__rn") <= max_bucket_size).drop("__rn")
-    buckets = (
-        banded.groupBy("band", "bhash")
-        .agg(F.array_sort(F.collect_list(F.struct("__id", "__sig"))).alias("mem"))
-        .filter(F.size("mem") >= 2)
-    )
-    est = lambda a, b: (  # noqa: E731 — signature-agreement estimate
-        F.size(F.filter(F.zip_with(a["__sig"], b["__sig"], lambda x, y: x == y), lambda z: z)) / F.lit(float(num_perm))
-    )
-    pairs_arr = F.flatten(
-        F.transform(
-            F.col("mem"),
-            lambda x, i: F.transform(
-                F.slice(F.col("mem"), i + 2, F.size(F.col("mem"))),
-                lambda y: F.struct(
-                    x["__id"].alias("id_a"), y["__id"].alias("id_b"), est(x, y).alias("est_jaccard")
-                ),
-            ),
-        )
-    )
-    return (
-        buckets.select(F.explode(pairs_arr).alias("p"))
-        .select("p.id_a", "p.id_b", "p.est_jaccard")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    def pair(x: Column, y: Column) -> Column:
+        # signature-agreement estimate of the pair's Jaccard
+        agree = F.size(F.filter(F.zip_with(x["__sig"], y["__sig"], lambda a, b: a == b), lambda z: z))
+        return F.struct(x["__id"].alias("id_a"), y["__id"].alias("id_b"), (agree / F.lit(float(num_perm))).alias("est_jaccard"))
+
+    return _bucket_pairs(banded, ["band", "bhash"], "__sig", max_bucket_size, pair).dropDuplicates(["id_a", "id_b"])
 
 
 # ----------------------------------------------------------------- simhash
@@ -443,32 +462,13 @@ def hamming_near_duplicates(
     shuffle on the band key, buckets capped at ``max_bucket_size``."""
     h = df.select(F.col(id_col).alias("__id"), F.col(hash_col).alias("__sim"))
     hb = h.select("__id", "__sim", F.explode(_hamming_band_array(F.col("__sim"), max_hamming)).alias("__band"))
-    # groupBy-bucket + in-bucket pair enumeration, not a self-join: the
-    # fingerprint subplan is computed and shuffled ONCE (see
-    # minhash_lsh_candidates for the same pattern).
-    wcap = Window.partitionBy("__band").orderBy("__id")
-    hb = hb.withColumn("__rn", F.row_number().over(wcap)).filter(F.col("__rn") <= max_bucket_size).drop("__rn")
-    buckets = (
-        hb.groupBy("__band")
-        .agg(F.array_sort(F.collect_list(F.struct("__id", "__sim"))).alias("mem"))
-        .filter(F.size("mem") >= 2)
-    )
-    pairs_arr = F.flatten(
-        F.transform(
-            F.col("mem"),
-            lambda x, i: F.transform(
-                F.slice(F.col("mem"), i + 2, F.size(F.col("mem"))),
-                lambda y: F.struct(
-                    x["__id"].alias("id_a"),
-                    y["__id"].alias("id_b"),
-                    F.bit_count(x["__sim"].bitwiseXOR(y["__sim"])).cast("int").alias("hamming"),
-                ),
-            ),
-        )
-    )
+
+    def pair(x: Column, y: Column) -> Column:
+        hamming = F.bit_count(x["__sim"].bitwiseXOR(y["__sim"])).cast("int")
+        return F.struct(x["__id"].alias("id_a"), y["__id"].alias("id_b"), hamming.alias("hamming"))
+
     return (
-        buckets.select(F.explode(pairs_arr).alias("p"))
-        .select("p.id_a", "p.id_b", "p.hamming")
+        _bucket_pairs(hb, ["__band"], "__sim", max_bucket_size, pair)
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -561,7 +561,7 @@ def quality_survivors(df: DataFrame, text_col: str, id_col: str, score: Column) 
     surface to group-wise selection, ref:
     anonymization_dataframe_operator.rs:295-312).
     """
-    digest = F.md5(normalized_text(F.col(text_col))).alias("__digest")
+    digest = text_digest(F.col(text_col)).alias("__digest")
     w = Window.partitionBy("__digest")
     wr = w.orderBy(F.col("__score").desc(), F.col(id_col).asc())
     return (
@@ -613,21 +613,9 @@ def incremental_dedup_flags(
     dedup *index* (cf. ivf_write_index), so steady-state cost is one
     scan of the new batch plus two index joins.
     """
-    digest = F.md5(normalized_text(F.col(text_col)))
+    digest = text_digest(F.col(text_col))
     sig = minhash_signature(F.col(text_col), num_perm, seed)
-    rows_per_band = num_perm // bands
-    band_arr = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[F.element_at(F.col("__sig"), b * rows_per_band + r + 1).cast("string") for r in range(rows_per_band)],
-                )
-            ).alias("bhash"),
-        )
-        for b in range(bands)
-    ])
+    band_arr = _lsh_bands(F.col("__sig"), num_perm, bands)
     keyed = df.select(F.col(id_col).alias("__id"), is_new.alias("__new"), digest.alias("__digest"), sig.alias("__sig"))
     if materialize_keyed:
         from rustic_witcher_spark.operators.materialize import materialize
@@ -701,12 +689,9 @@ def lsh_calibration(
     )
     ga = grams.select(F.col("__gid").alias("id_a"), F.col("__grams").alias("__ga"))
     gb = grams.select(F.col("__gid").alias("id_b"), F.col("__grams").alias("__gb"))
-    inter = F.size(F.array_intersect("__ga", "__gb"))
-    union = F.size(F.array_union("__ga", "__gb"))
-    exact = F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
     return (
         cands.join(ga, "id_a").join(gb, "id_b")
-        .withColumn("exact_jaccard", exact)
+        .withColumn("exact_jaccard", _set_jaccard(F.col("__ga"), F.col("__gb")))
         .select(
             "id_a",
             "id_b",
@@ -720,12 +705,16 @@ def lsh_calibration(
 # ----------------------------------------------------------- n-gram Jaccard
 
 
+def _set_jaccard(a: Column, b: Column) -> Column:
+    """|a ∩ b| / |a ∪ b| of two distinct-element arrays; 1.0 when both
+    are empty (two empty documents are identical)."""
+    union = F.size(F.array_union(a, b))
+    return F.when(union == 0, F.lit(1.0)).otherwise(F.size(F.array_intersect(a, b)) / union)
+
+
 def ngram_jaccard(a: Column, b: Column, k: int = 5) -> Column:
     """Exact Jaccard similarity of character k-shingle sets."""
-    sa, sb = char_shingles(a, k), char_shingles(b, k)
-    inter = F.size(F.array_intersect(sa, sb))
-    union = F.size(F.array_union(sa, sb))
-    return F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
+    return _set_jaccard(char_shingles(a, k), char_shingles(b, k))
 
 
 def verify_candidates_jaccard(
@@ -817,21 +806,17 @@ def containment_near_duplicates(
     """
     from rustic_witcher_spark.operators.materialize import materialize
 
-    df = df.filter(F.col(text_col).isNotNull())
-    sg = df.select(
-        F.col(id_col).alias("__id"),
-        F.explode(F.array_distinct(word_shingle_hashes(F.col(text_col), seed))).alias("g"),
-    )
+    sg = doc_grams(df, text_col, id_col, seed)
     if max_posting is not None:
         # salted two-level cap: exact lowest-id semantics with bounded
         # task size (see docstring) — a hot gram's rows split across 32
         # (g, salt) partitions first; only ≤ 32·max_posting survivors
         # per gram reach the exact second-level rank
         salts = 32
-        w1 = Window.partitionBy("g", "__salt").orderBy("__id")
-        w2 = Window.partitionBy("g").orderBy("__id")
+        w1 = Window.partitionBy("g", "__salt").orderBy("doc_id")
+        w2 = Window.partitionBy("g").orderBy("doc_id")
         sg = (
-            sg.withColumn("__salt", F.pmod(F.xxhash64("__id"), F.lit(salts)))
+            sg.withColumn("__salt", F.pmod(F.xxhash64("doc_id"), F.lit(salts)))
             .withColumn("__p1", F.row_number().over(w1))
             .filter(F.col("__p1") <= max_posting)
             .withColumn("__p2", F.row_number().over(w2))
@@ -840,7 +825,7 @@ def containment_near_duplicates(
         )
     sg = materialize(sg)
     freq = sg.groupBy("g").agg(F.count(F.lit(1)).alias("nf"))
-    wd = Window.partitionBy("__id")
+    wd = Window.partitionBy("doc_id")
     ranked = (
         sg.join(freq, "g")
         .withColumn("sz", F.count(F.lit(1)).over(wd))
@@ -853,13 +838,13 @@ def containment_near_duplicates(
     # freq-join + double-Window chain once per consumer (visible as two
     # duplicated Window/WindowGroupLimit subtrees in the r12 plan
     # capture). Same value by construction (sz is the row count per
-    # __id either way — the DuckDB twin's `sizes` CTE is this exact
+    # doc_id either way — the DuckDB twin's `sizes` CTE is this exact
     # GROUP BY), and the probe branch keeps its window-carried sz.
-    sizes = sg.groupBy("__id").agg(F.count(F.lit(1)).alias("sz"))
+    sizes = sg.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     probe = ranked.filter(F.col("pos") <= F.col("sz") - F.expr("(sz + 1) div 2") + 1)
     cands = (
-        probe.select(F.col("__id").alias("id_a"), "g")
-        .join(sg.select(F.col("__id").alias("id_b"), "g"), "g")
+        probe.select(F.col("doc_id").alias("id_a"), "g")
+        .join(sg.select(F.col("doc_id").alias("id_b"), "g"), "g")
         .filter(F.col("id_a") != F.col("id_b"))
         .select(
             F.least("id_a", "id_b").alias("id_a"),
@@ -870,13 +855,13 @@ def containment_near_duplicates(
     # exact verify: A's grams matched into B's posting rows, counted per
     # pair — candidate-bounded work, never an all-pairs overlap join
     inter = (
-        cands.join(sg.select(F.col("__id").alias("id_a"), "g"), "id_a")
-        .join(sg.select(F.col("__id").alias("id_b"), "g"), ["id_b", "g"])
+        cands.join(sg.select(F.col("doc_id").alias("id_a"), "g"), "id_a")
+        .join(sg.select(F.col("doc_id").alias("id_b"), "g"), ["id_b", "g"])
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
-    sa = sizes.select(F.col("__id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("__id").alias("id_b"), F.col("sz").alias("sz_b"))
+    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"))
+    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"))
     return (
         inter.join(sa, "id_a")
         .join(sb, "id_b")
@@ -918,13 +903,7 @@ def novelty_scores(df: DataFrame, text_col: str, id_col: str, seed: int = DEFAUL
     """
     from rustic_witcher_spark.operators.materialize import materialize
 
-    df = df.filter(F.col(text_col).isNotNull())
-    sg = materialize(
-        df.select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(F.array_distinct(word_shingle_hashes(F.col(text_col), seed))).alias("g"),
-        )
-    )
+    sg = materialize(doc_grams(df, text_col, id_col, seed))
     first = sg.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
     return (
         sg.join(first, "g")

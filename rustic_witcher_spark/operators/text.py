@@ -119,9 +119,3 @@ def lang_id(col: Column) -> Column:
         out_lang = F.when(cond, F.lit(lang)).otherwise(out_lang)
         out_score = F.when(cond, scores[lang]).otherwise(out_score)
     return out_lang
-
-
-def fingerprint(col: Column) -> Column:
-    """Document fingerprint: md5 of the normalized text (stable content
-    hash used for exact dedup joins and incremental re-processing)."""
-    return F.md5(normalized_text(col))

@@ -139,6 +139,61 @@ def _toks_sql(c: str) -> str:
     return f"(CASE WHEN length({n}) = 0 THEN []::VARCHAR[] ELSE string_split({n}, ' ') END)"
 
 
+# DuckDB twins of the dedup-family kernels in operators/dedup.py, one
+# definition each (the registry's oracle hash pins their exact text).
+
+# text_digest: the exact-dedup key
+_SQL_DIGEST = f"md5({_norm_sql('text')})"
+
+# char_shingles(k=5) over a normalized-text column ``n``
+_SQL_CHAR5_SHINGLES = "list_distinct([substring(n, i, 5) FOR i IN generate_series(1, greatest(length(n) - 4, 1))])"
+
+
+def _sql_tok_h() -> str:
+    """Token-hash pass of ``word_shingle_hashes``: ONE md5 per token of
+    the normalized text, reduced mod M31 (read as column ``tok_h``)."""
+    toks = f"string_split({_norm_sql('text')}, ' ')"
+    return f"list_transform({toks}, t -> ({sql_hash64('t', SEED, 'mh')}) % {MERSENNE_31})"
+
+
+def _sql_word3_hashes(whole: str) -> str:
+    """``word_shingle_hashes`` over a ``tok_h`` column: the arithmetic
+    3-gram combine, or the hash of ``whole`` (the normalized text) for
+    texts of fewer than 3 tokens."""
+    grams = (
+        f"list_transform(generate_series(1, len(tok_h) - 2), "
+        f"i -> ((tok_h[i] * {dedup._GRAM_W1}) % {MERSENNE_31} + (tok_h[i+1] * {dedup._GRAM_W2}) % {MERSENNE_31} + tok_h[i+2]) % {MERSENNE_31})"
+    )
+    return f"CASE WHEN len(tok_h) >= 3 THEN {grams} ELSE [({sql_hash64(whole, SEED, 'mh')}) % {MERSENNE_31}] END"
+
+
+def _sql_base_h(src: str) -> str:
+    """(doc_id, base_h): the word-3-gram hash list of every ``src`` row."""
+    return (
+        f"SELECT doc_id, ({_sql_word3_hashes(_norm_sql('text'))}) AS base_h FROM "
+        f"(SELECT doc_id, text, {_sql_tok_h()} AS tok_h FROM {src})"
+    )
+
+
+def _sql_lsh_bands(num_perm: int, bands: int) -> str:
+    """``_lsh_bands`` over a ``sig`` CTE: the ``bands`` CTE of
+    (doc_id, b, bhash) rows."""
+    rpb = num_perm // bands
+    return f"""bands AS (
+  SELECT doc_id, t.b,
+         md5(array_to_string(list_transform(sig[t.b*{rpb}+1 : t.b*{rpb}+{rpb}], x -> x::VARCHAR), ',')) AS bhash
+  FROM sig, generate_series(0, {bands - 1}) t(b)
+)"""
+
+
+# every doc pair sharing a band bucket (the uncapped twin of the
+# engine's ``_bucket_pairs`` over ``_lsh_bands``)
+_SQL_LSH_PAIRS = """pairs AS (
+  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+  FROM bands a JOIN bands b ON a.b = b.b AND a.bhash = b.bhash AND a.doc_id < b.doc_id
+)"""
+
+
 _FMT = "yyyy-MM-dd HH:mm:ss"
 
 
@@ -1505,11 +1560,11 @@ def sql_text_langid() -> str:
 
 def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _read(spark, sf_dir, "documents")
-    return df.select("doc_id", text.fingerprint(F.col("text")).alias("fp"))
+    return df.select("doc_id", dedup.text_digest(F.col("text")).alias("fp"))
 
 
 def sql_text_fingerprint() -> str:
-    return f"SELECT doc_id, md5({_norm_sql('text')}) AS fp FROM documents"
+    return f"SELECT doc_id, {_SQL_DIGEST} AS fp FROM documents"
 
 
 # ------------------------------------------------------------------- dedup
@@ -1523,7 +1578,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sql_dedup_exact() -> str:
     return f"""
 SELECT doc_id FROM (
-  SELECT doc_id, row_number() OVER (PARTITION BY md5({_norm_sql('text')}) ORDER BY doc_id ASC) AS rn
+  SELECT doc_id, row_number() OVER (PARTITION BY {_SQL_DIGEST} ORDER BY doc_id ASC) AS rn
   FROM documents)
 WHERE rn = 1
 """
@@ -1539,26 +1594,12 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sql_minhash_signatures() -> str:
-    from rustic_witcher_spark.operators.dedup import _GRAM_W1, _GRAM_W2
-
-    norm = _norm_sql("text")
-    toks = f"string_split({norm}, ' ')"
-    th = f"list_transform({toks}, t -> ({sql_hash64('t', SEED, 'mh')}) % {MERSENNE_31})"
-    grams = (
-        f"list_transform(generate_series(1, len(tok_h) - 2), "
-        f"i -> ((tok_h[i] * {_GRAM_W1}) % {MERSENNE_31} + (tok_h[i+1] * {_GRAM_W2}) % {MERSENNE_31} + tok_h[i+2]) % {MERSENNE_31})"
-    )
-    whole = f"[({sql_hash64(norm, SEED, 'mh')}) % {MERSENNE_31}]"
-    base = f"(CASE WHEN len(tok_h) >= 3 THEN {grams} ELSE {whole} END)"
     mins = [
         f"list_min(list_transform(base_h, h -> ({a} * h + {b}) % {MERSENNE_31}))::VARCHAR"
         for a, b in perm_params(16, SEED)
     ]
     sig = " || ',' || ".join(mins)
-    return (
-        f"SELECT doc_id, {sig} AS sig FROM ("
-        f"SELECT doc_id, {base} AS base_h FROM (SELECT doc_id, text, {th} AS tok_h FROM documents))"
-    )
+    return f"SELECT doc_id, {sig} AS sig FROM ({_sql_base_h('documents')})"
 
 
 def q_minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1580,46 +1621,23 @@ def _sql_minhash_sig_array(num_perm: int, src: str = "documents") -> str:
     (minhash_lsh_candidates does structurally on the Spark side — no
     content, no signature); the per-doc signatures entry keeps every
     row on both engines."""
-    from rustic_witcher_spark.operators.dedup import _GRAM_W1, _GRAM_W2
-
-    norm = _norm_sql("text")
-    toks = f"string_split({norm}, ' ')"
-    th = f"list_transform({toks}, t -> ({sql_hash64('t', SEED, 'mh')}) % {MERSENNE_31})"
-    grams = (
-        f"list_transform(generate_series(1, len(tok_h) - 2), "
-        f"i -> ((tok_h[i] * {_GRAM_W1}) % {MERSENNE_31} + (tok_h[i+1] * {_GRAM_W2}) % {MERSENNE_31} + tok_h[i+2]) % {MERSENNE_31})"
-    )
-    whole = f"[({sql_hash64(norm, SEED, 'mh')}) % {MERSENNE_31}]"
-    base = f"(CASE WHEN len(tok_h) >= 3 THEN {grams} ELSE {whole} END)"
     mins = ", ".join(
         f"list_min(list_transform(base_h, h -> ({a} * h + {b}) % {MERSENNE_31}))"
         for a, b in perm_params(num_perm, SEED)
     )
-    return (
-        f"SELECT doc_id, [{mins}] AS sig FROM ("
-        f"SELECT doc_id, {base} AS base_h FROM (SELECT doc_id, text, {th} AS tok_h FROM {src}))"
-    )
+    return f"SELECT doc_id, [{mins}] AS sig FROM ({_sql_base_h(src)})"
 
 
 def sql_minhash_lsh_candidates(num_perm: int = 32, bands: int = 8, threshold: float = 0.5) -> str:
-    rpb = num_perm // bands
     shingles = (
-        f"SELECT doc_id, list_distinct([substring(n, i, 5) FOR i IN "
-        f"generate_series(1, greatest(length(n) - 4, 1))]) AS sh "
+        f"SELECT doc_id, {_SQL_CHAR5_SHINGLES} AS sh "
         f"FROM (SELECT doc_id, {_norm_sql('text')} AS n FROM (SELECT * FROM documents WHERE text IS NOT NULL))"
     )
     return f"""
 WITH sig AS ({_sql_minhash_sig_array(num_perm, src='(SELECT * FROM documents WHERE text IS NOT NULL)')}),
 shg AS ({shingles}),
-bands AS (
-  SELECT doc_id, t.b,
-         md5(array_to_string(list_transform(sig[t.b*{rpb}+1 : t.b*{rpb}+{rpb}], x -> x::VARCHAR), ',')) AS bhash
-  FROM sig, generate_series(0, {bands - 1}) t(b)
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b ON a.b = b.b AND a.bhash = b.bhash AND a.doc_id < b.doc_id
-),
+{_sql_lsh_bands(num_perm, bands)},
+{_SQL_LSH_PAIRS},
 est AS (
   SELECT p.id_a, p.id_b,
          len(list_filter(generate_series(1, {num_perm}), i -> sa.sig[i] = sb.sig[i])) / {num_perm}.0 AS est_jaccard
@@ -1733,16 +1751,14 @@ def q_ngram_jaccard_adjacent(spark: SparkSession, sf_dir: str) -> DataFrame:
     grp = ex.groupBy("id_a").agg(F.collect_list(F.struct("role", "doc_id", "sh")).alias("mem")).filter(F.size("mem") == 2)
     pick = lambda role: F.element_at(F.filter(F.col("mem"), lambda m: m["role"] == role), 1)  # noqa: E731
     paired = grp.select("id_a", pick("b")["doc_id"].alias("id_b"), pick("a")["sh"].alias("sh_a"), pick("b")["sh"].alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    jac = F.when(union == 0, F.lit(1.0)).otherwise(inter / union)
+    jac = dedup._set_jaccard(F.col("sh_a"), F.col("sh_b"))
     return paired.select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
 
 
 SQL_NGRAM_JACCARD = f"""
 WITH s AS (
   SELECT doc_id,
-         list_distinct([substring(n, i, 5) FOR i IN generate_series(1, greatest(length(n) - 4, 1))]) AS sh
+         {_SQL_CHAR5_SHINGLES} AS sh
   FROM (SELECT doc_id, {_norm_sql('text')} AS n FROM documents)
 )
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
@@ -3708,7 +3724,7 @@ def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup groupBy, both map-side combinable."""
     d = _spread(spark, _read(spark, sf_dir, "documents"))
     digests = d.select(
-        "source", "lang", "n_chars", F.md5(dedup.normalized_text(F.col("text"))).alias("__fp")
+        "source", "lang", "n_chars", dedup.text_digest(F.col("text")).alias("__fp")
     )
     owners = digests.groupBy("__fp").agg(F.count("*").alias("__copies"))
     return (
@@ -3727,7 +3743,7 @@ def q_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 SQL_CORPUS_REPORT = f"""
 WITH digests AS (
-  SELECT source, lang, n_chars, md5({_norm_sql('text')}) AS fp FROM documents
+  SELECT source, lang, n_chars, {_SQL_DIGEST} AS fp FROM documents
 ),
 owners AS (SELECT fp, count(*) AS copies FROM digests GROUP BY 1)
 SELECT source, lang, count(*) AS n_docs,
@@ -3871,7 +3887,7 @@ def sql_curation_pipeline() -> str:
     return f"""
 WITH dd AS (
   SELECT * FROM (
-    SELECT *, row_number() OVER (PARTITION BY md5({_norm_sql('text')}) ORDER BY doc_id ASC) AS rn
+    SELECT *, row_number() OVER (PARTITION BY {_SQL_DIGEST} ORDER BY doc_id ASC) AS rn
     FROM documents)
   WHERE rn = 1
 ),
@@ -3914,7 +3930,7 @@ def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sql_dedup_survivors() -> str:
     return f"""
 WITH s AS (
-  SELECT doc_id, md5({_norm_sql('text')}) AS dg, {_SQL_ALPHA_FRAC} AS q
+  SELECT doc_id, {_SQL_DIGEST} AS dg, {_SQL_ALPHA_FRAC} AS q
   FROM (SELECT doc_id, text, {_toks_sql('text')} AS t FROM documents)
 )
 SELECT doc_id, q AS quality_score, n_dups FROM (
@@ -3941,15 +3957,10 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sql_dedup_incremental(num_perm: int = 32, bands: int = 8) -> str:
-    rpb = num_perm // bands
     return f"""
 WITH sig AS ({_sql_minhash_sig_array(num_perm)}),
-dg AS (SELECT doc_id, md5({_norm_sql('text')}) AS dg FROM documents),
-bands AS (
-  SELECT doc_id, t.b,
-         md5(array_to_string(list_transform(sig[t.b*{rpb}+1 : t.b*{rpb}+{rpb}], x -> x::VARCHAR), ',')) AS bhash
-  FROM sig, generate_series(0, {bands - 1}) t(b)
-),
+dg AS (SELECT doc_id, {_SQL_DIGEST} AS dg FROM documents),
+{_sql_lsh_bands(num_perm, bands)},
 ex AS (
   SELECT DISTINCT a.doc_id FROM dg a JOIN dg c ON a.dg = c.dg
   WHERE a.doc_id % 10 >= 8 AND c.doc_id % 10 < 8
@@ -3976,33 +3987,14 @@ def q_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sql_lsh_calibration(num_perm: int = 32, bands: int = 8) -> str:
-    from rustic_witcher_spark.operators.dedup import _GRAM_W1, _GRAM_W2
-
-    rpb = num_perm // bands
-    norm = _norm_sql("text")
-    toks = f"string_split({norm}, ' ')"
-    th = f"list_transform({toks}, t -> ({sql_hash64('t', SEED, 'mh')}) % {MERSENNE_31})"
-    grams = (
-        f"list_transform(generate_series(1, len(tok_h) - 2), "
-        f"i -> ((tok_h[i] * {_GRAM_W1}) % {MERSENNE_31} + (tok_h[i+1] * {_GRAM_W2}) % {MERSENNE_31} + tok_h[i+2]) % {MERSENNE_31})"
-    )
-    whole = f"[({sql_hash64(norm, SEED, 'mh')}) % {MERSENNE_31}]"
-    base = f"(CASE WHEN len(tok_h) >= 3 THEN {grams} ELSE {whole} END)"
     return f"""
 WITH sig AS ({_sql_minhash_sig_array(num_perm, src='(SELECT * FROM documents WHERE text IS NOT NULL)')}),
 gh AS (
   SELECT doc_id, list_distinct(base_h) AS g FROM (
-    SELECT doc_id, {base} AS base_h FROM (SELECT doc_id, text, {th} AS tok_h FROM (SELECT * FROM documents WHERE text IS NOT NULL)))
+    {_sql_base_h('(SELECT * FROM documents WHERE text IS NOT NULL)')})
 ),
-bands AS (
-  SELECT doc_id, t.b,
-         md5(array_to_string(list_transform(sig[t.b*{rpb}+1 : t.b*{rpb}+{rpb}], x -> x::VARCHAR), ',')) AS bhash
-  FROM sig, generate_series(0, {bands - 1}) t(b)
-),
-pairs AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM bands a JOIN bands b ON a.b = b.b AND a.bhash = b.bhash AND a.doc_id < b.doc_id
-),
+{_sql_lsh_bands(num_perm, bands)},
+{_SQL_LSH_PAIRS},
 est AS (
   SELECT p.id_a, p.id_b,
          len(list_filter(generate_series(1, {num_perm}), i -> sa.sig[i] = sb.sig[i])) / {num_perm}.0 AS est
@@ -4767,7 +4759,7 @@ def q_dedup_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     # drops NULL digests structurally (NULL never equi-joins), so the
     # convention must be explicit on this face (dirty-corpus fuzz, r9)
     d = _spread(spark, _read(spark, sf_dir, "documents")).filter(F.col("text").isNotNull())
-    digests = d.select("source", "lang", F.md5(dedup.normalized_text(F.col("text"))).alias("__fp"))
+    digests = d.select("source", "lang", dedup.text_digest(F.col("text")).alias("__fp"))
     # copy counts as a two-phase groupBy + join-back (r10, the
     # containment/novelty skew fix): the previous count() window over
     # partitionBy(__fp) put a hot digest's ENTIRE copy set on one task
@@ -4795,7 +4787,7 @@ def q_dedup_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sql_dedup_weighted() -> str:
     return f"""
 WITH digests AS (
-  SELECT source, lang, md5({_norm_sql('text')}) AS fp FROM documents
+  SELECT source, lang, {_SQL_DIGEST} AS fp FROM documents
   WHERE text IS NOT NULL
 ),
 owners AS (SELECT fp, count(*) AS copies FROM digests GROUP BY 1)
@@ -6724,20 +6716,10 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sql_source_overlap() -> str:
-    from rustic_witcher_spark.operators.dedup import _GRAM_W1, _GRAM_W2
-
-    norm = _norm_sql("text")
-    toks = f"string_split({norm}, ' ')"
-    th = f"list_transform({toks}, t -> ({sql_hash64('t', SEED, 'mh')}) % {MERSENNE_31})"
-    grams = (
-        f"list_transform(generate_series(1, len(tok_h) - 2), "
-        f"i -> ((tok_h[i] * {_GRAM_W1}) % {MERSENNE_31} + (tok_h[i+1] * {_GRAM_W2}) % {MERSENNE_31} + tok_h[i+2]) % {MERSENNE_31})"
-    )
-    whole = f"[({sql_hash64('norm', SEED, 'mh')}) % {MERSENNE_31}]"
     return f"""
-WITH th AS (SELECT source, {th} AS tok_h, {norm} AS norm FROM documents),
+WITH th AS (SELECT source, {_sql_tok_h()} AS tok_h, {_norm_sql('text')} AS norm FROM documents),
 exploded AS (
-  SELECT source, unnest(CASE WHEN len(tok_h) >= 3 THEN {grams} ELSE {whole} END) AS g FROM th
+  SELECT source, unnest({_sql_word3_hashes('norm')}) AS g FROM th
 ),
 sg AS (SELECT DISTINCT source, g FROM exploded),
 sizes AS (SELECT source, count(*) AS n FROM sg GROUP BY source),
@@ -6761,23 +6743,12 @@ def _sql_doc_grams_sg() -> str:
     containment / novelty entries (same gram arithmetic as
     sql_source_overlap / the minhash twins: ONE md5 per token,
     arithmetic 3-gram combine mod M31)."""
-    from rustic_witcher_spark.operators.dedup import _GRAM_W1, _GRAM_W2
-
-    norm = _norm_sql("text")
-    toks = f"string_split({norm}, ' ')"
-    th = f"list_transform({toks}, t -> ({sql_hash64('t', SEED, 'mh')}) % {MERSENNE_31})"
-    grams = (
-        f"list_transform(generate_series(1, len(tok_h) - 2), "
-        f"i -> ((tok_h[i] * {_GRAM_W1}) % {MERSENNE_31} + (tok_h[i+1] * {_GRAM_W2}) % {MERSENNE_31} + tok_h[i+2]) % {MERSENNE_31})"
-    )
-    whole = f"[({sql_hash64('norm', SEED, 'mh')}) % {MERSENNE_31}]"
     # text IS NOT NULL: lockstep with the Spark operators' NULL-text
-    # drop (minhash/simhash "no content → no signature"; ADVICE r9)
+    # drop (dedup.doc_grams)
     return (
-        f"th AS (SELECT doc_id, {th} AS tok_h, {norm} AS norm FROM documents"
+        f"th AS (SELECT doc_id, {_sql_tok_h()} AS tok_h, {_norm_sql('text')} AS norm FROM documents"
         f" WHERE text IS NOT NULL),\n"
-        f"sg AS (SELECT doc_id, unnest(list_distinct("
-        f"CASE WHEN len(tok_h) >= 3 THEN {grams} ELSE {whole} END)) AS g FROM th)"
+        f"sg AS (SELECT doc_id, unnest(list_distinct({_sql_word3_hashes('norm')})) AS g FROM th)"
     )
 
 
@@ -7331,7 +7302,6 @@ def q_dedup_exact_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     production form takes a watermark (dropDuplicatesWithinWatermark,
     streaming/dedup.py:27-41); the gate grades the exact finite-backfill
     form. The graded plan is the memory-sink scan + a projection."""
-    from rustic_witcher_spark.operators.dedup import normalized_text
     from rustic_witcher_spark.streaming.dedup import streaming_exact_dedup
 
     d = _read(spark, sf_dir, "documents")
@@ -7341,7 +7311,7 @@ def q_dedup_exact_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors = streaming_exact_dedup(_ordered_stream(spark, [p0, p1], work), text_col="text")
     return (
         _run_to_memory(spark, survivors, "rw_dedup_inc_stream_result", work, "append")
-        .select(F.md5(normalized_text(F.col("text"))).alias("digest"), F.col("part").alias("first_part"))
+        .select(dedup.text_digest(F.col("text")).alias("digest"), F.col("part").alias("first_part"))
         .orderBy("digest", "first_part")
     )
 
@@ -7350,7 +7320,7 @@ def sql_dedup_exact_incremental() -> str:
     """Twin of the two-batch stream: a digest's survivor comes from the
     first batch containing it (first-seen-wins)."""
     return f"""
-SELECT md5({_norm_sql("text")}) AS digest,
+SELECT {_SQL_DIGEST} AS digest,
        min(CASE WHEN doc_id % 10 < 8 THEN 0 ELSE 1 END) AS first_part
 FROM documents
 GROUP BY 1 ORDER BY digest, first_part

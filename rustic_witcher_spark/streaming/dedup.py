@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from rustic_witcher_spark.operators.dedup import normalized_text, simhash64
+from rustic_witcher_spark.operators.dedup import simhash64, text_digest
 from pyspark.sql import functions as F
 
 
@@ -41,7 +41,7 @@ def streaming_exact_dedup(
     exact and unbounded — correct for finite backfills, not
     forever-streams.
     """
-    out = docs_stream.withColumn("__digest", F.md5(normalized_text(F.col(text_col))))
+    out = docs_stream.withColumn("__digest", text_digest(F.col(text_col)))
     if ts_col is not None:
         out = out.withWatermark(ts_col, watermark)
         return out.dropDuplicatesWithinWatermark(["__digest"]).drop("__digest")

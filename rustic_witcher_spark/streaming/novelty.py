@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rustic_witcher_spark.functions.wordlists import DEFAULT_SEED
-from rustic_witcher_spark.operators.dedup import word_shingle_hashes
+from rustic_witcher_spark.operators.dedup import doc_grams
 from rustic_witcher_spark.sinks.parquet import write_parquet
 from rustic_witcher_spark.streaming.replay_meta import advance, load_meta, read_indexed
 
@@ -68,13 +68,9 @@ def novelty_append_batch(
     if batch_id <= meta.get("last_batch_id", -1):
         return False
     spark = batch_df.sparkSession
-    # NULL-text drop in lockstep with the batch face (ADVICE r9):
-    # stream ≡ batch must hold on dirty corpora too
-    batch_df = batch_df.filter(F.col(text_col).isNotNull())
-    sg = batch_df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(word_shingle_hashes(F.col(text_col), seed))).alias("g"),
-    )
+    # the batch face's gram rows (NULL-text drop included): stream ≡
+    # batch must hold on dirty corpora too
+    sg = doc_grams(batch_df, text_col, id_col, seed)
     data_dir = os.path.join(index_path, "data")
     # the cursored index only: a crash-replay never scores against its own grams
     seen = read_indexed(spark, data_dir, _IDX_SCHEMA, meta).select("g")

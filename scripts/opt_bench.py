@@ -1,7 +1,9 @@
 """Optimization-loop helper: time named registry entries in ONE shared
 JVM (warm pass at sf0.01, then best-of-N at the bench SF with the noop
 sink — bench.py's methodology), and/or dump .explain("formatted") to a
-file per entry.
+file per entry. Dumps carry no expression or plan ids (``#123``,
+``#123L``, ``plan_id=45``), so a before/after pair of dumps diffs to
+empty when the plan did not change.
 
 Usage:
     python scripts/opt_bench.py [--sf DIR] [--runs N] [--plans OUTDIR] name [name ...]
@@ -16,6 +18,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 from pathlib import Path
 
@@ -49,7 +52,7 @@ def main() -> None:
             outdir.mkdir(parents=True, exist_ok=True)
             df = fn(spark, args.sf)
             plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-            (outdir / f"{name}{args.suffix}.txt").write_text(plan)
+            (outdir / f"{name}{args.suffix}.txt").write_text(re.sub(r"#\d+L?|plan_id=\d+", "", plan))
             print(f"plan -> {outdir / (name + args.suffix + '.txt')}")
         if args.no_time:
             continue

@@ -140,7 +140,7 @@ def test_giant_document_shingles_and_chunks_stay_linear(spark):
     from pyspark.sql import functions as F
 
     from rustic_witcher_spark.operators import lm
-    from rustic_witcher_spark.operators.dedup import char_shingles, word_shingles
+    from rustic_witcher_spark.operators.dedup import char_shingles, word_shingle_hashes
 
     body = " ".join(f"w{i % 97}" for i in range(25000))  # ~100k chars
     df = spark.createDataFrame([(1, body), (2, "w1 w2 w3")], "doc_id long, text string")
@@ -151,7 +151,7 @@ def test_giant_document_shingles_and_chunks_stay_linear(spark):
     assert n_by_id[1] == exact  # blocked path == naive distinct-window set
     assert n_by_id[2] == len("w1 w2 w3") - 4
 
-    ws = df.select(F.size(word_shingles(F.col("text"), 3)).alias("n")).collect()
+    ws = df.select(F.size(word_shingle_hashes(F.col("text"))).alias("n")).collect()
     assert {r["n"] for r in ws} == {25000 - 2, 1}
 
     chunks = {r["doc_id"]: r for r in lm.chunk_dup_stats(df, "text", "doc_id").collect()}

@@ -10,13 +10,16 @@ where the 100 TB story depends on it.
 from __future__ import annotations
 
 import hashlib
+from pathlib import Path
 
+import pytest
 from pyspark.sql import functions as F
 
 from rustic_witcher_spark.operators import multimodal, quality
 from rustic_witcher_spark.operators.dedup import (
     incremental_dedup_flags,
     lsh_calibration,
+    minhash_lsh_candidates,
     quality_survivors,
 )
 
@@ -93,6 +96,26 @@ def test_incremental_flags_partition_invariant(spark):
     a = sorted(map(tuple, incremental_dedup_flags(df.coalesce(1), "text", "doc_id", new).collect()))
     b = sorted(map(tuple, incremental_dedup_flags(df.repartition(16), "text", "doc_id", new).collect()))
     assert a == b and len(a) == 50
+
+
+def test_incremental_near_dup_matches_lsh_candidate_pairs(spark, sf_dir):
+    """Incremental ``near_dup`` and the batch candidate generator bucket
+    on one band format: a batch doc is flagged exactly when an uncapped
+    ``minhash_lsh_candidates`` pair joins it to a corpus doc."""
+    path = Path(sf_dir).parent / "sf0.01" / "documents.parquet"
+    if not path.exists():
+        pytest.skip(f"no {path}")
+    docs = spark.read.parquet(str(path)).filter(F.col("text").isNotNull())
+    new = lambda i: i % 10 >= 8  # noqa: E731 — the registry's batch split
+    flags = incremental_dedup_flags(docs, "text", "doc_id", new(F.col("doc_id")), num_perm=32, bands=8)
+    pairs = minhash_lsh_candidates(docs, "text", "doc_id", num_perm=32, bands=8, max_bucket_size=1 << 40)
+    want = {
+        a if new(a) else b
+        for a, b in ((r["id_a"], r["id_b"]) for r in pairs.collect())
+        if new(a) != new(b)
+    }
+    got = {r["doc_id"] for r in flags.collect() if r["near_dup"]}
+    assert want and got == want
 
 
 def test_incremental_flags_materialize_keyed_identical(spark):
