@@ -2411,17 +2411,35 @@ def _pq_index_dir(sf_dir: str) -> str:
     return os.path.join(tempfile.gettempdir(), "rw_spark_pq_index", key)
 
 
+def _pid_running(name: str) -> bool:
+    """Whether ``name`` is the pid of a process that still runs."""
+    try:
+        os.kill(int(name), 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # it runs, as another user
+        pass
+    return True
+
+
 def _fresh_workdir(tag: str) -> str:
-    """A fresh mkdtemp under ``<tmp>/rw_spark_<tag>`` for one invocation
-    of a streaming/incremental entry. Fresh, because a reused dir's
-    replay cursor or checkpoint would skip batches as already
-    processed; the parent is wiped first so repeated bench passes do
-    not accumulate. Each entry owns its own tag, so entries running
-    concurrently never wipe each other's scratch space."""
+    """A fresh mkdtemp under ``<tmp>/rw_spark_<tag>/<pid>`` for one
+    invocation of a streaming/incremental entry. Fresh, because a
+    reused dir's replay cursor or checkpoint would skip batches as
+    already processed. This process's dir and those of pids that no
+    longer run are wiped first, so repeated bench passes do not
+    accumulate; a live process's dir is never touched, so two
+    processes running the same entry at once keep their checkpoints.
+    Each entry owns its own tag, so entries running concurrently in
+    one process never wipe each other's scratch space either."""
     parent = os.path.join(tempfile.gettempdir(), f"rw_spark_{tag}")
-    shutil.rmtree(parent, ignore_errors=True)
+    own = str(os.getpid())
     os.makedirs(parent, exist_ok=True)
-    return tempfile.mkdtemp(dir=parent)
+    for name in os.listdir(parent):
+        if name.isdigit() and (name == own or not _pid_running(name)):
+            shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
+    os.makedirs(os.path.join(parent, own), exist_ok=True)
+    return tempfile.mkdtemp(dir=os.path.join(parent, own))
 
 
 def q_pq_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -42,7 +42,8 @@ def sf_dir():
 # shuffle-partition pin is refcounted (queries._pinned_shuffle_
 # partitions — same-valued pins share, different-valued pins wait),
 # memory-sink names are unique per entry, every entry's scratch space
-# is its own mkdtemp parent (queries._fresh_workdir's per-entry tag),
+# is its own mkdtemp parent (queries._fresh_workdir's per-entry tag,
+# one subdirectory per process, so a second process's run survives),
 # and shuffle-partition count never changes results (pinned by the
 # partition-invariance tests).
 SWEEP_SERIAL_SUFFIXES = ()

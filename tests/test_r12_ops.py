@@ -554,3 +554,29 @@ def test_ab_and_trend_oracle_parity_on_dirty_streams(spark, tmp_path_factory, da
         gs = sorted(map(tuple, g[cols].astype(str).values.tolist()))
         ws = sorted(map(tuple, w[cols].astype(str).values.tolist()))
         assert gs == ws, (name, len(gs), len(ws), gs[:5], ws[:5])
+
+
+def test_fresh_workdir_keeps_a_running_process_dir(monkeypatch, tmp_path):
+    """``_fresh_workdir`` wipes this process's earlier runs and those of
+    processes that have exited, never the dir of a process that still
+    runs: two sweeps at once used to delete each other's checkpoints."""
+    import os
+    import subprocess
+    import sys
+
+    from rustic_witcher_spark.queries import _fresh_workdir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    parent = tmp_path / "rw_spark_probe"
+    live = parent / str(os.getppid()) / "ckpt"
+    live.mkdir(parents=True)
+    exited = subprocess.run(
+        [sys.executable, "-c", "import os; print(os.getpid())"], capture_output=True, text=True, check=True
+    ).stdout.strip()
+    (parent / exited / "ckpt").mkdir(parents=True)
+
+    first = _fresh_workdir("probe")
+    second = _fresh_workdir("probe")
+    assert live.is_dir()
+    assert not (parent / exited).exists()
+    assert not os.path.exists(first) and os.path.isdir(second)
