@@ -28,7 +28,7 @@ from pyspark.sql import SparkSession
 
 from rustic_witcher_spark.config.model import AnonymizationConfig, TableConfig
 from rustic_witcher_spark.functions.wordlists import DEFAULT_SEED
-from rustic_witcher_spark.operators.cdc import apply_cdc
+from rustic_witcher_spark.operators.cdc import apply_cdc, read_cdc_files
 from rustic_witcher_spark.operators.transforms import check_schema_drift
 from rustic_witcher_spark.plans.pipeline import anonymize_table
 from rustic_witcher_spark.sinks.parquet import write_parquet
@@ -133,7 +133,7 @@ def process_table(
             if listed.cdc_files:
                 # DateAware: CDC files are per-PK upserts/deletes over the
                 # LOAD snapshot, not extra rows (ref: cdc_operator.rs:308-328).
-                df = apply_cdc(df, read_table_files(spark, listed.cdc_files), primary_key)
+                df = apply_cdc(df, read_cdc_files(spark, listed.cdc_files), primary_key)
         if catalog_columns is not None:
             check_schema_drift(df.columns, catalog_columns)
         out = anonymize_table(df, cfg, seed, limit_already_applied=True)

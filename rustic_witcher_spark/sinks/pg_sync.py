@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from rustic_witcher_spark.config.model import AnonymizationConfig
 from rustic_witcher_spark.functions.wordlists import DEFAULT_SEED
-from rustic_witcher_spark.operators.cdc import OP_COLUMN, TS_COLUMN, latest_by_pk
+from rustic_witcher_spark.operators.cdc import META_COLUMNS, OP_COLUMN, latest_by_pk, read_cdc_files
 from rustic_witcher_spark.plans.pipeline import anonymize_table
 from rustic_witcher_spark.sinks.jdbc import upsert_sql
 from rustic_witcher_spark.sinks.postgres_ops import (
@@ -157,8 +157,8 @@ def sync_table(
         res.load_rows_written = True
 
     if listed.cdc_files:
-        cdc = read_table_files(spark, listed.cdc_files)
-        data_cols = [c for c in cdc.columns if c not in (OP_COLUMN, TS_COLUMN)]
+        cdc = read_cdc_files(spark, listed.cdc_files)
+        data_cols = [c for c in cdc.columns if c not in META_COLUMNS]
         # Dedupe to the last writer per PK FIRST, then anonymize the
         # winners (deterministic per-value transforms commute with the
         # dedupe for data columns). Anonymizing before the dedupe and

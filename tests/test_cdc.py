@@ -82,3 +82,75 @@ def test_upsert_sql_builder():
     assert "ON CONFLICT (id)" in sql
     assert "name = EXCLUDED.name" in sql
     assert "id = EXCLUDED.id" not in sql
+
+
+# Same-timestamp CDC changes (one source transaction shares a commit
+# timestamp): the reference applies CDC files in DMS file-name order and
+# rows in file order, so the LAST of them wins. Three shapes, keyed
+# k=1..3 over a LOAD snapshot of the same keys:
+#   k=1  one file, U x / U y / U z         -> z
+#   k=2  one file, D then I (re-insert)    -> the re-inserted row
+#   k=3  8 files, one U each               -> the 8th file's row
+TIE_CFG = """
+[[tables]]
+table_name = "accounts"
+[tables.anonymization_type]
+type = "Multi"
+[[tables.anonymization_type.column_transformations]]
+column_name = "note"
+[tables.anonymization_type.column_transformations.transformation_type]
+type = "Replace"
+replacement_value = "X"
+"""
+TIE_WANT = {1: ("z", "U"), 2: ("back", "I"), 3: ("f7", "U")}
+
+
+@pytest.fixture()
+def tie_src(tmp_path):
+    import pandas as pd
+
+    d = tmp_path / "tie_src" / "accounts"
+    d.mkdir(parents=True)
+    pd.DataFrame({"k": [1, 2, 3], "name": ["a", "b", "c"], "note": ["n"] * 3}).to_parquet(d / "LOAD00000001.parquet")
+
+    def cdc(i, rows):
+        k, name, op = zip(*rows)
+        pd.DataFrame(
+            {"k": k, "name": name, "note": ["n"] * len(k), "Op": op, "_dms_ingestion_timestamp": [5] * len(k)}
+        ).to_parquet(d / f"20240115-00000000{i}.parquet")
+
+    cdc(0, [(1, "x", "U"), (1, "y", "U"), (1, "z", "U"), (2, "gone", "D"), (2, "back", "I"), (3, "f0", "U")])
+    for i in range(1, 8):
+        cdc(i, [(3, f"f{i}", "U")])
+    return tmp_path / "tie_src"
+
+
+def test_same_timestamp_ties_keep_the_last_written_row(spark, tie_src, tmp_path):
+    from datetime import date
+
+    from rustic_witcher_spark.config.loader import load_config_str
+    from rustic_witcher_spark.runner import snapshot
+    from rustic_witcher_spark.sinks.pg_sync import PgSyncHooks, sync_table
+
+    cfg = load_config_str(TIE_CFG)
+    report = snapshot(
+        spark, tie_src, tmp_path / "out", cfg, mode="DateAware", start_date=date(2024, 1, 1),
+        primary_keys={"accounts": ["k"]},
+    )
+    assert report.ok, report.results
+    out = spark.read.parquet(str(tmp_path / "out" / "accounts.parquet"))
+    assert sorted(out.columns) == ["k", "name", "note"]
+    assert {r["k"]: r["name"] for r in out.collect()} == {k: v[0] for k, v in TIE_WANT.items()}
+
+    staged = {}
+    hooks = PgSyncHooks(
+        execute=lambda sql: None,
+        write_dataframe=lambda df, table, mode: staged.update(
+            {table: {r["k"]: (r["name"], r["Op"]) for r in df.collect()}} if "Op" in df.columns else {}
+        ),
+    )
+    sync_table(
+        spark, hooks, "accounts", tie_src / "accounts", cfg, "public", ["k"],
+        mode="DateAware", start_date=date(2024, 1, 1),
+    )
+    assert staged == {"public.accounts__staging": TIE_WANT}
