@@ -1663,7 +1663,6 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def sql_simhash() -> str:
-    toks = _toks_sql("text")
     # empty-array edge: Spark splits '' -> [''] inside simhash64 (it uses
     # split directly), so mirror with string_split (never empty list)
     toks = f"string_split({_norm_sql('text')}, ' ')"
