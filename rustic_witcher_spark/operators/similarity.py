@@ -296,14 +296,16 @@ def cosine_near_dup_pairs(
 
 
 def _np_pack(items):
-    """(id, vec) struct list → (ids int64 array, float64 matrix)."""
+    """(id, vec) struct list → (ids int64 array, unit-norm float64
+    matrix) over the finite, non-zero-norm vectors — the dirty-vector
+    rule of ``_cosine_batch``: a degenerate vector pairs with nothing."""
     import numpy as np
 
     ids = np.fromiter((it["id"] for it in items), dtype=np.int64, count=len(items))
     mat = np.stack([np.asarray(it["v"], dtype=np.float64) for it in items])
-    norm = np.linalg.norm(mat, axis=1, keepdims=True)
-    norm[norm == 0.0] = 1.0  # zero vectors stay zero (sim 0), never NaN
-    return ids, mat / norm
+    norm = np.linalg.norm(mat, axis=1)
+    keep = np.isfinite(norm) & (norm > 0.0)
+    return ids[keep], mat[keep] / norm[keep, None]
 
 
 def _near_dup_pairs_block(df, threshold, id_col, vec_col, n_blocks):
@@ -347,7 +349,7 @@ def _near_dup_pairs_block(df, threshold, id_col, vec_col, n_blocks):
                         continue
                     l_ids, l_mat = _np_pack(left)
                     r_ids, r_mat = _np_pack(right)
-                sims = np.round(l_mat @ r_mat.T, 6)
+                sims = _round_half_away(l_mat @ r_mat.T)
                 keep = sims >= threshold
                 if same:
                     keep &= l_ids[:, None] < r_ids[None, :]  # each pair once, no self

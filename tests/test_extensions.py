@@ -150,6 +150,11 @@ def test_cosine_near_dup_pairs(spark):
     assert (1, 4) in got and got[(1, 4)] > 0.99
     assert all(k[0] < k[1] for k in got)
     assert not any(3 in k for k in got)
+    # a zero vector has no direction: it pairs with nothing, even at
+    # threshold 0 (the top-k contract's drop-at-the-boundary rule)
+    zero = spark.createDataFrame([(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [1.0, 1.0])], ["vec_id", "embedding"])
+    got0 = {(r["id_a"], r["id_b"]): r["sim"] for r in similarity.cosine_near_dup_pairs(zero, 0.0).collect()}
+    assert got0 == {(1, 3): 0.707107}
 
 
 # ---------------------------------------------------------------- similarity
@@ -265,22 +270,32 @@ def test_real_decoder_is_gated():
 
 
 def test_near_dup_methods_agree(spark):
-    """block (default, distributed) and broadcast (small-corpus) produce
-    identical pair sets and identical 6-dp sims."""
+    """The block kernel and the registered DuckDB twin
+    (``SQL_EMBEDDING_NEAR_DUPS``, threshold 0.4) emit the same pairs
+    with the same 6-dp sims, exactly. The fixture carries a cosine on an
+    exact .5 boundary: (1, 0, …) vs (65, 110, 7, 3, 1, 0, …) has
+    |b| = 128, so the cosine is 0.5078125, which rounds half away from
+    zero to 0.507813 (half-to-even would give 0.507812)."""
     import random
+
+    import duckdb
+    import pandas as pd
+
+    from rustic_witcher_spark.queries import SQL_EMBEDDING_NEAR_DUPS
 
     random.seed(23)
     rows = [(i, [random.gauss(0, 1) for _ in range(16)]) for i in range(80)]
     rows += [(1000 + i, [v * 1.001 for v in rows[i][1]]) for i in range(10)]  # planted dups
+    rows += [(2000, [1.0] + [0.0] * 15), (2001, [65.0, 110.0, 7.0, 3.0, 1.0] + [0.0] * 11)]
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    block = {(r["id_a"], r["id_b"]): r["sim"] for r in similarity.cosine_near_dup_pairs(df, 0.6, n_blocks=5).collect()}
-    bcast = {
-        (r["id_a"], r["id_b"]): r["sim"]
-        for r in similarity.cosine_near_dup_pairs(df, 0.6, method="broadcast").collect()
-    }
-    assert block == bcast
+    block = {(r["id_a"], r["id_b"]): r["sim"] for r in similarity.cosine_near_dup_pairs(df, 0.4, n_blocks=5).collect()}
+    con = duckdb.connect()
+    con.register("embeddings", pd.DataFrame(rows, columns=["vec_id", "embedding"]))
+    twin = {(a, b): sim for a, b, sim in con.execute(SQL_EMBEDDING_NEAR_DUPS).fetchall()}
+    assert block == twin
+    assert block[(2000, 2001)] == 0.507813
     assert all(a < b for a, b in block)
-    assert len(block) >= 10  # the planted dups are found
+    assert all((i, 1000 + i) in block for i in range(10))  # the planted dups are found
 
 
 def test_near_dup_lsh_recall_and_precision(spark):
