@@ -29,13 +29,14 @@ Design notes for the 100 TB shape:
 - ADC scoring ships the per-query lookup tables (LUT) to executors via
   ONE torrent broadcast and fancy-indexes the code matrix per Arrow
   batch (numpy kernel) — no shuffle of the corpus, |queries| x k rows
-  out of each batch, through the same block kernel as
-  ``similarity.brute_force_topk_block``.
+  out of each batch, through the shared ``similarity._block_topk``.
+  ``pq_topk`` fuses encode and ADC into that pass; the persisted index
+  scores stored codes with ``pq_adc_topk_block``.
 - The cosine decomposes cleanly over subspaces: dot(q, recon(c)) =
   SUM_m dot(q_m, codeword_{m,code_m}) and |recon(c)|^2 =
   SUM_m |codeword|^2 — so ADC scores EQUAL the reconstructed-vector
-  cosine (up to float addition order), which is what the HOF twin and
-  the DuckDB oracle compute explicitly.
+  cosine (up to float addition order), which is what the DuckDB twin
+  computes explicitly.
 
 Reference parity: the reference engine has no vector search at all —
 this module extends the training-data-pipeline surface (SURVEY §2's
@@ -194,61 +195,6 @@ def pq_encode(
     )
 
 
-def pq_adc_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_subspaces: int = 4,
-    n_codes: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = DEFAULT_SEED,
-    iters: int = 1,
-) -> DataFrame:
-    """HOF/Catalyst twin of PQ ANN: top-k approximate cosine neighbors
-    per query, scored against RECONSTRUCTED candidates (codes -> concat
-    of codewords), which is mathematically the ADC score. This is the
-    oracle-parity face — the registered scale path is
-    :func:`pq_adc_topk_block`, pinned output-identical by test.
-
-    Returns (query_id, neighbor_id, sim, rank), ranked by the shared
-    ``_exact_top_k`` contract: self-matches excluded, ties break on
-    neighbor id, and a query with no defined cosine (a zero vector or a
-    NaN component) gets no rows — as from the block faces.
-    """
-    cb = pq_codebooks(corpus, n_subspaces, n_codes, dim, id_col, vec_col, seed, iters)
-    codes = pq_encode(corpus, cb, n_subspaces, dim, id_col, vec_col)
-    # (m|cid) -> codeword map as ONE broadcast row; reconstruction is a
-    # pure expression over it — no shuffle, no per-row python
-    cbmap = cb.groupBy().agg(
-        F.map_from_entries(
-            F.collect_list(
-                F.struct(
-                    F.concat(F.col("m").cast("string"), F.lit("|"), F.col("cid").cast("string")).alias("k"),
-                    F.col("cvec").alias("v"),
-                )
-            )
-        ).alias("__cb")
-    )
-    recon = codes.crossJoin(F.broadcast(cbmap)).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.flatten(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n_subspaces - 1)),
-                lambda j: F.element_at(
-                    F.col("__cb"),
-                    F.concat(j.cast("string"), F.lit("|"), F.element_at(F.col("codes"), j + 1).cast("string")),
-                ),
-            )
-        ).alias("__cv"),
-    )
-    q = queries.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>").alias("__qv")
-    )
-    return _exact_top_k(recon.crossJoin(F.broadcast(q)), k)
-
-
 def _collect_codebooks(codebooks: DataFrame):
     """(m, cid, cvec) rows -> {(m, cid): np.float64 vector}; tiny
     (n_subspaces x n_codes) by construction."""
@@ -311,19 +257,15 @@ def pq_adc_topk_block(
     probe_map: dict | None = None,
     cid_col: str | None = None,
 ) -> DataFrame:
-    """The registered/scale face of PQ search: true ADC over the codes.
+    """PQ search over stored codes (the persisted-index face): true ADC.
 
     Driver collects only the codebook (KBs) and the bounded query set;
     per query it precomputes the LUT ip[q][m][code] = dot(q_m, codeword)
     and the shared norm table n2[m][code] = |codeword|^2, and the
     ``similarity._block_topk`` kernel scores a whole Arrow batch of
     codes with two fancy-index sums — never touching float vectors,
-    never shuffling the corpus.
-
-    Output contract matches :func:`pq_adc_topk` on clean vectors
-    (pinned by test): ADC sums per-subspace partials where the HOF twin
-    dots the reconstruction in one pass — algebraically identical,
-    float-order near-identical, and both round half-away to 6 dp.
+    never shuffling the corpus. Over the codes ``pq_encode`` writes it
+    returns what the fused ``pq_topk`` returns (pinned by test).
 
     ``probe_map`` (used by the persisted IVF-PQ path): {query_id:
     iterable of coarse list ids this query probes}; ``cid_col`` names
@@ -387,7 +329,7 @@ def pq_residual_adc_topk_block(
     t_ip (|Q| × lists), cross (lists × m × codes — e.g. 8×16×16
     doubles), and co_n2 are precomputed driver-side from the collected
     centroids+codebook and broadcast with the LUT; the kernel adds two
-    fancy-index gathers to the plain ADC sum. Expansion vs the twin's
+    fancy-index gathers to the plain ADC sum. Expansion vs the DuckDB twin's
     single dot over the reconstructed vector differs only in float
     grouping — absorbed by the 6-dp half-away rounding, the same
     contract the raw ADC faces have held since r8. Candidate rows MUST

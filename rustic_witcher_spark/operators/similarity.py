@@ -1,13 +1,19 @@
 """Similarity search over embedding columns (north-star extension).
 
-Brute-force cosine top-k is the correctness baseline; the LSH-bucketed
-variant is the 100 TB path (candidate generation via random-hyperplane
-signatures → bucket join → exact re-rank within buckets, so the
-cross-product never materializes corpus × queries).
+Each operator has exactly one face, the one its registry entry runs,
+and a DuckDB twin pins it:
 
-All vector math is built-in expressions (zip_with / aggregate), double
-precision, deterministic fold order — so a DuckDB oracle can reproduce
-the scores bit-for-bit after rounding.
+- Catalyst expressions (zip_with / aggregate folds, double precision,
+  deterministic fold order): ``brute_force_topk`` (the exact baseline),
+  ``lsh_topk`` (random-hyperplane buckets → exact re-rank inside them,
+  so corpus × queries never materializes), the IVF faces and the
+  k-means trainers.
+- numpy block kernels over Arrow batches: ``cosine_near_dup_pairs``,
+  ``hard_negative_top1_block`` and ``exclusion_top1_block``, plus the
+  PQ scorers in pq.py, which share ``_block_topk``.
+
+Every face rounds half away from zero to 6 dp after the float64 math,
+so the twins reproduce the scores exactly.
 """
 
 from __future__ import annotations
@@ -39,8 +45,7 @@ def _round_half_away(x, decimals: int = 6):
     """Round like Spark ``F.round`` / DuckDB ``round`` (half AWAY from
     zero) — ``np.round`` is banker's (half-to-even) and disagrees with
     both engines on exact .5 boundary values, which would let a block
-    kernel drift from its oracle-pinned HOF twin on adversarial
-    inputs."""
+    kernel drift from its DuckDB twin on adversarial inputs."""
     import numpy as np
 
     f = 10.0 ** decimals
@@ -105,8 +110,8 @@ def _query_block(queries: DataFrame, id_col: str, vec_col: str, *extra: str):
 def _cosine_batch(pdf, id_col: str, vec_col: str, q_mat, q_norm, *extra: str):
     """Score one Arrow batch of raw candidate vectors against the query
     block: the candidate side of the dirty-vector rule, then
-    dot/(|q|·|c|) rounded half-away to 6 dp — the operation order of the
-    HOF twins and the SQL oracles, so float ulps cannot flip a 6-dp
+    dot/(|q|·|c|) rounded half-away to 6 dp — the operation order of
+    ``cosine`` and the SQL twins, so float ulps cannot flip a 6-dp
     boundary across faces. Returns (c_ids, sims[Q, B], *extra column
     arrays) over the surviving candidates, or None."""
     import numpy as np
@@ -243,58 +248,6 @@ def brute_force_topk(
     return _exact_top_k(c.crossJoin(F.broadcast(q)), k)
 
 
-_PAIR_SCHEMA_DDL = "id_a long, id_b long, sim double"
-
-
-def cosine_near_dup_pairs(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    method: str = "block",
-    n_blocks: int = 16,
-    n_planes: int = 8,
-    n_tables: int = 3,
-    dim: int | None = None,
-) -> DataFrame:
-    """Embedding near-duplicate pairs: (id_a, id_b, sim) with
-    id_a < id_b and cosine ≥ threshold.
-
-    Three physical strategies for one logical operator:
-
-    - ``"block"`` (default) — EXACT and fully distributed: vectors hash
-      into ``n_blocks`` blocks, every unordered block pair becomes one
-      task that NumPy-matmuls its two bounded sub-matrices. No driver
-      collect, no broadcast of the corpus; executor memory per task is
-      two blocks. Work is inherently O(n²) (that is what exact all-pairs
-      means) but spread over B(B+1)/2 tasks with O(n·B) shuffle — size
-      ``n_blocks`` ≈ n·vec_bytes / 100 MB so a block fits comfortably.
-    - ``"lsh"`` — APPROXIMATE web-scale path: candidates from an OR of
-      ``n_tables`` hyperplane-signature tables (one shuffle each),
-      exact cosine verify ≥ threshold. Recall tunable via
-      ``n_planes``/``n_tables``; precision is exact (verify step).
-    - ``"broadcast"`` — the small-corpus path (≤ ~10⁵ vectors): the
-      whole (id, normalized-vector) matrix broadcast to every executor,
-      one matmul per Arrow batch. Opt-in only, since the driver builds
-      the matrix.
-
-    All strategies round sims to 6 dp after float64 matmul, so block
-    and broadcast agree bit-for-bit with the sequential-fold DuckDB
-    oracle (64-element double dots carry ~1e-14 error).
-    """
-    # NULL embeddings (dirty rows) can't be near anything, and a None
-    # reaching the NumPy kernels kills the whole stage — drop them at
-    # the operator boundary, before any strategy-specific plumbing.
-    df = df.filter(F.col(vec_col).isNotNull())
-    if method == "block":
-        return _near_dup_pairs_block(df, threshold, id_col, vec_col, n_blocks)
-    if method == "lsh":
-        return _near_dup_pairs_lsh(df, threshold, id_col, vec_col, n_planes, n_tables, dim)
-    if method == "broadcast":
-        return _near_dup_pairs_broadcast(df, threshold, id_col, vec_col)
-    raise ValueError(f"unknown method: {method!r} (block | lsh | broadcast)")
-
-
 def _np_pack(items):
     """(id, vec) struct list → (ids int64 array, unit-norm float64
     matrix) over the finite, non-zero-norm vectors — the dirty-vector
@@ -308,9 +261,33 @@ def _np_pack(items):
     return ids[keep], mat[keep] / norm[keep, None]
 
 
-def _near_dup_pairs_block(df, threshold, id_col, vec_col, n_blocks):
+def cosine_near_dup_pairs(
+    df: DataFrame,
+    threshold: float,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    n_blocks: int = 16,
+) -> DataFrame:
+    """Embedding near-duplicate pairs: (id_a, id_b, sim) with
+    id_a < id_b and cosine ≥ threshold — EXACT and fully distributed.
+
+    Vectors hash into ``n_blocks`` blocks, and every unordered block
+    pair becomes one task that NumPy-matmuls its two bounded
+    sub-matrices. No driver collect, no broadcast of the corpus;
+    executor memory per task is two blocks. Work is inherently O(n²)
+    (that is what exact all-pairs means) but spread over B(B+1)/2 tasks
+    with O(n·B) shuffle — size ``n_blocks`` ≈ n·vec_bytes / 100 MB so a
+    block fits comfortably.
+
+    Sims are rounded half-away to 6 dp after the float64 matmul, so they
+    agree with the sequential-fold DuckDB twin (64-element double dots
+    carry ~1e-14 error). NULL, zero-norm and non-finite vectors drop at
+    the boundary, as in the top-k contract: they pair with nothing.
+    """
     import numpy as np
 
+    # a None reaching the NumPy kernel kills the whole stage
+    df = df.filter(F.col(vec_col).isNotNull())
     src = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
@@ -361,69 +338,7 @@ def _near_dup_pairs_block(df, threshold, id_col, vec_col, n_blocks):
                     {"id_a": np.minimum(ia, ib), "id_b": np.maximum(ia, ib), "sim": sims[r, c]}
                 )
 
-    return packed.mapInPandas(score, _PAIR_SCHEMA_DDL)
-
-
-def _near_dup_pairs_lsh(df, threshold, id_col, vec_col, n_planes, n_tables, dim):
-    if dim is None:
-        # NB: inferring dim runs one driver-side job at plan-build time
-        # (array length is not in the schema); pass dim explicitly to
-        # keep construction lazy
-        row = df.select(vec_col).first()
-        if row is None or row[0] is None:
-            return df.sparkSession.createDataFrame([], _PAIR_SCHEMA_DDL)
-        dim = len(row[0])
-    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("v"))
-    tables = [
-        base.select(
-            "id", "v", F.lit(t).alias("t"),
-            hyperplane_signature(F.col("v"), dim, n_planes, seed=DEFAULT_SEED + t).alias("sig"),
-        )
-        for t in range(n_tables)
-    ]
-    sigs = tables[0]
-    for t in tables[1:]:
-        sigs = sigs.unionByName(t)
-    a, b = sigs.alias("a"), sigs.alias("b")
-    cand = (
-        a.join(b, ["t", "sig"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-            F.col("a.v").alias("va"), F.col("b.v").alias("vb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])  # OR across tables
-    )
-    return (
-        cand.select("id_a", "id_b", F.round(cosine(F.col("va"), F.col("vb")), 6).alias("sim"))
-        .filter(F.col("sim") >= threshold)
-    )
-
-
-def _near_dup_pairs_broadcast(df, threshold, id_col, vec_col):
-    import numpy as np
-
-    src = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    pdf = src.toPandas()
-    ids = pdf["id"].to_numpy()
-    mat = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-    norm = np.linalg.norm(mat, axis=1, keepdims=True)
-    norm[norm == 0.0] = 1.0
-
-    def score(p, pdf_batch):
-        import pandas as pd
-
-        all_ids, all_mat = p
-        b_ids = pdf_batch["id"].to_numpy()
-        b_mat = np.stack(pdf_batch["v"].to_numpy()).astype(np.float64)
-        b_norm = np.linalg.norm(b_mat, axis=1, keepdims=True)
-        b_norm[b_norm == 0.0] = 1.0
-        sims = np.round((b_mat / b_norm) @ all_mat.T, 6)
-        keep = (sims >= threshold) & (b_ids[:, None] < all_ids[None, :])
-        r, c = np.nonzero(keep)
-        return pd.DataFrame({"id_a": b_ids[r], "id_b": all_ids[c], "sim": sims[r, c]})
-
-    return _broadcast_map(src, (ids, mat / norm), score, _PAIR_SCHEMA_DDL)
+    return packed.mapInPandas(score, "id_a long, id_b long, sim double")
 
 
 def hyperplane_signature(vec: Column, dim: int, n_planes: int = 16, seed: int = DEFAULT_SEED) -> Column:
@@ -734,22 +649,20 @@ def hard_negative_top1_block(
     vec_col: str = "embedding",
     label_col: str = "label",
 ) -> DataFrame:
-    """numpy block-kernel twin of the Catalyst-HOF hard-negative entry
-    (queries.q_hard_negatives): top-1 other-label cosine neighbor per
-    query — the escape hatch for LARGE query sets, where per-pair HOF
-    lambdas (interpreted multiply-adds) lose to a vectorized matmul by
-    orders of magnitude.
+    """Top-1 other-label cosine neighbor per query (the
+    ``hard_negatives`` entry): a vectorized matmul per Arrow batch,
+    where per-pair Catalyst lambdas (interpreted multiply-adds) lose by
+    orders of magnitude on large query sets.
 
     Plan shape: the query block (ids, labels, float64 matrix) broadcasts
     once; mapInPandas emits ONE candidate row per (query, input batch)
     — the per-batch best under the other-label mask — and a map-side
     max(struct) reduces batches to the global top-1, so the shuffle
-    carries |queries| rows per partition exactly like the HOF version.
+    carries |queries| rows per partition.
 
     Dirty-data policy: the shared top-k contract, plus NULL-label rows
-    dropped on both sides. The HOF path instead propagates NULL sims
-    (oracle-pinned) and raises on zero vectors under ANSI; on clean
-    vectors the two paths are output-identical (pinned by test)."""
+    dropped on both sides; the DuckDB twin ``SQL_HARD_NEGATIVES``
+    replays both drops (pinned by test)."""
     import numpy as np
 
     queries = df.filter(F.col(id_col) < n_queries).filter(F.col(label_col).isNotNull())
@@ -780,31 +693,6 @@ def hard_negative_top1_block(
     return _top1_per_query(per_batch, ("query_id", "query_label"), "neighbor_label").orderBy("query_id")
 
 
-def brute_force_topk_block(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """numpy block-kernel twin of :func:`brute_force_topk` — same
-    output contract on clean vectors, vectorized for large query sets
-    (the HOF twin instead propagates NULL sims ranked last —
-    oracle-pinned — and raises on zero vectors under ANSI). The window
-    input is |queries|·k·|batches| rows — orders of magnitude under the
-    |queries|·|corpus| scored set the HOF version ranks."""
-    q = _query_block(queries, id_col, vec_col)
-    if q is None:
-        return _empty_top_k(corpus.sparkSession)
-
-    def score(p, pdf):
-        q_ids, q_mat, q_norm = p
-        scored = _cosine_batch(pdf, id_col, vec_col, q_mat, q_norm)
-        return None if scored is None else (q_ids, *scored)
-
-    return _block_topk(corpus.select(id_col, vec_col), q, score, k)
-
-
 def exclusion_top1_block(
     corpus: DataFrame,
     anchors: DataFrame,
@@ -824,10 +712,8 @@ def exclusion_top1_block(
     collect budget the entry documents; exclusion masking costs one
     np.isin per anchor per batch over its (small) partner list.
 
-    The HOF fallback and the SQL oracle replicate the kernel's NULL/NaN
-    drops via explicit sim filters (zero-norm remains the documented
-    ANSI-division exposure all the cosine faces share, as for
-    hard_negatives).
+    The DuckDB twin replicates the kernel's NULL/NaN drops via explicit
+    sim filters.
     """
     import numpy as np
 

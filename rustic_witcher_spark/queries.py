@@ -2012,9 +2012,9 @@ def sql_pii_redact() -> str:
 
 
 def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs — exact, via the default
-    distributed block-pair matmul (no driver collect; see
-    similarity.cosine_near_dup_pairs for the lsh/broadcast variants)."""
+    """Embedding-cosine near-duplicate pairs — exact, via the
+    distributed block-pair matmul of similarity.cosine_near_dup_pairs
+    (no driver collect)."""
     return similarity.cosine_near_dup_pairs(_read(spark, sf_dir, "embeddings"), threshold=0.4)
 
 
@@ -2266,9 +2266,7 @@ def q_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1.0 — see tests/test_pq.py).
 
     Fully deterministic, so the DuckDB twin replays the identical
-    train -> encode -> reconstruct -> cosine pipeline; the HOF face
-    (pq.pq_adc_topk) is additionally pinned output-identical to this
-    kernel by test — three faces, one contract."""
+    train -> encode -> reconstruct -> cosine pipeline."""
     emb = _read(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     return pq.pq_topk(emb, queries, k=5, n_subspaces=16, n_codes=16, dim=64, iters=1).select(
@@ -8557,72 +8555,9 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     |queries| rows per partition but the per-pair cosine is a BLAS
     multiply-add instead of an interpreted Catalyst HOF lambda —
     measured 2× at sf0.1 with 20 queries, and the gap grows with query
-    count (the r7 verdict's perf-weak item). `q_hard_negatives_hof` is
-    the pure-Catalyst twin, pinned output-identical on clean vectors by
-    test; it remains the right pick when a Python worker pool is
-    unavailable or the query set is a handful of rows."""
+    count (the r7 verdict's perf-weak item)."""
     emb = _read(spark, sf_dir, "embeddings")
     return similarity.hard_negative_top1_block(emb, HARDNEG_QUERIES)
-
-
-def q_hard_negatives_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Catalyst-HOF twin of `q_hard_negatives` (the registered block
-    kernel) — kept as the no-Python-worker fallback and the contract
-    pin for the kernel.
-
-    Plan shape: broadcast the small query set against the corpus (one
-    corpus scan regardless of query count, as brute_force_topk), then
-    top-1 per query via a map-side-combinable max(struct) aggregate —
-    no per-query window shuffle at all: the shuffle carries |queries|
-    rows per partition. Ties broken toward the smallest neighbor id
-    through the struct's (sim, -id) lexicographic order. NULL-label
-    rows drop out of the label-mismatch predicate on both engines
-    (x <> NULL is NULL)."""
-    emb = _read(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < HARDNEG_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("query_label"),
-        F.col("embedding").alias("__qv"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("label").alias("neighbor_label"),
-        F.col("embedding").alias("__cv"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_label") != F.col("query_label"))
-        .select(
-            "query_id",
-            "query_label",
-            "neighbor_id",
-            "neighbor_label",
-            F.round(similarity.cosine(F.col("__qv"), F.col("__cv")), 6).alias("sim"),
-        )
-        # align with the registered block kernel's drop-at-boundary
-        # policy: NaN sorts greatest in max(struct), so without this a
-        # single NaN-component vector would become every query's hard
-        # negative here while the kernel ignores it (same fix as
-        # contrastive_triplets' HOF face)
-        .filter(F.col("sim").isNotNull() & ~F.isnan("sim"))
-    )
-    best = scored.groupBy("query_id", "query_label").agg(
-        F.max(
-            F.struct(
-                F.col("sim").alias("sim"),
-                (-F.col("neighbor_id")).alias("__nn"),
-                F.col("neighbor_id").alias("neighbor_id"),
-                F.col("neighbor_label").alias("neighbor_label"),
-            )
-        ).alias("b")
-    )
-    return best.select(
-        "query_id",
-        "query_label",
-        F.col("b.neighbor_id").alias("neighbor_id"),
-        F.col("b.neighbor_label").alias("neighbor_label"),
-        F.col("b.sim").alias("sim"),
-    ).orderBy("query_id")
 
 
 SQL_HARD_NEGATIVES = f"""
@@ -8650,26 +8585,15 @@ WHERE rank = 1 ORDER BY query_id
 FH_DIM = 16
 
 
-def _fh_bucket_sign(h):
-    """(bucket, signbit) from ONE md5 digest column: bucket = the
-    60-bit hash64 slice (hex 1-15) mod FH_DIM, signbit = the 32-bit
-    hash_slice(16) slice (hex 16-23) mod 2. Both slices are
-    non-negative, so the Spark/DuckDB ``%`` sign conventions agree."""
+def _fh_enc(h):
+    """bucket*2 + signbit as one int — the kernel's wire encoding — from
+    ONE md5 digest column: bucket = the 60-bit hash64 slice (hex 1-15)
+    mod FH_DIM, signbit = the 32-bit hash_slice(16) slice (hex 16-23)
+    mod 2. Both slices are non-negative, so the Spark/DuckDB ``%`` sign
+    conventions agree."""
     b = (F.conv(F.substring(h, 1, 15), 16, 10).cast("long") % FH_DIM).cast("int")
     sbit = (F.conv(F.substring(h, 16, 8), 16, 10).cast("long") % 2).cast("int")
-    return b, sbit
-
-
-def _fh_enc(h):
-    """bucket*2 + signbit as one int — the kernel's wire encoding."""
-    b, sbit = _fh_bucket_sign(h)
     return b * 2 + sbit
-
-
-def _fh_pair(h):
-    """(b, s=±1) struct — the HOF face's per-token pair."""
-    b, sbit = _fh_bucket_sign(h)
-    return F.struct(b.alias("b"), (sbit * 2 - 1).cast("long").alias("s"))
 
 
 def feature_hash_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8699,12 +8623,10 @@ def feature_hash_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``F.aggregate`` lambda folds per document (measured 2.7-3.1 s at
     sf0.1, 5.5-6.3x the DuckDB twin) with C-speed accumulation. ZERO
     shuffle except the output sort; at 100 TB this featurizes at
-    parquet-scan speed. The HOF face (`q_feature_hash_embed_hof`) is
-    kept and pinned output-identical (`test_r9_ops.py`), same
-    discipline as `similarity.hard_negative_top1_block`. The oracle
-    runs the relational explode->group->grid plan -- same answer,
-    deliberately different plan. Zero-norm docs (empty/NULL text) emit
-    the all-zero vector on all three faces (kernel, HOF-on-clean,
+    parquet-scan speed. The oracle runs the relational
+    explode->group->grid plan -- same answer, deliberately different
+    plan, pinned row-for-row (`test_r9_ops.py`). Zero-norm docs
+    (empty/NULL text) emit the all-zero vector on both sides (kernel,
     oracle grid) instead of tripping ANSI division; rounding is
     half-away (`similarity._round_half_away`) to match F.round/DuckDB.
     """
@@ -8723,9 +8645,7 @@ def feature_hash_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE md5 per token: bucket from hex chars 1-15 (the hash64 slice),
     # sign bit from chars 16-23 (the hash_slice(16) slice) of the SAME
     # digest — md5 dominates the per-token cost, so this halves it vs
-    # the original two-digest form (oracle + HOF face changed in
-    # lockstep; entry has never held a driver verdict, so the hash
-    # function is still free to move)
+    # the original two-digest form
     enc = F.transform(
         toks,
         lambda t: _fh_enc(md5_hex(t, SEED, "fh")),
@@ -8767,67 +8687,19 @@ def feature_hash_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _fh_serialize(vec):
-    """The repo's array-output convention (q_embedding_project,
-    queries.py:2209): 6-dp '%.6f' coordinates joined by ',', with
-    ``+ 0.0`` collapsing IEEE -0.0 (a ±1 signed sum divided by a large
-    norm can round half-away to -0.0). Values are ALREADY rounded to
-    6 dp by both producer faces, so format_string/printf agree."""
-    return F.array_join(
-        F.transform(vec, lambda x: F.format_string("%.6f", x + F.lit(0.0))), ","
-    )
-
-
 def q_feature_hash_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry face of `feature_hash_vectors`: same bincount-kernel
     plan, with ``fh`` serialized per the array-output convention (the
     r10 fix for the r9 driver red — the ONLY change vs r9 is the
     trailing 16-element format/join projection, zero plan impact)."""
     v = feature_hash_vectors(spark, sf_dir)
-    return v.select("doc_id", _fh_serialize(F.col("fh")).alias("fh"))
-
-
-def q_feature_hash_embed_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pure-Catalyst HOF face of `q_feature_hash_embed`, kept as the
-    no-Python-stage fallback and pinned output-identical to the
-    registered kernel: the (bucket, sign) pair array is bound once per
-    doc (transform), the per-bucket signed sums are FH_DIM aggregate
-    folds over that array, and the normalization reads a let-bound
-    norm column (the HOF-capture discipline). Correct and shuffle-free
-    but interpreted — O(FH_DIM * tokens) lambda evaluations per doc is
-    what the kernel replaces.
-    """
-    d = _read(spark, sf_dir, "documents")
-
-    def bind1(value, fn):
-        """Evaluate ``value`` ONCE and use it through a lambda variable
-        — the transform-over-1-element-array binding that survives
-        CollapseProject inlining (the HOF capture trap: a computed
-        capture re-evaluates inside EVERY enclosing lambda iteration;
-        the unbound form re-ran the per-token md5 chain 16× per doc,
-        measured 26.8 s at sf0.1 vs ~2 s bound)."""
-        return F.element_at(F.transform(F.array(value), fn), 1)
-
-    toks = text.tokens(F.col("text"))
-    pairs = F.transform(
-        toks,
-        lambda t: _fh_pair(md5_hex(t, SEED, "fh")),
-    )
-    fh = bind1(pairs, lambda P: bind1(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(FH_DIM - 1)),
-            lambda b: F.aggregate(
-                P, F.lit(0).cast("long"),
-                lambda acc, p: acc + F.when(p["b"] == b, p["s"]).otherwise(F.lit(0).cast("long")),
-            ),
-        ),
-        lambda R: bind1(
-            F.sqrt(F.aggregate(R, F.lit(0.0), lambda a, x: a + (x * x).cast("double"))),
-            lambda nrm: F.when(nrm == 0.0, F.transform(R, lambda x: x.cast("double")))
-            .otherwise(F.transform(R, lambda x: F.round(x / nrm, 6))),
-        ),
-    ))
-    return d.select("doc_id", _fh_serialize(fh).alias("fh")).orderBy("doc_id")
+    # the repo's array-output convention (q_embedding_project): 6-dp
+    # '%.6f' coordinates joined by ',', with ``+ 0.0`` collapsing IEEE
+    # -0.0 (a ±1 signed sum divided by a large norm can round half-away
+    # to -0.0). The kernel already rounded to 6 dp, so format_string
+    # and DuckDB's printf agree.
+    fh = F.array_join(F.transform("fh", lambda x: F.format_string("%.6f", x + F.lit(0.0))), ",")
+    return v.select("doc_id", fh.alias("fh"))
 
 
 def sql_feature_hash_embed() -> str:
@@ -8964,23 +8836,11 @@ def q_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate per anchor via matmul + masked argmax, and a map-side
     max(struct) finishes the top-1 — no per-anchor window, and the
     per-pair cosine is a BLAS multiply-add instead of an interpreted
-    HOF lambda (hundreds of anchors × corpus at sf0.1: the HOF face
-    measured 3.7 s, the kernel ~2 s; the gap grows with the dup rate).
-    `q_contrastive_triplets_hof` is the pure-Catalyst fallback, pinned
-    output-identical on clean vectors. Ties break toward the smallest
-    neighbor id; cosine rounds to 6 dp (half-away, kernel and HOF and
-    SQL alike) before comparison.
+    HOF lambda (hundreds of anchors × corpus at sf0.1: a Catalyst
+    cross join measured 3.7 s, the kernel ~2 s; the gap grows with the
+    dup rate). Ties break toward the smallest neighbor id; cosine rounds
+    to 6 dp (half-away, kernel and SQL alike) before comparison.
     """
-    sym, anch = _triplet_positives(spark, sf_dir)
-    emb = _read(spark, sf_dir, "embeddings")
-    best = similarity.exclusion_top1_block(emb, anch)
-    return _triplet_assemble(sym, best)
-
-
-def _triplet_positives(spark: SparkSession, sf_dir: str):
-    """Shared positive side of both triplet faces: verified near-dup
-    pairs → symmetric (anchor, positive) rows + per-anchor exclusion
-    arrays joined to the anchor embeddings."""
     docs = _spread(spark, _read(spark, sf_dir, "documents"))
     emb = _read(spark, sf_dir, "embeddings")
 
@@ -9012,10 +8872,7 @@ def _triplet_positives(spark: SparkSession, sf_dir: str):
         emb.select(F.col("vec_id").alias("anchor_id"), F.col("embedding").alias("__qv")),
         "anchor_id",
     )
-    return sym, anch
-
-
-def _triplet_assemble(sym: DataFrame, best: DataFrame) -> DataFrame:
+    best = similarity.exclusion_top1_block(emb, anch)
     return (
         sym.join(best, "anchor_id")
         .select(
@@ -9027,41 +8884,6 @@ def _triplet_assemble(sym: DataFrame, best: DataFrame) -> DataFrame:
         )
         .orderBy("anchor_id", "positive_id")
     )
-
-
-def q_contrastive_triplets_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Catalyst-HOF twin of the registered block-kernel path — the
-    no-Python-worker fallback and the contract pin for the kernel
-    (same shape as `q_hard_negatives_hof` vs its block kernel)."""
-    sym, anch = _triplet_positives(spark, sf_dir)
-    emb = _read(spark, sf_dir, "embeddings")
-    scored = (
-        emb.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv"))
-        .crossJoin(F.broadcast(anch))
-        .filter(F.col("neighbor_id") != F.col("anchor_id"))
-        .filter(~F.array_contains("__ex", F.col("neighbor_id")))
-        .select(
-            "anchor_id",
-            "neighbor_id",
-            F.round(similarity.cosine(F.col("__qv"), F.col("__cv")), 6).alias("sim"),
-        )
-        # align the dirty-data policy with the registered kernel: a
-        # NULL/NaN similarity (NULL or NaN-component vector) can never
-        # win — without this, NaN sorts greatest in max(struct) and a
-        # single poisoned vector becomes EVERY anchor's negative,
-        # diverging from the kernel's drop-at-boundary policy
-        .filter(F.col("sim").isNotNull() & ~F.isnan("sim"))
-    )
-    best = scored.groupBy("anchor_id").agg(
-        F.max(
-            F.struct(
-                F.col("sim").alias("sim"),
-                (-F.col("neighbor_id")).alias("__nn"),
-                F.col("neighbor_id").alias("neighbor_id"),
-            )
-        ).alias("b")
-    ).select("anchor_id", F.col("b.neighbor_id").alias("neighbor_id"), F.col("b.sim").alias("sim"))
-    return _triplet_assemble(sym, best)
 
 
 def sql_contrastive_triplets() -> str:

@@ -1,7 +1,7 @@
 """Product quantization (operators/pq.py): codebook training, encode,
 and the two ADC faces. The local gate checks Spark-vs-DuckDB oracle
 parity (green at sf0.001/0.01/0.1); these tests pin the MEANING —
-block-kernel ≡ HOF identity, recall floor vs the exact baseline,
+kernel ≡ DuckDB twin identity, recall floor vs the exact baseline,
 determinism, and the dirty-data boundary policy."""
 
 from __future__ import annotations
@@ -47,18 +47,20 @@ def test_encode_every_vector_gets_full_code_word(emb):
             assert (m, cid) in valid
 
 
-def test_block_kernel_identical_to_hof_twin(emb):
-    """The registered scale path (ADC LUT kernel) and the oracle-parity
-    HOF face (reconstructed-vector cosine) must agree row-for-row on
-    clean vectors — same contract as hard_negative_top1_block vs its
-    HOF twin. ADC sums per-subspace partials where the HOF dots the
+def test_block_kernel_identical_to_hof_twin(emb, duck):
+    """The fused encode+ADC kernel and its DuckDB twin
+    (``sql_pq_ann_topk``: reconstructed-vector cosine) agree row for
+    row at a geometry other than the registered one (4 subspaces x 8
+    codes). ADC sums per-subspace partials where the twin dots the
     concatenation; algebraically equal, and 6-dp rounding absorbs the
     float-order ulps."""
-    queries = emb.filter(F.col("vec_id") < 8)
-    hof = pq.pq_adc_topk(emb, queries, k=5, n_subspaces=4, n_codes=8, dim=64)
+    from rustic_witcher_spark.queries import sql_pq_ann_topk
+
+    queries = emb.filter(F.col("vec_id") < 5)
     block = pq.pq_topk(emb, queries, k=5, n_subspaces=4, n_codes=8, dim=64)
     cols = ["query_id", "neighbor_id", "rank", "sim"]
-    assert _rows(hof.select(*cols)) == _rows(block.select(*cols))
+    twin = duck.execute(sql_pq_ann_topk(n_subspaces=4, n_codes=8, dim=64, k=5)).fetchall()
+    assert _rows(block.select(*cols)) == sorted(twin) and len(twin) == 25
 
 
 def test_recall_floor_on_noise_fixture(emb):
@@ -208,9 +210,10 @@ def test_trainers_drop_non_finite_vectors(spark):
 
 
 def test_hof_face_drops_degenerate_queries(spark):
-    """pq_adc_topk ranks through the shared top-k contract: a zero-vector
-    or NaN-component query has no defined cosine and gets no rows, as
-    from the block face — instead of NULL or NaN sims ranked first."""
+    """The stored-codes ADC face ranks through the shared top-k
+    contract: a zero-vector or NaN-component query has no defined
+    cosine and gets no rows — instead of NULL or NaN sims ranked
+    first."""
     schema = "vec_id long, embedding array<double>"
     corpus = spark.createDataFrame(_gauss_rows(), schema)
     queries = corpus.filter("vec_id = 0").unionByName(
@@ -218,11 +221,9 @@ def test_hof_face_drops_degenerate_queries(spark):
     )
     cb = pq.pq_codebooks(corpus, 4, 4, 16)
     codes = pq.pq_encode(corpus, cb, 4, 16)
-    hof = pq.pq_adc_topk(corpus, queries, k=3, n_subspaces=4, n_codes=4, dim=16)
     block = pq.pq_adc_topk_block(codes, cb, queries, k=3, n_subspaces=4, dim=16)
-    for face in (hof, block):
-        assert {r["query_id"] for r in face.collect()} == {0}
-        assert face.count() == 3
+    assert {r["query_id"] for r in block.collect()} == {0}
+    assert block.count() == 3
 
 
 def test_indivisible_dim_raises():

@@ -546,17 +546,6 @@ def _plan(spark, fn):
     return fn(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
 
 
-def test_hard_negatives_plan_broadcast_and_partial_max(spark):
-    from rustic_witcher_spark.queries import q_hard_negatives_hof
-
-    plan = _plan(spark, q_hard_negatives_hof)
-    # query set broadcast against one corpus scan; top-1 via a map-side
-    # partial max(struct) — never a per-query row_number window shuffle
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "partial_max" in plan
-    assert "Window" not in plan
-
-
 def test_hard_negatives_registered_plan_is_block_kernel(spark):
     """r8: the REGISTERED entry runs the vectorized mapInPandas kernel
     (one candidate row per query per batch, map-side partial max) —
@@ -605,17 +594,14 @@ def test_source_kl_plan_single_explode_subtree(spark):
     assert plan.count("Generate explode") <= 1
 
 
-def test_hard_negative_block_kernel_matches_hof_entry(spark):
-    """The numpy mapInPandas kernel (the REGISTERED path since r8)
-    produces the SAME output as the Catalyst-HOF twin on real data —
-    the swap is contract-identical."""
-    from rustic_witcher_spark.operators.similarity import hard_negative_top1_block
-    from rustic_witcher_spark.queries import HARDNEG_QUERIES, q_hard_negatives_hof
+def test_hard_negative_block_kernel_matches_hof_entry(spark, duck, sf_dir):
+    """The registered numpy mapInPandas kernel equals its DuckDB twin
+    (``SQL_HARD_NEGATIVES``) row for row on real data: same ids,
+    labels and 6-dp sims, in query_id order."""
+    from rustic_witcher_spark.queries import HARDNEG_QUERIES, SQL_HARD_NEGATIVES, q_hard_negatives
 
-    hof = [tuple(r) for r in q_hard_negatives_hof(spark, SF_DIR).collect()]
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    blk = [tuple(r) for r in hard_negative_top1_block(emb, HARDNEG_QUERIES).collect()]
-    assert blk == hof
+    blk = [tuple(r) for r in q_hard_negatives(spark, sf_dir).collect()]
+    assert blk == duck.execute(SQL_HARD_NEGATIVES).fetchall()
     assert len(blk) == HARDNEG_QUERIES
 
 
@@ -635,36 +621,15 @@ def test_hard_negative_block_kernel_skips_same_label(spark):
     assert out2[0]["neighbor_id"] == 5  # tie-break to smallest id
 
 
-def test_brute_force_topk_block_matches_hof(spark):
-    """The vectorized exact-kNN kernel is contract-identical to the
-    HOF brute_force_topk on real data (same ids, ranks, and rounded
-    sims)."""
-    from pyspark.sql import functions as F
-
-    from rustic_witcher_spark.operators.similarity import brute_force_topk, brute_force_topk_block
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 5)
-    hof = sorted(tuple(r) for r in brute_force_topk(emb, queries, k=5).select("query_id", "neighbor_id", "rank", "sim").collect())
-    blk = sorted(tuple(r) for r in brute_force_topk_block(emb, queries, k=5).select("query_id", "neighbor_id", "rank", "sim").collect())
-    assert blk == hof and len(blk) == 25
-
-
 def test_block_kernels_drop_degenerate_vectors(spark):
     """Dirty-data policy pin for every block face: NULL, zero-norm and
     NaN-component vectors are dropped at the kernel boundary — they
     never query, and in the raw-vector kernels they never win; an exact
-    tie goes to the smaller neighbor id. (The HOF twins instead
-    propagate NULL sims / raise on zero under ANSI; that divergence is
-    documented, this pins the kernel side.)"""
+    tie goes to the smaller neighbor id."""
     from pyspark.sql import functions as F
 
     from rustic_witcher_spark.operators import pq
-    from rustic_witcher_spark.operators.similarity import (
-        brute_force_topk_block,
-        exclusion_top1_block,
-        hard_negative_top1_block,
-    )
+    from rustic_witcher_spark.operators.similarity import exclusion_top1_block, hard_negative_top1_block
 
     base = spark.createDataFrame(
         [
@@ -691,7 +656,6 @@ def test_block_kernels_drop_degenerate_vectors(spark):
         codes = pq.pq_encode(corpus, cb, n_subspaces=2, dim=2)
         frames = {
             "hard_negative_top1_block": hard_negative_top1_block(corpus, 4),
-            "brute_force_topk_block": brute_force_topk_block(corpus, queries, k=5),
             "exclusion_top1_block": exclusion_top1_block(corpus, anchors).withColumnRenamed("anchor_id", "query_id"),
             "pq_adc_topk_block": pq.pq_adc_topk_block(codes, cb, queries, k=5, n_subspaces=2, dim=2),
             "pq_encode_adc_topk_block": pq.pq_encode_adc_topk_block(corpus, cb, queries, k=5, n_subspaces=2, dim=2),
@@ -702,7 +666,7 @@ def test_block_kernels_drop_degenerate_vectors(spark):
             for name, df in frames.items()
         }
 
-    raw = ("hard_negative_top1_block", "brute_force_topk_block", "exclusion_top1_block")
+    raw = ("hard_negative_top1_block", "exclusion_top1_block")
     for name, rows in faces(base).items():
         assert {q for q, _, _ in rows} == {0}, name  # degenerate queries emit nothing
         if name in raw:

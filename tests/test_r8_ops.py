@@ -896,32 +896,27 @@ def test_embedding_outliers_empty_and_all_null_corpus(spark, tmp_path):
     assert q_embedding_outliers(spark, str(d2)).count() == 0
 
 
-def test_contrastive_triplets_block_kernel_identical_to_hof(spark, tmp_path):
-    """The registered exclusion-aware block kernel must be
-    output-identical to the Catalyst-HOF fallback on clean vectors —
-    the same contract pin as hard_negatives vs its block twin."""
-    from rustic_witcher_spark.queries import q_contrastive_triplets, q_contrastive_triplets_hof
+def test_contrastive_triplets_block_kernel_identical_to_hof(spark, duck, sf_dir):
+    """The registered exclusion-aware block kernel equals its DuckDB
+    twin (``sql_contrastive_triplets``) row for row on real data: same
+    triplets, jaccards and 6-dp negative sims."""
+    from rustic_witcher_spark.queries import q_contrastive_triplets, sql_contrastive_triplets
 
-    a = sorted(map(tuple, q_contrastive_triplets(spark, SF_DIR).collect()))
-    b = sorted(map(tuple, q_contrastive_triplets_hof(spark, SF_DIR).collect()))
-    assert a == b and len(a) > 0
+    a = sorted(map(tuple, q_contrastive_triplets(spark, sf_dir).collect()))
+    assert a == sorted(duck.execute(sql_contrastive_triplets()).fetchall()) and len(a) > 0
 
 
 def test_contrastive_triplets_nan_vector_cannot_win_any_face(spark, tmp_path):
-    """Dirty-data alignment across all three faces: a NaN-component
-    vector must never be selected as a negative. Before the fix the
-    HOF max(struct) and the DuckDB oracle both ranked NaN greatest
-    and emitted the poisoned vector as EVERY anchor's negative, while
-    the registered kernel dropped it — three-way divergence."""
+    """Dirty-data alignment of the kernel and its DuckDB twin: a
+    NaN-component vector must never be selected as a negative. Before
+    the fix the oracle ranked NaN greatest and emitted the poisoned
+    vector as EVERY anchor's negative, while the registered kernel
+    dropped it."""
     import math
 
     import duckdb
 
-    from rustic_witcher_spark.queries import (
-        q_contrastive_triplets,
-        q_contrastive_triplets_hof,
-        sql_contrastive_triplets,
-    )
+    from rustic_witcher_spark.queries import q_contrastive_triplets, sql_contrastive_triplets
 
     d = tmp_path / "nanfix"
     texts = [
@@ -945,8 +940,6 @@ def test_contrastive_triplets_nan_vector_cannot_win_any_face(spark, tmp_path):
     ).write.mode("overwrite").parquet(str(d / "embeddings.parquet"))
 
     kernel = sorted(map(tuple, q_contrastive_triplets(spark, str(d)).collect()))
-    hof = sorted(map(tuple, q_contrastive_triplets_hof(spark, str(d)).collect()))
-    assert kernel == hof
     assert kernel and all(r[2] == 2 for r in kernel), kernel  # negative is always vec 2
 
     con = duckdb.connect()
@@ -959,15 +952,15 @@ def test_contrastive_triplets_nan_vector_cannot_win_any_face(spark, tmp_path):
 
 
 def test_hard_negatives_nan_vector_cannot_win_any_face(spark, tmp_path):
-    """Same dirty-vector alignment for hard_negatives: kernel, HOF
-    fallback, and DuckDB oracle must all ignore a NaN-component
-    candidate instead of letting NaN-sorts-greatest crown it."""
+    """Same dirty-vector alignment for hard_negatives: the kernel and
+    its DuckDB twin must both ignore a NaN-component candidate instead
+    of letting NaN-sorts-greatest crown it."""
     import math
 
     import duckdb
 
     from rustic_witcher_spark.operators.similarity import hard_negative_top1_block
-    from rustic_witcher_spark.queries import SQL_HARD_NEGATIVES, q_hard_negatives_hof
+    from rustic_witcher_spark.queries import HARDNEG_QUERIES, SQL_HARD_NEGATIVES
 
     d = tmp_path / "hnfix"
     vecs = [
@@ -980,15 +973,8 @@ def test_hard_negatives_nan_vector_cannot_win_any_face(spark, tmp_path):
         vecs, "vec_id long, embedding array<double>, label long"
     ).write.mode("overwrite").parquet(str(d / "embeddings.parquet"))
 
-    class _Q:
-        pass
-
-    import rustic_witcher_spark.queries as Qm
-
     emb = spark.read.parquet(str(d / "embeddings.parquet"))
-    kernel = sorted(map(tuple, hard_negative_top1_block(emb, Qm.HARDNEG_QUERIES).collect()))
-    hof = sorted(map(tuple, q_hard_negatives_hof(spark, str(d)).collect()))
-    assert kernel == hof, (kernel, hof)
+    kernel = sorted(map(tuple, hard_negative_top1_block(emb, HARDNEG_QUERIES).collect()))
     by_q = {r[0]: r[2] for r in kernel}
     assert by_q[0] == 1  # NOT the NaN row
 

@@ -17,28 +17,22 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 # ---------------------------------------------------------------------------
-# feature_hash_embed — kernel face ≡ HOF face
+# feature_hash_embed — kernel ≡ DuckDB twin
 # ---------------------------------------------------------------------------
 
 
-def test_feature_hash_kernel_identical_to_hof_face(spark):
-    """The registered bincount kernel and the pure-Catalyst HOF face
-    must be row-for-row identical on the real table (the
-    similarity.hard_negative_top1_block discipline): same single-md5
-    (bucket, sign) derivation, same half-away 6-dp rounding, same
-    global doc_id order."""
-    from rustic_witcher_spark.queries import q_feature_hash_embed, q_feature_hash_embed_hof
+def test_feature_hash_kernel_identical_to_hof_face(spark, duck, sf_dir):
+    """The registered bincount kernel and its DuckDB twin
+    (``sql_feature_hash_embed``) are row-for-row identical on the real
+    table: same single-md5 (bucket, sign) derivation, same half-away
+    6-dp rounding, same global doc_id order. ``fh`` is the canonical
+    6-dp comma-joined STRING (the driver-canonicalizer convention —
+    never array<double>)."""
+    from rustic_witcher_spark.queries import q_feature_hash_embed, sql_feature_hash_embed
 
-    a = q_feature_hash_embed(spark, SF_DIR).collect()
-    b = q_feature_hash_embed_hof(spark, SF_DIR).collect()
-    assert len(a) == len(b) > 0
-    assert [r["doc_id"] for r in a] == sorted(r["doc_id"] for r in a)
-    for ra, rb in zip(a, b):
-        assert ra["doc_id"] == rb["doc_id"]
-        # both faces emit the canonical 6-dp comma-joined STRING (the
-        # r10 driver-canonicalizer convention — never array<double>)
-        assert isinstance(ra["fh"], str)
-        assert ra["fh"] == rb["fh"]
+    a = [tuple(r) for r in q_feature_hash_embed(spark, sf_dir).collect()]
+    assert len(a) > 0 and all(isinstance(fh, str) for _, fh in a)
+    assert a == duck.execute(sql_feature_hash_embed()).fetchall()
 
 
 def test_feature_hash_zero_norm_doc_emits_zero_vector(spark):
