@@ -25,15 +25,28 @@ ROW_COLUMN = "__cdc_row"
 META_COLUMNS = (OP_COLUMN, TS_COLUMN, FILE_COLUMN, ROW_COLUMN)
 
 
-def read_cdc_files(spark: SparkSession, files: tuple[str, ...]) -> DataFrame:
-    """Read DMS CDC files with each row's file name and row index
-    (``FILE_COLUMN``/``ROW_COLUMN``) — the tie-break ``latest_by_pk``
-    needs for changes that share a commit timestamp."""
-    return read_table_files(spark, files).select(
+def _with_read_position(df: DataFrame) -> DataFrame:
+    return df.select(
         "*",
         F.col("_metadata.file_name").alias(FILE_COLUMN),
         F.col("_metadata.row_index").alias(ROW_COLUMN),
     )
+
+
+def read_cdc_files(spark: SparkSession, files: tuple[str, ...]) -> DataFrame:
+    """Read DMS CDC files with each row's file name and row index
+    (``FILE_COLUMN``/``ROW_COLUMN``) — the tie-break ``latest_by_pk``
+    needs for changes that share a commit timestamp."""
+    return _with_read_position(read_table_files(spark, files))
+
+
+def read_cdc_stream(spark: SparkSession, path: str, schema) -> DataFrame:
+    """Stream the DMS CDC files under ``path`` with the same file name
+    and row index columns as ``read_cdc_files``. They are selected on
+    the stream because the ``foreachBatch`` frame of a file stream has
+    no ``_metadata``: without them, same-timestamp changes inside one
+    micro-batch would keep an arbitrary row."""
+    return _with_read_position(spark.readStream.schema(schema).parquet(path))
 
 
 def latest_by_pk(df: DataFrame, pk: list[str]) -> DataFrame:

@@ -7,7 +7,7 @@ with the SAME semantics as the batch operator (``operators.cdc
 parquet snapshot replaced through `replay_meta`'s crash-safe directory
 swap: at every instant one complete snapshot exists, and the next merge
 recovers a swap a crash interrupted. A transactional table format
-(Delta/Iceberg MERGE) or the JDBC upsert sink plugs in as its own
+(Delta/Iceberg MERGE) or a Postgres upsert plugs in as its own
 ``writeStream.foreachBatch`` callable.
 """
 
@@ -44,7 +44,9 @@ def streaming_cdc_apply(
     checkpoint: str,
 ):
     """Start the continuous CDC-apply query over the parquet snapshot
-    merger."""
+    merger. Read ``cdc_stream`` with ``operators.cdc.read_cdc_stream``:
+    its file name and row index columns let the merge keep the
+    last-written of same-timestamp changes within a micro-batch."""
     return (
         cdc_stream.writeStream.foreachBatch(parquet_snapshot_merger(spark, snapshot_path, pk))
         .option("checkpointLocation", checkpoint)
