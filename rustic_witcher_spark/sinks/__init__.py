@@ -1,3 +1,3 @@
-from rustic_witcher_spark.sinks import jdbc, parquet, s3copy
+from rustic_witcher_spark.sinks import parquet, s3copy
 
-__all__ = ["jdbc", "parquet", "s3copy"]
+__all__ = ["parquet", "s3copy"]

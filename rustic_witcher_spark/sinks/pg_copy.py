@@ -1,6 +1,7 @@
 """Distributed Postgres COPY bulk load — the scale path for S8.
 
-``df.write.jdbc`` (sinks/jdbc.py) issues batched INSERTs — fine for
+A ``df.write.jdbc`` bulk writer (one choice of ``pg_sync``'s
+``write_dataframe`` hook) issues batched INSERTs — fine for
 modest CDC batches, but Postgres ingests bulk data ~an order of
 magnitude faster through the COPY protocol, and the reference's own
 live flow loads with COPY (see tests/test_pg_live.py's psql hook).

@@ -33,7 +33,6 @@ from rustic_witcher_spark.config.model import AnonymizationConfig
 from rustic_witcher_spark.functions.wordlists import DEFAULT_SEED
 from rustic_witcher_spark.operators.cdc import META_COLUMNS, OP_COLUMN, latest_by_pk, read_cdc_files
 from rustic_witcher_spark.plans.pipeline import anonymize_table
-from rustic_witcher_spark.sinks.jdbc import upsert_sql
 from rustic_witcher_spark.sinks.postgres_ops import (
     OWNED_SEQUENCES_QUERY,
     create_extensions_sql,
@@ -85,6 +84,21 @@ def cdc_delete_sql(table: str, staging: str, pk: list[str]) -> str:
     case-preserved column a JDBC writer creates."""
     pkl = ", ".join(pk)
     return f'DELETE FROM {table} WHERE ({pkl}) IN (SELECT {pkl} FROM {staging} WHERE "{OP_COLUMN}" = \'D\')'
+
+
+def upsert_sql(table: str, columns: list[str], pk: list[str], staging: str | None = None) -> str:
+    """Build the Postgres ``INSERT ... ON CONFLICT`` statement used to
+    merge a staged batch into the target table (composite PKs joined as
+    in the reference's comma-joined PK list, ref: cdc_operator.rs:310-328).
+    """
+    src = staging or f"{table}__staging"
+    col_list = ", ".join(columns)
+    conflict = ", ".join(pk)
+    updates = ", ".join(f"{c} = EXCLUDED.{c}" for c in columns if c not in pk)
+    return (
+        f"INSERT INTO {table} ({col_list}) SELECT {col_list} FROM {src} "
+        f"ON CONFLICT ({conflict}) DO UPDATE SET {updates}"
+    )
 
 
 def cdc_upsert_sql(table: str, columns: list[str], pk: list[str], staging: str) -> str:

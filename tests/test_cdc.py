@@ -76,7 +76,7 @@ def test_apply_cdc_without_base_keeps_surviving_cdc_rows(spark):
 
 
 def test_upsert_sql_builder():
-    from rustic_witcher_spark.sinks.jdbc import upsert_sql
+    from rustic_witcher_spark.sinks.pg_sync import upsert_sql
 
     sql = upsert_sql("public.users", ["id", "name", "email"], ["id"])
     assert "ON CONFLICT (id)" in sql
