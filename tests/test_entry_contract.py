@@ -42,6 +42,22 @@ def test_queries_complete_and_callable():
         assert callable(fn), f"{name} is not callable"
 
 
+def test_every_q_builder_is_a_registry_entry():
+    """Every module-level ``q_*`` builder in queries.py is named in
+    ``build_registry``, so an unregistered second face of an operator
+    (one only tests call) cannot come back unnoticed. Spark-free: an
+    AST scan of the source, nothing is imported."""
+    import ast
+
+    tree = ast.parse((Path(__file__).resolve().parent.parent / "rustic_witcher_spark" / "queries.py").read_text())
+    defs = [n for n in tree.body if isinstance(n, ast.FunctionDef)]
+    (registry,) = [n for n in defs if n.name == "build_registry"]
+    named = {n.id for n in ast.walk(registry) if isinstance(n, ast.Name)}
+    builders = [n.name for n in defs if n.name.startswith("q_")]
+    assert len(builders) >= 63
+    assert [b for b in builders if b not in named] == []
+
+
 def test_oracle_keys_subset_of_queries():
     e = _entry()
     qs, oracles = e.queries(), e.oracle_sql()
