@@ -126,11 +126,14 @@ def tie_src(tmp_path):
 
 
 def test_same_timestamp_ties_keep_the_last_written_row(spark, tie_src, tmp_path):
+    import shutil
     from datetime import date
 
     from rustic_witcher_spark.config.loader import load_config_str
+    from rustic_witcher_spark.operators.cdc import read_cdc_stream
     from rustic_witcher_spark.runner import snapshot
     from rustic_witcher_spark.sinks.pg_sync import PgSyncHooks, sync_table
+    from rustic_witcher_spark.streaming.cdc_stream import streaming_cdc_apply
 
     cfg = load_config_str(TIE_CFG)
     report = snapshot(
@@ -155,31 +158,21 @@ def test_same_timestamp_ties_keep_the_last_written_row(spark, tie_src, tmp_path)
     )
     assert staged == {"public.accounts__staging": TIE_WANT}
 
-
-def test_streaming_cdc_apply_keeps_the_last_written_row(spark, tie_src, tmp_path):
-    """The three tie shapes in ONE micro-batch of the continuous CDC
-    apply: the stream carries each row's file name and row index, so
-    the merge keeps the last-written row, as the batch runner does."""
-    import shutil
-
-    from rustic_witcher_spark.operators.cdc import read_cdc_stream
-    from rustic_witcher_spark.streaming.cdc_stream import streaming_cdc_apply
-
-    src = tie_src / "accounts"
-    cdc_dir = tmp_path / "cdc"
+    # the continuous CDC apply, all CDC files in ONE micro-batch: the
+    # stream carries each row's file name and row index
+    cdc_dir = tmp_path / "cdc_stream"
     cdc_dir.mkdir()
-    for f in src.glob("2024*.parquet"):
+    for f in (tie_src / "accounts").glob("2024*.parquet"):
         shutil.copy(f, cdc_dir / f.name)
     snap = str(tmp_path / "snapshot")
-    spark.read.parquet(str(src / "LOAD00000001.parquet")).write.parquet(snap)
+    spark.read.parquet(str(tie_src / "accounts" / "LOAD00000001.parquet")).write.parquet(snap)
     schema = "k long, name string, note string, Op string, _dms_ingestion_timestamp long"
-    stream = read_cdc_stream(spark, str(cdc_dir), schema)
-    q = streaming_cdc_apply(spark, stream, snap, ["k"], str(tmp_path / "ck"))
+    q = streaming_cdc_apply(spark, read_cdc_stream(spark, str(cdc_dir), schema), snap, ["k"], str(tmp_path / "ck"))
     try:
         q.processAllAvailable()
         assert len([p for p in q.recentProgress if p["numInputRows"]]) == 1  # one trigger
     finally:
         q.stop()
-    out = spark.read.parquet(snap)
-    assert sorted(out.columns) == ["k", "name", "note"]
-    assert {r["k"]: r["name"] for r in out.collect()} == {k: v[0] for k, v in TIE_WANT.items()}
+    streamed = spark.read.parquet(snap)
+    assert sorted(streamed.columns) == ["k", "name", "note"]
+    assert {r["k"]: r["name"] for r in streamed.collect()} == {k: v[0] for k, v in TIE_WANT.items()}
