@@ -1,7 +1,7 @@
 """Similarity search over embedding columns (north-star extension).
 
-Each operator has exactly one face, the one its registry entry runs,
-and a DuckDB twin pins it:
+Each operator has one implementation, and the DuckDB twins of the
+registry entries that run it pin it row for row. Two kinds:
 
 - Catalyst expressions (zip_with / aggregate folds, double precision,
   deterministic fold order): ``brute_force_topk`` (the exact baseline),
@@ -12,8 +12,9 @@ and a DuckDB twin pins it:
   ``hard_negative_top1_block`` and ``exclusion_top1_block``, plus the
   PQ scorers in pq.py, which share ``_block_topk``.
 
-Every face rounds half away from zero to 6 dp after the float64 math,
-so the twins reproduce the scores exactly.
+Scores round half away from zero to 6 dp after the float64 math, as
+``F.round`` and DuckDB's ``round`` do, so the twins reproduce them
+exactly.
 """
 
 from __future__ import annotations
