@@ -26,7 +26,7 @@ def test_feature_hash_kernel_identical_to_hof_face(spark, duck, sf_dir):
     (``sql_feature_hash_embed``) are row-for-row identical on the real
     table: same single-md5 (bucket, sign) derivation, same half-away
     6-dp rounding, same global doc_id order. ``fh`` is the canonical
-    6-dp comma-joined STRING (the driver-canonicalizer convention —
+    6-dp comma-joined STRING (the registry's array-output convention —
     never array<double>)."""
     from rustic_witcher_spark.queries import q_feature_hash_embed, sql_feature_hash_embed
 
